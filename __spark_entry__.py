@@ -37,89 +37,79 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 SWEEP_CAP = 50
 
 _SWEEP_PRIORITY = [
-    # --- FRESHNESS SCHEDULE, r16 edition (VERDICT r15 #7) ---
-    # r16 composition, auditable sum: 0 new + 18 changed + 16 (the
-    # r9-vintage cohort remainder deferred from r15; its 17th key,
-    # udtf_cogrouped_map, is in the changed tranche) + 16 (oldest
-    # backfill: the r11-vintage cohort in sorted order, all
+    # --- FRESHNESS SCHEDULE, r17 edition ---
+    # r17 composition, auditable sum: 0 new + 27 changed + 23
+    # (oldest backfill: the r11-vintage cohort in sorted order, all
     # hash-green in CORRECTNESS_r11) = 50 = SWEEP_CAP. Cohorts are
-    # COMPUTED from the CORRECTNESS_r01..r15 union (latest green row
-    # per key), not hand-copied; after this rotation no key's latest
-    # driver row predates r9 except the 23 r11-vintage keys that did
-    # not fit (they lead the r17 backfill). The changed-key rule is
-    # mechanized: scripts/fingerprints.py records key -> md5(oracle +
-    # engine source) per round, and tests/test_correctness.py fails
-    # if any fingerprint changed without the key appearing here.
+    # COMPUTED from the CORRECTNESS_r01..r16 union (latest green row
+    # per key), not hand-copied: 29 keys' latest green row is r11,
+    # 3 of them are in the changed tranche, and the 3 that did not
+    # fit (timeseries_gapfill, udtf_grouped_map, window_row_number)
+    # lead the r18 backfill. The changed-key rule is mechanized: scripts/fingerprints.py records key ->
+    # md5(oracle + engine source) per round, and
+    # tests/test_correctness.py fails if any fingerprint changed
+    # without the key appearing here.
     #
-    # (1) changed this round (OPTIMIZATION_r16.md): the streaming
-    # trigger-floor respellings (replay file splits 4->2 / 6->3,
-    # bounded python source drains in 2 offset batches), the
-    # sim_ann_recall IVF cell-assignment artifact (and the second-
-    # session LSH-leg project-before-dedup), the udtf_cogrouped_map
-    # input projection, the embed_neardup per-vector norm precompute,
-    # the no-data-batch opt-out for the three emit-on-arrival drains,
-    # the pagerank nodes-from-trans derivation, the two standalone
-    # LSH top-k project-before-dedup respellings, and the
-    # contrastive-pairs anchors-first negative lookup:
-    "stream_cep_true",
-    "stream_cep_gapped_true",
-    "stream_cep_ooo",
-    "stream_cep_gapped_ooo",
-    "stream_stateful_ema_batches",
-    "stream_upsert_foreachbatch",
-    "stream_python_source_true",
-    "stream_python_sink_true",
-    "sim_ann_recall",
-    "udtf_cogrouped_map",
-    "embed_neardup_cosine",
-    "stream_stream_join_true",
-    "stream_dedup_true",
-    "stream_dedup_within_watermark_true",
-    "graph_pagerank",
-    "sim_ann_lsh_topk",
-    "sim_ann_multiprobe_topk",
-    "sample_contrastive_pairs",
-    # (2) the r9-vintage cohort remainder, deferred from r15 (VERDICT
-    # r15 #7 — after these, no registered key's latest driver row is
-    # older than r11):
-    "sim_mmr_diversify",
-    "str_hash",
-    "str_regex",
-    "str_split_explode",
-    "table_constraint_audit",
-    "text_bpe_encode",
-    "text_bpe_merges",
-    "text_ccnet_perplexity_bucket",
-    "text_quality_classifier",
-    "text_repetition_ngram",
-    "text_tfidf_topk",
-    "udf_scalar",
-    "window_lag_delta",
-    "window_percent_rank",
-    "window_running_sum",
-    "window_topk_per_group",
-    # (3) backfill: the r11-vintage cohort (oldest remaining rows,
-    # all hash-green in r11), first 16 in sorted order — the
-    # remaining 30 (sample_contrastive_pairs moved up into the
-    # changed tranche; limit_topk / pipeline_curation_e2e /
-    # quality_dedup_rates displaced by the three second-session
-    # changed keys) lead the r17 backfill:
-    "agg_minmax_stats",
-    "agg_mode_deterministic",
-    "agg_time_decay",
-    "date_parts",
+    # (1) changed this round: every fixture-artifact consumer (the
+    # one artifact helper in functions/cache.py replaced the
+    # hand-rolled caches) — the MinHash dedup family and the graph,
+    # sampling, split and curation keys built on its pair table, the
+    # media decodes plus resize/ahash, the ANN/PQ family, BPE, the two
+    # month-partitioned pruning keys and join_bucketed — plus the two
+    # other media keys that share the by-value multimodal shipping
+    # helper (multimodal_probe_mp4, scan_binaryfile_media):
     "dedup_cluster",
     "dedup_containment",
     "dedup_minhash_est",
-    "dedup_near_minhash",
     "dedup_ngram_jaccard",
     "dedup_survivors",
-    "funnel_conversion",
-    "join_asof",
-    "join_asof_binned",
-    "join_full_outer",
-    "join_multiway_star",
-    "join_theta_range",
+    "graph_kcore",
+    "graph_triangle_count",
+    "join_bucketed",
+    "join_partition_prune_dynamic",
+    "multimodal_decode_gif",
+    "multimodal_decode_jpeg",
+    "multimodal_decode_mjpeg",
+    "multimodal_decode_png",
+    "multimodal_image_ahash",
+    "multimodal_image_resize",
+    "multimodal_probe_mp4",
+    "pipeline_curation_e2e",
+    "sample_contrastive_pairs",
+    "scan_binaryfile_media",
+    "scan_partition_prune",
+    "sim_ann_ivf_kmeans",
+    "sim_ann_ivfpq",
+    "sim_ann_pq_adc",
+    "sim_ann_recall",
+    "split_leakage_safe",
+    "text_bpe_encode",
+    "text_bpe_merges",
+    # (2) backfill: the r11-vintage cohort (oldest remaining rows,
+    # all hash-green in r11), sorted, minus the three changed keys:
+    "limit_topk",
+    "quality_dedup_rates",
+    "sample_stratified_rebalance",
+    "scan_csv_roundtrip",
+    "scan_jsonl_roundtrip",
+    "setop_dedup",
+    "setop_except",
+    "setop_intersect",
+    "setop_union_all",
+    "sort_multi_key",
+    "str_fuzzy_levenshtein",
+    "stream_dedup",
+    "stream_session",
+    "stream_session_true",
+    "stream_sliding",
+    "stream_sliding_true",
+    "stream_static_join_true",
+    "stream_tumbling",
+    "text_collocations_pmi",
+    "text_decontaminate",
+    "text_langid_ngram",
+    "text_quality_c4",
+    "text_source_drift_jsd",
 ]
 
 

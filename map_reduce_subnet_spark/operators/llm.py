@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_subnet_spark.functions import similarity as sim
 from map_reduce_subnet_spark.functions import text as tx
+from map_reduce_subnet_spark.functions.cache import artifact, fixture_key
 from map_reduce_subnet_spark.functions.checkpoint import stable_checkpoint
 from map_reduce_subnet_spark.functions.parallel import scan_parallel
 from map_reduce_subnet_spark.functions.stable import (
@@ -133,19 +134,10 @@ def _shingle_keep_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     family's shared intermediate: dedup_ngram_jaccard and
     dedup_containment consume the IDENTICAL frame and differ only
     downstream of it, and a real pipeline writes its shingle index to
-    storage once per corpus. Deterministic given the fixture (pure
-    string algebra + a count threshold), so a hit can only serve the
-    identical frame; the tag carries the cap so a changed threshold
-    can never read a stale index."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
+    storage once per corpus. The name carries the cap so a changed
+    threshold can never read a stale index."""
 
-    cache = fixture_cache_dir(
-        sf_dir, "documents", f"shkeep_df{SHINGLE_DF_CAP}"
-    )
-    if not is_cached(cache):
+    def build():
         d = load_table(spark, sf_dir, "documents")
         sh = d.select(
             "doc_id",
@@ -154,14 +146,16 @@ def _shingle_keep_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         wdf = Window.partitionBy("shingle")
-        (
+        return (
             sh.withColumn("_df", F.count("*").over(wdf))
             .where(F.col("_df") <= SHINGLE_DF_CAP)
             .drop("_df")
-            .write.mode("overwrite")
-            .parquet(cache)
         )
-    return spark.read.schema("doc_id long, shingle string").parquet(cache)
+
+    return artifact(
+        spark, sf_dir, f"shkeep_df{SHINGLE_DF_CAP}", build,
+        schema="doc_id long, shingle string",
+    )
 
 
 @query(
@@ -1844,12 +1838,11 @@ def ann_recall_leg_frames(
     """The eight per-method recall-row frames of sim_ann_recall, in
     its union order. Shared artifacts (the exact baseline, both
     corpus band tables, the per-probe ADC sum table) are fixture-
-    cached HERE (shared_artifact — built on first touch, served from
-    parquet after), so collecting one leg afterwards pays only that
-    leg's incremental cost — bench.py times each leg from this dict
-    for the per-leg breakdown in BENCH_DETAIL (VERDICT r14 #4: an
-    8-leg row must not mask a per-leg regression inside min-of-2
-    noise).
+    cached HERE (functions/cache.py::artifact — built on first touch,
+    served from parquet after), so collecting one leg afterwards pays
+    only that leg's incremental cost — bench.py times each leg from
+    this dict for the per-leg breakdown in BENCH_DETAIL, so an 8-leg
+    row cannot mask a per-leg regression inside min-of-2 noise.
 
     Recall@10 of the EIGHT approximate methods (pinned-IVF cells,
     Lloyd-trained IVF cells, sign-LSH bands, multi-probe LSH,
@@ -1878,35 +1871,10 @@ def ann_recall_leg_frames(
     recall measurement runs on a sampled probe set (20 here) at
     tuning time, not per query; candidate generation stays bucketed.
     """
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-
     e = scan_parallel(  # r15 opt: floor the 1-row-group scan at core count
         load_table(spark, sf_dir, "embeddings"), key="vec_id"
     )
     k, n_probes = ANN_RECALL_K, ANN_RECALL_N_PROBES
-
-    def shared_artifact(tag: str, build):
-        """Materialize-once fixture cache for a shared harness
-        artifact (r15, VERDICT r14 #2-of-What's-wrong: the 8-leg row
-        was the bench's heaviest and still growing — ~7 s of it was
-        REBUILDING the exact baseline, both corpus band tables and
-        the ADC sum table on every invocation). Each artifact is a
-        pure deterministic function of the fixture + module constants
-        (seeded hyperplanes, pinned probes/centroids, decimal-exact
-        sums), exactly the lloyd_centroids/pq_codes_cached
-        persisted-index discipline: a tuning-time deployment builds
-        the exact top-k and the sketch tables once and measures every
-        candidate generator against them from storage. Parquet
-        round-trips floats/doubles bit-exactly, so cached and rebuilt
-        runs are indistinguishable (the golden test would catch a
-        drifting cache)."""
-        path = fixture_cache_dir(sf_dir, "embeddings", tag)
-        if not is_cached(path):
-            build().write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
 
     probes = F.broadcast(
         e.where(F.col("vec_id") < n_probes).select(
@@ -1932,8 +1900,8 @@ def ann_recall_leg_frames(
     # recall-harness candidate volumes the 16 extra join stages (2 per
     # leg × 8 legs) cost more than the payload bytes they save. The
     # kept optimization is the cell-assignment cache below.
-    exact = shared_artifact(
-        f"annrecall_exact_{n_probes}x{k}",
+    exact = artifact(
+        spark, sf_dir, f"annrecall_exact_{n_probes}x{k}",
         lambda: topk(
             e.crossJoin(probes)
             .where(F.col("vec_id") != F.col("p_id"))
@@ -1969,7 +1937,9 @@ def ann_recall_leg_frames(
             "cent_id"
         ].alias("cent_id"),
     )
-    cells_seed = shared_artifact("annrecall_cellseed", lambda: assigned)
+    cells_seed = artifact(
+        spark, sf_dir, "annrecall_cellseed", lambda: assigned
+    )
     probe_cells = F.broadcast(
         probes.crossJoin(cents_arr).select(
             "p_id",
@@ -2001,7 +1971,9 @@ def ann_recall_leg_frames(
             "cent_id"
         ].alias("cent_id"),
     )
-    cells_t = shared_artifact("annrecall_celllloyd", lambda: assigned_t)
+    cells_t = artifact(
+        spark, sf_dir, "annrecall_celllloyd", lambda: assigned_t
+    )
     probe_cells_t = F.broadcast(
         probes.crossJoin(cents_trained).select(
             "p_id",
@@ -2056,8 +2028,9 @@ def ann_recall_leg_frames(
             F.col("bucket").alias("p_bucket"),
         )
     )
-    corpus_bands = shared_artifact(
-        "annrecall_bands", lambda: band_frame(e, "vec_id", "embedding")
+    corpus_bands = artifact(
+        spark, sf_dir, "annrecall_bands",
+        lambda: band_frame(e, "vec_id", "embedding"),
     )
     # r16 opt (guide §2.3 — project before the exchange), all three
     # LSH legs: the candidate dedup used to shuffle full rows (two
@@ -2116,8 +2089,9 @@ def ann_recall_leg_frames(
     deq = e.select(
         "vec_id", sim.int8_dequantized(F.col("embedding")).alias("embedding")
     )
-    corpus_bands_q = shared_artifact(
-        "annrecall_bandsq", lambda: band_frame(deq, "vec_id", "embedding")
+    corpus_bands_q = artifact(
+        spark, sf_dir, "annrecall_bandsq",
+        lambda: band_frame(deq, "vec_id", "embedding"),
     )
     lsh_q_cand = (
         corpus_bands_q.join(
@@ -2184,8 +2158,8 @@ def ann_recall_leg_frames(
         codes_long = spark.createDataFrame(
             [], "vec_id long, sub long, code long"
         )
-    adists = shared_artifact(
-        f"annrecall_adists_{n_probes}",
+    adists = artifact(
+        spark, sf_dir, f"annrecall_adists_{n_probes}",
         lambda: codes_long.join(
             dtab,
             (codes_long["sub"] == dtab["sub"])
@@ -2524,22 +2498,15 @@ def _signatures_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-hash + permutation pass is the expensive leg of the whole
     dedup family, and every consumer (banding, pair generation,
     Jaccard estimation) needs the identical frame — a real pipeline
-    writes signatures to storage exactly once per corpus. The tag is
-    versioned with the hash family like dropset_mh2."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-
-    cache = fixture_cache_dir(sf_dir, "documents", "mhsig_mh2")
-    if not is_cached(cache):
-        minhash_signatures(
-            load_table(spark, sf_dir, "documents")
-        ).write.mode("overwrite").parquet(cache)
+    writes signatures to storage exactly once per corpus."""
     schema = "doc_id long, " + ", ".join(
         f"mh{j} long" for j in range(MINHASH_N_PERM)
     )
-    return spark.read.schema(schema).parquet(cache)
+    return artifact(
+        spark, sf_dir, "mhsig",
+        lambda: minhash_signatures(load_table(spark, sf_dir, "documents")),
+        schema=schema,
+    )
 
 
 def _candidate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2550,21 +2517,12 @@ def _candidate_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection — reads the materialized pair table instead of
     re-running shingle hashing, permutations and banding. Built from
     the cached signature table, so a cold start pays the signature
-    pass once, not once per artifact. The pair set is deterministic
-    given the fixture (pinned hash family), so a hit can only ever
-    serve the identical frame; the tag is versioned with the hash
-    family like dropset_mh2."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
+    pass once, not once per artifact."""
+    return artifact(
+        spark, sf_dir, "mhpairs",
+        lambda: minhash_band_pairs(_signatures_cached(spark, sf_dir)),
+        schema="a_id long, b_id long",
     )
-
-    cache = fixture_cache_dir(sf_dir, "documents", "mhpairs_mh2")
-    if not is_cached(cache):
-        minhash_band_pairs(_signatures_cached(spark, sf_dir)).write.mode(
-            "overwrite"
-        ).parquet(cache)
-    return spark.read.schema("a_id long, b_id long").parquet(cache)
 
 
 @query(
@@ -2713,10 +2671,9 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats (bench runs, driver sweeps) time what production times —
     the anti-join. A changed corpus changes the key and recomputes.
     The drop set is deterministic (portable md5 MinHash with a pinned
-    affine family, min-label components), so the cache cannot go
-    stale under a fixed fixture. The cache tag is versioned with the
-    hash family: changing the family changes the tag, so an old
-    cache can never serve the previous family's drop set.
+    affine family, min-label components), and the cache key covers
+    the code, so an old cache can never serve another hash family's
+    drop set.
     """
     d = load_table(spark, sf_dir, "documents")
     drops = _dropset_cached(spark, sf_dir)
@@ -2729,18 +2686,13 @@ def _dropset_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup drop set (non-survivor doc_ids), materialized ONCE
     per fixture — see dedup_survivors for the caching rationale; also
     consumed by pipeline_curation_e2e as its corpus-wide kill-list."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
+    return artifact(
+        spark, sf_dir, "dropset",
+        lambda: survivor_drops(
+            connected_components(_candidate_pairs_cached(spark, sf_dir))
+        ),
+        schema="doc_id long",
     )
-
-    cache = fixture_cache_dir(sf_dir, "documents", "dropset_mh2")
-    if not is_cached(cache):
-        pairs = _candidate_pairs_cached(spark, sf_dir)
-        survivor_drops(connected_components(pairs)).write.mode(
-            "overwrite"
-        ).parquet(cache)
-    return spark.read.schema("doc_id long").parquet(cache)
 
 
 @query(
@@ -3306,38 +3258,43 @@ def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _png_media_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic PNG media table (doc_id, payload BINARY), materialized
-    once per fixture (functions/cache.py discipline): a real pipeline
-    READS media bytes from storage — synthesizing (and DEFLATE-
-    compressing) the payloads inside every decode query would time
-    the synthesizer, not the decoder, and would run the compressor
-    once per consumer (decode + resize). The payloads are
-    deterministic per doc_id (synthesize_png cycles all five PNG
-    filter types), so a cache hit serves identical bytes.
+def _multimodal():
+    """functions/multimodal.py, registered to pickle BY VALUE: its
+    module-level codecs otherwise pickle by reference and break on
+    workers whose sys.path lacks this repo."""
+    from pyspark import cloudpickle
 
-    Layout (r15 optimization): the id frame is rebalanced across the
-    session's default parallelism BEFORE synthesis, so the cache is
-    written as one file per core instead of inheriting the fixture's
-    single-row-group/single-split layout — the synthesizer runs in
-    parallel at build, and every consumer's Arrow decode stage scans
-    one task per file with ZERO exchanges in the decode query itself
-    (the payload never crosses a shuffle; only doc_ids moved, once,
-    at build). Tag bumped pngmedia→pngmedia2 so a v1 single-file
-    cache can never serve the old layout."""
-    from pyspark import cloudpickle as _cp
+    from map_reduce_subnet_spark.functions import multimodal
 
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-    from map_reduce_subnet_spark.functions.parallel import scan_parallel
+    cloudpickle.register_pickle_by_value(multimodal)
+    return multimodal
 
-    cache = fixture_cache_dir(sf_dir, "documents", "pngmedia2")
-    if not is_cached(cache):
-        _cp.register_pickle_by_value(_mm)
-        synthesize = _mm.synthesize_png
+
+def _media_cached(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    synthesize,
+    doc_cap: int | None = None,
+) -> DataFrame:
+    """Synthetic media table (doc_id, payload BINARY) of
+    ``synthesize(doc_id)`` per document (doc_id < ``doc_cap`` when
+    given), materialized once per fixture: a real pipeline READS
+    media bytes from storage — synthesizing (and compressing) the
+    payloads inside every decode query would time the synthesizer,
+    not the decoder, and would run the encoder once per consumer
+    (decode + resize + ahash). The payloads are deterministic per
+    doc_id, so a cache hit serves identical bytes.
+
+    Layout: the id frame is rebalanced across the session's default
+    parallelism BEFORE synthesis, so the table is written as one file
+    per core instead of inheriting the fixture's single-row-group
+    layout — the synthesizer runs in parallel at build, and every
+    consumer's Arrow decode stage scans one task per file with ZERO
+    exchanges in the decode query itself (the payload never crosses a
+    shuffle; only doc_ids moved, once, at build)."""
+    def build():
+        _multimodal()
 
         def synth_batches(it):
             import pandas as pd
@@ -3352,14 +3309,16 @@ def _png_media_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
                     }
                 )
 
-        d = scan_parallel(
-            load_table(spark, sf_dir, "documents").select("doc_id"),
-            key="doc_id",
-        )
-        d.mapInPandas(
+        ids = load_table(spark, sf_dir, "documents").select("doc_id")
+        if doc_cap is not None:
+            ids = ids.where(F.col("doc_id") < doc_cap)
+        return scan_parallel(ids, key="doc_id").mapInPandas(
             synth_batches, schema="doc_id long, payload binary"
-        ).write.mode("overwrite").parquet(cache)
-    return spark.read.schema("doc_id long, payload binary").parquet(cache)
+        )
+
+    return artifact(
+        spark, sf_dir, name, build, schema="doc_id long, payload binary"
+    )
 
 
 def _png_pixel_sql(y: str, x: str) -> str:
@@ -3458,16 +3417,12 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels against the library decode run driver-side.
 
     Scale: the payload table is read from storage (binary column,
-    materialized once per fixture by _png_media_cached) and decode is
+    materialized once per fixture by _media_cached) and decode is
     scan-local per-batch work (constant memory per Arrow batch, no
     shuffle of binary columns); at 100 TB the decode stage
     parallelizes with input partitioning exactly like any other
     mapInPandas featurizer."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     decode = _mm.decode_png
 
     def decode_batches(it):
@@ -3493,58 +3448,12 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    media = _png_media_cached(spark, sf_dir)
+    media = _media_cached(spark, sf_dir, "pngmedia", _mm.synthesize_png)
     return media.mapInPandas(
         decode_batches,
         schema="doc_id long, width long, height long, n_channels long, "
         "mean_pixel double, pixel_checksum long",
     )
-
-
-def _gif_media_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic GIF media table (doc_id, payload BINARY), materialized
-    once per fixture (functions/cache.py discipline, same rationale as
-    _png_media_cached): the decode query should time the DECODER, not
-    the synthesizer+LZW-compressor, and the payloads are deterministic
-    per doc_id so a cache hit serves identical bytes. Layout: one
-    file per core via the pre-synthesis id rebalance (see
-    _png_media_cached — decode consumers stay zero-exchange but scan
-    in parallel); tag bumped for the layout change."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-    from map_reduce_subnet_spark.functions.parallel import scan_parallel
-
-    cache = fixture_cache_dir(sf_dir, "documents", "gifmedia2")
-    if not is_cached(cache):
-        _cp.register_pickle_by_value(_mm)
-        synthesize = _mm.synthesize_gif
-
-        def synth_batches(it):
-            import pandas as pd
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].astype("int64"),
-                        "payload": [
-                            synthesize(int(i)) for i in pdf["doc_id"]
-                        ],
-                    }
-                )
-
-        d = scan_parallel(
-            load_table(spark, sf_dir, "documents").select("doc_id"),
-            key="doc_id",
-        )
-        d.mapInPandas(
-            synth_batches, schema="doc_id long, payload binary"
-        ).write.mode("overwrite").parquet(cache)
-    return spark.read.schema("doc_id long, payload binary").parquet(cache)
 
 
 def _gif_decode_oracle(where: str = "") -> str:
@@ -3587,11 +3496,7 @@ def gif_decode_frames(media: DataFrame) -> DataFrame:
     (doc_id, payload BINARY) frame → per-blob dimensions, palette
     size, parsed interlace flag, rendered-RGB mean and the
     position-weighted checksum."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     decode = _mm.decode_gif
 
     def decode_batches(it):
@@ -3654,11 +3559,13 @@ def multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY VALUE (register_pickle_by_value) like the PNG pair.
 
     Scale: payloads read from storage (materialized once per fixture
-    by _gif_media_cached); decode is scan-local Arrow-batched work —
+    by _media_cached); decode is scan-local Arrow-batched work —
     constant memory per batch, zero shuffles of binary columns, and
     the stage parallelizes with input partitioning like any
     mapInPandas featurizer at 100 TB."""
-    return gif_decode_frames(_gif_media_cached(spark, sf_dir))
+    return gif_decode_frames(
+        _media_cached(spark, sf_dir, "gifmedia", _multimodal().synthesize_gif)
+    )
 
 
 @query(
@@ -3729,52 +3636,6 @@ def scan_binaryfile_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(out, ignore_errors=True)
     return decoded
-
-
-def _jpeg_media_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic baseline-JPEG media table (doc_id, payload BINARY),
-    materialized once per fixture (functions/cache.py discipline,
-    same rationale as _png_media_cached/_gif_media_cached): the
-    decode query should time the DECODER, not the synthesizer+Huffman
-    encoder, and payloads are deterministic per doc_id. Layout: one
-    file per core via the pre-synthesis id rebalance (see
-    _png_media_cached — decode consumers stay zero-exchange but scan
-    in parallel); tag bumped for the layout change."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-    from map_reduce_subnet_spark.functions.parallel import scan_parallel
-
-    cache = fixture_cache_dir(sf_dir, "documents", "jpegmedia2")
-    if not is_cached(cache):
-        _cp.register_pickle_by_value(_mm)
-        synthesize = _mm.synthesize_jpeg
-
-        def synth_batches(it):
-            import pandas as pd
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].astype("int64"),
-                        "payload": [
-                            synthesize(int(i)) for i in pdf["doc_id"]
-                        ],
-                    }
-                )
-
-        d = scan_parallel(
-            load_table(spark, sf_dir, "documents").select("doc_id"),
-            key="doc_id",
-        )
-        d.mapInPandas(
-            synth_batches, schema="doc_id long, payload binary"
-        ).write.mode("overwrite").parquet(cache)
-    return spark.read.schema("doc_id long, payload binary").parquet(cache)
 
 
 def _jpeg_decode_oracle() -> str:
@@ -3857,11 +3718,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     module rides register_pickle_by_value); same scale shape —
     scan-local mapInPandas, constant memory per Arrow batch, parallel
     with input partitions, binary never crosses a shuffle."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     decode_coefs = _mm.decode_jpeg_coefficients
     decode_px = _mm.decode_jpeg
 
@@ -3908,7 +3765,7 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    media = _jpeg_media_cached(spark, sf_dir)
+    media = _media_cached(spark, sf_dir, "jpegmedia", _mm.synthesize_jpeg)
     return media.mapInPandas(
         decode_batches,
         schema="doc_id long, width long, height long, n_blocks long, "
@@ -4103,17 +3960,17 @@ def sim_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lloyd_centroids(
     spark: SparkSession,
     e: DataFrame,
+    sf_dir: str,
     k: int = 8,
     iters: int = 3,
-    sf_dir: str | None = None,
 ) -> DataFrame:
     """Distributed Lloyd k-means over an embedding frame: returns the
     trained (cent_id, cent array<double>) frame, seeded from vec_id
     0..k-1. Module-level so both the registered query and the recall
     harness's trained-IVF leg train identically.
 
-    When ``sf_dir`` is given, the trained centroids are MATERIALIZED
-    to a fixture-keyed cache (functions/cache.py) — training an IVF
+    The trained centroids are MATERIALIZED as a fixture artifact of
+    ``sf_dir`` (functions/cache.py) — training an IVF
     index is the canonical build-once artifact (faiss persists its
     trained index the same way); repeat invocations read k rows
     instead of re-running 3 corpus passes. Deterministic training
@@ -4129,63 +3986,55 @@ def lloyd_centroids(
     doubles through the driver (k-means' inherent barrier; MLlib's
     implementation does the same reduce) — corpus-size-independent.
     A drained centroid drops out (standard k-means degeneracy)."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-    from map_reduce_subnet_spark.functions.stable import SUM_DECIMAL
-
     cent_schema = "cent_id long, cent array<double>"
-    cache = (
-        fixture_cache_dir(sf_dir, "embeddings", f"kmeans{k}x{iters}")
-        if sf_dir
-        else None
-    )
-    if cache and is_cached(cache):
-        return spark.read.schema(cent_schema).parquet(cache)
 
-    cents = e.where(F.col("vec_id") < k).select(
-        F.col("vec_id").cast("long").alias("cent_id"),
-        F.transform("embedding", lambda x: x.cast("double")).alias("cent"),
+    def train():
+        cents = e.where(F.col("vec_id") < k).select(
+            F.col("vec_id").cast("long").alias("cent_id"),
+            F.transform("embedding", lambda x: x.cast("double")).alias(
+                "cent"
+            ),
+        )
+        for _ in range(iters):
+            cents_arr = F.broadcast(sim.centroid_array(cents))
+            assigned = e.crossJoin(cents_arr).select(
+                "embedding",
+                sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
+                    "cent_id"
+                ].alias("cent_id"),
+            )
+            comp = assigned.select(
+                "cent_id", F.posexplode("embedding").alias("pos", "x")
+            )
+            means = comp.groupBy("cent_id", "pos").agg(
+                (
+                    F.sum(F.col("x").cast(SUM_DECIMAL)).cast("double")
+                    / F.count("*")
+                ).alias("m")
+            )
+            new_cents = (
+                means.groupBy("cent_id")
+                .agg(
+                    F.array_sort(
+                        F.collect_list(F.struct("pos", "m"))
+                    ).alias("pm")
+                )
+                .select(
+                    "cent_id",
+                    F.transform("pm", lambda s: s["m"]).alias("cent"),
+                )
+            )
+            # sync the k x dim centroid block through the driver:
+            # breaks the per-iteration lineage (otherwise iteration i
+            # re-executes every prior assignment pass) and is
+            # corpus-size-independent
+            rows = new_cents.collect()
+            cents = spark.createDataFrame(rows, cent_schema)
+        return cents
+
+    return artifact(
+        spark, sf_dir, f"kmeans{k}x{iters}", train, schema=cent_schema
     )
-    for _ in range(iters):
-        cents_arr = F.broadcast(sim.centroid_array(cents))
-        assigned = e.crossJoin(cents_arr).select(
-            "embedding",
-            sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-                "cent_id"
-            ].alias("cent_id"),
-        )
-        comp = assigned.select(
-            "cent_id", F.posexplode("embedding").alias("pos", "x")
-        )
-        means = comp.groupBy("cent_id", "pos").agg(
-            (
-                F.sum(F.col("x").cast(SUM_DECIMAL)).cast("double")
-                / F.count("*")
-            ).alias("m")
-        )
-        new_cents = (
-            means.groupBy("cent_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("pm")
-            )
-            .select(
-                "cent_id",
-                F.transform("pm", lambda s: s["m"]).alias("cent"),
-            )
-        )
-        # sync the k x dim centroid block through the driver: breaks
-        # the per-iteration lineage (otherwise iteration i re-executes
-        # every prior assignment pass) and is corpus-size-independent
-        rows = new_cents.collect()
-        cents = spark.createDataFrame(rows, cent_schema)
-    if cache:
-        cents.write.mode("overwrite").parquet(cache)
-        return spark.read.schema(cent_schema).parquet(cache)
-    return cents
 
 
 @query("sim_ann_ivf_kmeans", oracle=_kmeans_oracle())
@@ -4388,11 +4237,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel with input partitions, binary columns never shuffle. The
     resize itself is two gather indexings (no per-pixel python loop),
     so the hot loop stays vectorized numpy."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     decode, resize = _mm.decode_png, _mm.resize_nearest
 
     def resize_batches(it):
@@ -4418,7 +4263,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    media = _png_media_cached(spark, sf_dir)
+    media = _media_cached(spark, sf_dir, "pngmedia", _mm.synthesize_png)
     return media.mapInPandas(
         resize_batches,
         schema="doc_id long, thumb_w long, thumb_h long, n_channels long, "
@@ -4501,11 +4346,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, hi, lo) — 24 bytes/image — partitioned by fingerprint
     for the cluster window. A billion images shuffle ~24 GB of
     fingerprints, not the pixels."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     decode = _mm.decode_png
     ahash = _mm.average_hash
 
@@ -4521,7 +4362,7 @@ def multimodal_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["doc_id", "ahash_hi", "ahash_lo"]
             )
 
-    media = _png_media_cached(spark, sf_dir)
+    media = _media_cached(spark, sf_dir, "pngmedia", _mm.synthesize_png)
     fp = media.mapInPandas(
         hash_batches, schema="doc_id long, ahash_hi long, ahash_lo long"
     )
@@ -5291,16 +5132,11 @@ def _bpe_learned_rules(
     the rules are a deterministic learned artifact of the corpus, so
     a hit can only serve the identical model) — text_bpe_encode
     applies the model without re-training it."""
-    from map_reduce_subnet_spark.functions.cache import fixture_cache_dir
-
-    # BPE_N_MERGES is part of the model identity (ADVICE r8): an
-    # in-process change to the merge count (test monkeypatch) must
-    # miss the memo, mirroring how SHINGLE_DF_CAP is baked into the
-    # shingle cache tag.
-    memo_key = (
-        fixture_cache_dir(sf_dir, "documents", "bperules"),
-        BPE_N_MERGES,
-    )
+    # BPE_N_MERGES is part of the model identity: an in-process
+    # change to the merge count (test monkeypatch) must miss the
+    # memo, mirroring how SHINGLE_DF_CAP is baked into the shingle
+    # artifact name.
+    memo_key = (fixture_key(sf_dir), BPE_N_MERGES)
     if memo_key in _BPE_RULES_MEMO:
         return _BPE_RULES_MEMO[memo_key]
     d = load_table(spark, sf_dir, "documents")
@@ -7886,7 +7722,7 @@ def pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
     sorted python list of ``(sub, cent_id, [16 doubles])`` — the
     build-once artifact PQ deployments persist (faiss trains, then
     ships the codebook to every search node; here it ships into the
-    serving plan as literals). Cached per fixture (functions/cache.py)
+    serving plan as literals). A fixture artifact (functions/cache.py)
     like the trained IVF centroids.
 
     ONE grouped job trains all m codebooks — ``sub`` is just another
@@ -7900,18 +7736,8 @@ def pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
     drained centroid drops out (standard k-means degeneracy).
     Training rows additionally require all-finite elements (a decimal
     mean over NaN/Inf is undefined); the oracle mirrors the filter."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
 
-    cent_schema = "sub long, cent_id long, cent array<double>"
-    cache = fixture_cache_dir(
-        sf_dir, "embeddings", f"pq{PQ_M}x{PQ_K}x{PQ_SUBDIM}i1"
-    )
-    if is_cached(cache):
-        rows = spark.read.schema(cent_schema).parquet(cache).collect()
-    else:
+    def build():
         e = _pq_valid(load_table(spark, sf_dir, "embeddings"))
         train = e.where(
             F.forall(
@@ -7963,7 +7789,7 @@ def pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
                 ).alias("m")
             )
         )
-        cents = (
+        return (
             means.groupBy("sub", "cent_id")
             .agg(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))).alias(
@@ -7976,10 +7802,11 @@ def pq_codebook_rows(spark: SparkSession, sf_dir: str) -> list:
                 F.transform("pm", lambda t: t["m"]).alias("cent"),
             )
         )
-        rows = cents.collect()
-        spark.createDataFrame(rows, cent_schema).write.mode(
-            "overwrite"
-        ).parquet(cache)
+
+    rows = artifact(
+        spark, sf_dir, f"pq{PQ_M}x{PQ_K}x{PQ_SUBDIM}", build,
+        schema="sub long, cent_id long, cent array<double>",
+    ).collect()
     return sorted(
         ((r["sub"], r["cent_id"], list(r["cent"])) for r in rows),
         key=lambda t: (t[0], t[1]),
@@ -8121,8 +7948,8 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     """The ENCODED CORPUS — the product-quantized index itself:
     one row per valid vector, ``vec_id`` plus m nullable code ids
     (NULL when every candidate distance in that subspace is
-    non-finite, the d < inf guard). Built ONCE per fixture and
-    cached (functions/cache.py): encoding pays the full
+    non-finite, the d < inf guard). Built ONCE per fixture as an
+    artifact (functions/cache.py): encoding pays the full
     m·k·subdim-flop argmin expression per vector exactly once — a
     real PQ deployment stores this table next to the codebook and
     serves every query from it, never re-touching the raw vectors
@@ -8131,11 +7958,6 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     corpus pass; the serving side never shuffles anything).
     Returns None when the codebook is degenerate (a fully-drained
     subspace — the oracle's COUNT(*) = m can then never hold)."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-
     by_sub = _by_sub
     if by_sub is None:
         by_sub = {}
@@ -8146,10 +7968,8 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     schema = "vec_id long, " + ", ".join(
         f"c{s} long" for s in range(PQ_M)
     )
-    cache = fixture_cache_dir(
-        sf_dir, "embeddings", f"pqcodes{PQ_M}x{PQ_K}x{PQ_SUBDIM}i1"
-    )
-    if not is_cached(cache):
+
+    def build():
         e = _pq_valid(load_table(spark, sf_dir, "embeddings"))
         n = spark.sparkContext.defaultParallelism
         # two-step select: the argmin struct materializes ONCE per
@@ -8164,15 +7984,19 @@ def pq_codes_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
                 for s in range(PQ_M)
             ],
         )
-        best.selectExpr(
+        return best.selectExpr(
             "vec_id",
             *[
                 f"(CASE WHEN b{s}.d < {_SQL_INF} THEN b{s}.cent_id END)"
                 f" AS c{s}"
                 for s in range(PQ_M)
             ],
-        ).write.mode("overwrite").parquet(cache)
-    return spark.read.schema(schema).parquet(cache)
+        )
+
+    return artifact(
+        spark, sf_dir, f"pqcodes{PQ_M}x{PQ_K}x{PQ_SUBDIM}", build,
+        schema=schema,
+    )
 
 
 def _pq_serving_state(spark: SparkSession, sf_dir: str):
@@ -8355,14 +8179,9 @@ def ivfpq_index_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     the Spark-native realization of FAISS's posting-list fetch.
     Composes the two existing cached artifacts (pq_codes_cached's
     encoded corpus + lloyd_centroids' trained centroids), so beyond
-    the one assignment pass the build cost is zero; cached per
-    fixture like both parents. Returns None when the PQ codebook is
+    the one assignment pass the build cost is zero; a fixture
+    artifact like both parents. Returns None when the PQ codebook is
     degenerate (drained subspace)."""
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-
     codes = pq_codes_cached(spark, sf_dir, _by_sub=_by_sub)
     if codes is None:
         return None
@@ -8371,10 +8190,8 @@ def ivfpq_index_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
         + ", ".join(f"c{s} long" for s in range(PQ_M))
         + ", cell_id long"
     )
-    cache = fixture_cache_dir(
-        sf_dir, "embeddings", f"ivfpq8x3_{PQ_M}x{PQ_K}x{PQ_SUBDIM}i1"
-    )
-    if not is_cached(cache):
+
+    def build():
         e = load_table(spark, sf_dir, "embeddings")
         cents_arr = F.broadcast(
             sim.centroid_array(lloyd_centroids(spark, e, sf_dir=sf_dir))
@@ -8385,10 +8202,12 @@ def ivfpq_index_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
                 "cent_id"
             ].alias("cell_id"),
         )
-        codes.join(cells, "vec_id").write.mode("overwrite").partitionBy(
-            "cell_id"
-        ).parquet(cache)
-    return spark.read.schema(schema).parquet(cache)
+        return codes.join(cells, "vec_id")
+
+    return artifact(
+        spark, sf_dir, f"ivfpq8x3_{PQ_M}x{PQ_K}x{PQ_SUBDIM}", build,
+        schema=schema, partition_by="cell_id",
+    )
 
 
 def _ivfpq_oracle() -> str:
@@ -8679,21 +8498,16 @@ def multimodal_probe_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
     "video is a stub" to "codec payload decode is the stub".
 
     Synthesis + probe live module-level in functions/multimodal.py
-    (synthesize_mp4 / probe_mp4 / mp4_params) and ship BY VALUE via
-    cloudpickle.register_pickle_by_value (the _png_media_cached
-    pattern — module-level functions otherwise pickle by reference
-    and the driver's workers lack this repo on sys.path).
+    (synthesize_mp4 / probe_mp4 / mp4_params) and ship BY VALUE
+    (_multimodal — module-level functions otherwise pickle by
+    reference and the driver's workers lack this repo on sys.path).
 
     Scale shape: synthesis and probe are one narrow mapInPandas pass
     — constant memory per Arrow batch, no shuffle ever sees the
     binary column; per-blob work is O(bytes) header walking. The
     exact-ms duration arithmetic is integer (dur_units are multiples
     of 300, so ×1000/600 is exact), mirrored by the oracle."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     synthesize, probe = _mm.synthesize_mp4, _mm.probe_mp4
 
     def probe_batches(it):
@@ -8751,53 +8565,6 @@ def multimodal_probe_mp4(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decode stage itself is the same constant-memory scan-local
 # mapInPandas at any corpus size.
 MJPEG_DOC_CAP = 1024
-
-
-def _mjpeg_media_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synthetic MJPEG-in-MP4 media table (doc_id, payload BINARY),
-    materialized once per fixture (the _jpeg_media_cached pattern):
-    the decode query should time the DEMUX+DECODE, not the
-    synthesizer+encoder, and payloads are deterministic per doc_id.
-    Layout: one file per core via the pre-synthesis id rebalance (see
-    _png_media_cached — decode consumers stay zero-exchange but scan
-    in parallel); tag bumped for the layout change."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-    from map_reduce_subnet_spark.functions.cache import (
-        fixture_cache_dir,
-        is_cached,
-    )
-    from map_reduce_subnet_spark.functions.parallel import scan_parallel
-
-    cache = fixture_cache_dir(sf_dir, "documents", "mjpegmedia2")
-    if not is_cached(cache):
-        _cp.register_pickle_by_value(_mm)
-        synthesize = _mm.synthesize_mjpeg_mp4
-
-        def synth_batches(it):
-            import pandas as pd
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].astype("int64"),
-                        "payload": [
-                            synthesize(int(i)) for i in pdf["doc_id"]
-                        ],
-                    }
-                )
-
-        d = scan_parallel(
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id")
-            .where(F.col("doc_id") < MJPEG_DOC_CAP),
-            key="doc_id",
-        )
-        d.mapInPandas(
-            synth_batches, schema="doc_id long, payload binary"
-        ).write.mode("overwrite").parquet(cache)
-    return spark.read.schema("doc_id long, payload binary").parquet(cache)
 
 
 def _mjpeg_decode_oracle() -> str:
@@ -8892,11 +8659,7 @@ def multimodal_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, output is narrow integer rows; per-blob work is O(bytes)
     demux + O(frames x blocks) decode, embarrassingly parallel with
     input partitions."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.functions import multimodal as _mm
-
-    _cp.register_pickle_by_value(_mm)
+    _mm = _multimodal()
     demux = _mm.demux_mjpeg_mp4
     decode_coefs = _mm.decode_jpeg_coefficients
     decode_px = _mm.decode_jpeg
@@ -8948,7 +8711,9 @@ def multimodal_decode_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ],
             )
 
-    media = _mjpeg_media_cached(spark, sf_dir)
+    media = _media_cached(
+        spark, sf_dir, "mjpegmedia", _mm.synthesize_mjpeg_mp4, MJPEG_DOC_CAP
+    )
     return media.mapInPandas(
         decode_batches,
         schema="doc_id long, frame_idx long, n_frames long, "

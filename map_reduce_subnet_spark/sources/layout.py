@@ -17,20 +17,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def date_partitioned(
+    df: DataFrame, date_col: str, granularity: str = "month"
+) -> DataFrame:
+    """``df`` plus a derived date bucket column (`part_key`, e.g.
+    '1997-03'), one task per bucket: the frame to write
+    ``partitionBy("part_key")``. Partition count stays bounded
+    (months, not days) so the file listing doesn't explode — the
+    standard time-series layout at fact-table scale."""
+    fmt = {"month": "yyyy-MM", "year": "yyyy", "day": "yyyy-MM-dd"}[granularity]
+    return df.withColumn(
+        "part_key", F.date_format(F.col(date_col), fmt)
+    ).repartition("part_key")  # one writer task per partition dir
+
+
 def write_date_partitioned(
     df: DataFrame,
     path: str,
     date_col: str,
     granularity: str = "month",
 ) -> None:
-    """Write parquet partitioned by a derived date bucket column
-    (`part_key`, e.g. '1997-03'). Partition count stays bounded
-    (months, not days) so the file listing doesn't explode — the
-    standard time-series layout at fact-table scale."""
-    fmt = {"month": "yyyy-MM", "year": "yyyy", "day": "yyyy-MM-dd"}[granularity]
+    """Write ``date_partitioned(df, ...)`` as parquet partitioned by
+    `part_key`."""
     (
-        df.withColumn("part_key", F.date_format(F.col(date_col), fmt))
-        .repartition("part_key")  # one writer task per partition dir
+        date_partitioned(df, date_col, granularity)
         .write.mode("overwrite")
         .partitionBy("part_key")
         .parquet(path)

@@ -166,7 +166,7 @@ class JsonLinesSinkWriter(DataSourceWriter):
     (two attempts of the same task can never collide), and reports it
     in the commit message. The driver-side commit() writes the
     _SUCCESS marker LAST — the same torn-write discipline as the
-    parquet sinks (functions/cache.py::is_cached): a killed job
+    parquet sinks (functions/cache.py checks the marker): a killed job
     leaves part files but no marker, so readers never see a partial
     table. In local mode the directory is a /tmp scratch path; a real
     deployment points ``path`` at shared storage."""

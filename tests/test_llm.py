@@ -1974,3 +1974,101 @@ def test_mp4_probe_parity_and_rejections():
     with _pytest.raises(ValueError):
         # zero-size box header: size field of the first box zeroed
         probe_mp4(b"\x00" * 4 + payload[4:])
+
+
+# --- fixture artifacts (functions/cache.py) -------------------------
+
+
+@pytest.fixture
+def artifact_fixture(tmp_path, monkeypatch):
+    """A one-table fixture dir, with artifacts published into a
+    private temp dir."""
+    import tempfile
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame({"x": [1, 2, 3]}).to_parquet(sf / "t.parquet")
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    return str(sf), scratch
+
+
+def _values(df) -> list:
+    return sorted(r["v"] for r in df.collect())
+
+
+def test_artifact_code_change_misses_and_rebuilds(
+    spark, artifact_fixture, monkeypatch
+):
+    """The key covers the package code: a changed code digest names a
+    new path and rebuilds instead of serving the old build."""
+    from map_reduce_subnet_spark.functions import cache
+
+    sf, _ = artifact_fixture
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.createDataFrame([(len(builds),)], "v long")
+
+    assert _values(cache.artifact(spark, sf, "probe", build)) == [1]
+    assert _values(cache.artifact(spark, sf, "probe", build)) == [1]
+    assert len(builds) == 1
+    old = cache.artifact_path(sf, "probe")
+    monkeypatch.setattr(cache, "code_digest", lambda: "edited")
+    assert cache.artifact_path(sf, "probe") != old
+    assert _values(cache.artifact(spark, sf, "probe", build)) == [2]
+    assert len(builds) == 2
+
+
+def test_artifact_unpublished_staging_dir_is_never_served(
+    spark, artifact_fixture, monkeypatch
+):
+    """A writer killed between its write and its rename leaves a
+    complete staging dir; the next call must build its own artifact,
+    not read the orphan."""
+    import os
+
+    from map_reduce_subnet_spark.functions import cache
+
+    sf, scratch = artifact_fixture
+
+    def killed(src, dst):
+        raise RuntimeError("killed before the rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(cache.os, "rename", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            cache.artifact(
+                spark, sf, "probe",
+                lambda: spark.createDataFrame([(99,)], "v long"),
+            )
+    orphans = [n for n in os.listdir(scratch) if ".staging-" in n]
+    assert len(orphans) == 1
+    assert os.path.exists(scratch / orphans[0] / "_SUCCESS")
+    assert not os.path.exists(cache.artifact_path(sf, "probe"))
+    got = cache.artifact(
+        spark, sf, "probe", lambda: spark.createDataFrame([(1,)], "v long")
+    )
+    assert _values(got) == [1]
+
+
+def test_artifact_race_loser_reads_winner(spark, artifact_fixture):
+    """When the target is published between this writer's build and
+    its rename, the loser deletes its staging dir and returns the
+    winner's artifact."""
+    import os
+
+    from map_reduce_subnet_spark.functions import cache
+
+    sf, scratch = artifact_fixture
+    path = cache.artifact_path(sf, "probe")
+
+    def build():
+        spark.createDataFrame([(7,)], "v long").write.parquet(path)
+        return spark.createDataFrame([(8,)], "v long")
+
+    got = cache.artifact(spark, sf, "probe", build, schema="v long")
+    assert _values(got) == [7]
+    assert not [n for n in os.listdir(scratch) if ".staging-" in n]
