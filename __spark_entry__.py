@@ -37,27 +37,50 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 SWEEP_CAP = 50
 
 _SWEEP_PRIORITY = [
-    # --- FRESHNESS SCHEDULE, r17 edition ---
-    # r17 composition, auditable sum: 0 new + 27 changed + 23
-    # (oldest backfill: the r11-vintage cohort in sorted order, all
-    # hash-green in CORRECTNESS_r11) = 50 = SWEEP_CAP. Cohorts are
-    # COMPUTED from the CORRECTNESS_r01..r16 union (latest green row
-    # per key), not hand-copied: 29 keys' latest green row is r11,
-    # 3 of them are in the changed tranche, and the 3 that did not
-    # fit (timeseries_gapfill, udtf_grouped_map, window_row_number)
-    # lead the r18 backfill. The changed-key rule is mechanized: scripts/fingerprints.py records key ->
-    # md5(oracle + engine source) per round, and
+    # --- FRESHNESS SCHEDULE ---
+    # Composition, auditable sum: 0 new + 44 changed (27 carried + 17
+    # this change) + 6 backfill = 50 = SWEEP_CAP. The 27 carried keys
+    # changed in the previous rotation and have no CORRECTNESS
+    # row for their current program yet, so they stay. Backfill cohorts
+    # are COMPUTED from the CORRECTNESS_r01..r16 union (latest green
+    # row per key), not hand-copied: the three keys that did not fit
+    # last time lead, then the r11-vintage cohort in sorted order. The
+    # changed-key rule is mechanized: scripts/fingerprints.py records
+    # key -> md5(oracle + engine source) per rotation, and
     # tests/test_correctness.py fails if any fingerprint changed
     # without the key appearing here.
     #
-    # (1) changed this round: every fixture-artifact consumer (the
-    # one artifact helper in functions/cache.py replaced the
-    # hand-rolled caches) — the MinHash dedup family and the graph,
-    # sampling, split and curation keys built on its pair table, the
-    # media decodes plus resize/ahash, the ANN/PQ family, BPE, the two
-    # month-partitioned pruning keys and join_bucketed — plus the two
-    # other media keys that share the by-value multimodal shipping
-    # helper (multimodal_probe_mp4, scan_binaryfile_media):
+    # (1a) changed this rotation: every streaming drain through
+    # _run_to_memory (its no-data-batch conf is now scoped to stream
+    # start), the four CEP keys (one cep_stream operator) and the
+    # replay consumers (one _replay writer: stream_stateful_ema_batches,
+    # stream_upsert_foreachbatch):
+    "stream_cep_gapped_ooo",
+    "stream_cep_gapped_true",
+    "stream_cep_ooo",
+    "stream_cep_true",
+    "stream_dedup_true",
+    "stream_dedup_within_watermark_true",
+    "stream_pit_join_true",
+    "stream_python_source_true",
+    "stream_session_true",
+    "stream_sliding_true",
+    "stream_stateful_ema",
+    "stream_stateful_ema_batches",
+    "stream_static_join_true",
+    "stream_stream_join_true",
+    "stream_tumbling_distinct_true",
+    "stream_tumbling_true",
+    "stream_upsert_foreachbatch",
+    # (1b) changed in the previous rotation, not yet re-verified:
+    # every fixture-artifact consumer (the one artifact helper in
+    # functions/cache.py replaced the hand-rolled caches) — the MinHash
+    # dedup family and the graph, sampling, split and curation keys
+    # built on its pair table, the media decodes plus resize/ahash, the
+    # ANN/PQ family, BPE, the two month-partitioned pruning keys and
+    # join_bucketed — plus the two other media keys that share the
+    # by-value multimodal shipping helper (multimodal_probe_mp4,
+    # scan_binaryfile_media):
     "dedup_cluster",
     "dedup_containment",
     "dedup_minhash_est",
@@ -85,31 +108,14 @@ _SWEEP_PRIORITY = [
     "split_leakage_safe",
     "text_bpe_encode",
     "text_bpe_merges",
-    # (2) backfill: the r11-vintage cohort (oldest remaining rows,
-    # all hash-green in r11), sorted, minus the three changed keys:
+    # (2) backfill: the three keys left over from the last backfill,
+    # then the r11-vintage cohort (all hash-green in r11), sorted:
+    "timeseries_gapfill",
+    "udtf_grouped_map",
+    "window_row_number",
     "limit_topk",
     "quality_dedup_rates",
     "sample_stratified_rebalance",
-    "scan_csv_roundtrip",
-    "scan_jsonl_roundtrip",
-    "setop_dedup",
-    "setop_except",
-    "setop_intersect",
-    "setop_union_all",
-    "sort_multi_key",
-    "str_fuzzy_levenshtein",
-    "stream_dedup",
-    "stream_session",
-    "stream_session_true",
-    "stream_sliding",
-    "stream_sliding_true",
-    "stream_static_join_true",
-    "stream_tumbling",
-    "text_collocations_pmi",
-    "text_decontaminate",
-    "text_langid_ngram",
-    "text_quality_c4",
-    "text_source_drift_jsd",
 ]
 
 

@@ -1,13 +1,16 @@
 """True Structured Streaming jobs (SURVEY.md §2.2.I, streaming forms).
 
-Each job reads the events fixture as a file stream (one micro-batch via
-``trigger(availableNow=True)``), applies the streaming operator —
-watermarked tumbling aggregation, watermarked dedup, and custom
-stateful EMA via ``transformWithStateInPandas``-style per-group state —
-and sinks to an in-memory table which is returned as a batch DataFrame
-(dropped from the catalog once materialized). The window/session jobs
-are rows-only checked (watermark cutoffs aren't SQL-expressible); the
-stateful EMA is deterministic and carries a closed-form SQL oracle.
+Each job reads the events fixture as a file stream, applies the
+streaming operator (watermarked windows and dedup, stream joins,
+per-group state via ``applyInPandasWithState``, one CEP operator with
+in-order and out-of-order modes) and drains it with
+``trigger(availableNow=True)`` into a memory sink, which is returned as
+a batch DataFrame (dropped from the catalog once materialized). The
+multi-trigger jobs replay the fixture as two ascending-mtime files read
+one per trigger (:func:`_replay`), so their state must survive a
+trigger boundary. Jobs whose append-mode output depends on a watermark
+cutoff carry an oracle that reproduces Spark's watermark clock; the
+stateful jobs are deterministic and share their batch twins' oracles.
 
 Grounding: the reference's unbounded step loop with per-round state
 (reference neurons/miner.py:175, neurons/validator.py:116-170); the
@@ -23,6 +26,8 @@ driver-held state.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -43,6 +48,13 @@ from map_reduce_subnet_spark.operators.warehouse import (
     MV_FULL_ORACLE as _MV_FULL_ORACLE,
 )
 from map_reduce_subnet_spark.operators.registry import query
+from map_reduce_subnet_spark.operators.streaming_batch import (
+    CEP_GAP_US,
+    CEP_GAPPED_ORACLE,
+    CEP_ORACLE,
+    CEP_SPAN_US,
+    CEP_STAGES,
+)
 from map_reduce_subnet_spark.sources.tables import load_table
 
 
@@ -75,11 +87,11 @@ def _read_events_stream(
       - timestamp[us] (NTZ)  -> TimestampNTZType, cast to TIMESTAMP
                                 (value-preserving: session TZ is UTC)
       - timestamp[us, tz=*]  -> TimestampType, passthrough
-    The fixtures stored ts as timestamp[ns] through round 3 and
-    timestamp[us] since round 4 (FIXTURES.md); declaring nanos against
-    a microsecond file silently compresses event time 1000x, which is
-    exactly the regression this probe exists to prevent
-    (tests/test_edge_inputs.py pins all three encodings).
+    Fixtures exist in both the ns and the us encoding (FIXTURES.md);
+    declaring nanos against a microsecond file silently compresses
+    event time 1000x, which is exactly the regression this probe
+    exists to prevent (tests/test_edge_inputs.py pins all three
+    encodings).
 
     EVERY file matched by the glob is probed, not just one: a
     directory mixing ns and us files (plausible across fixture
@@ -99,8 +111,8 @@ def _read_events_stream(
         else sorted(_glob.glob(glob_path))
     ) or [probe_file]
     # A glob match can itself be a DIRECTORY (real corpora arrive as
-    # directory tables of many part files — the sf1 rehearsal layout,
-    # caught r8): descend one level so the footer probe always reads
+    # directory tables of many part files — the sf1 rehearsal layout):
+    # descend one level so the footer probe always reads
     # files. pq.read_schema on a directory raises.
     candidates = []
     for m in matches:
@@ -157,6 +169,7 @@ def _run_to_memory(
     spark: SparkSession,
     output_mode: str = "append",
     drain: str = "available_now",
+    emit_on_arrival: bool = False,
 ) -> DataFrame:
     """Drain the stream into a memory sink and return the sink table
     as a batch frame. ``drain="available_now"`` is one
@@ -164,7 +177,22 @@ def _run_to_memory(
     runs continuous micro-batches until processAllAvailable() observes
     an idle source — required for custom Python stream sources, whose
     PythonMicroBatchStream does not support AvailableNow (Spark falls
-    back to a SINGLE batch and silently truncates the stream)."""
+    back to a SINGLE batch and silently truncates the stream).
+
+    ``emit_on_arrival=True`` skips the final NO-DATA micro-batch
+    (``spark.sql.streaming.noDataMicroBatches.enabled=false``). That
+    batch acts on the watermark advanced by the last data batch: it
+    EMITS rows for append-mode aggregations, outer joins and stateful
+    timeouts, so those drains must keep it. For operators that emit
+    every row on ARRIVAL (inner stream-stream joins,
+    dropDuplicates[WithinWatermark]) it only evicts state, which a
+    terminating drain with a discarded checkpoint pays for nothing —
+    mostly state-store commit. Callers MUST emit entirely from data
+    batches; each caller's oracle MATCH is the pin. The query
+    snapshots the session conf at ``start()``, so the conf is set just
+    before it and restored right after: the session never reads
+    ``false`` while the stream drains, and a concurrent stream
+    (FAIR scheduling) keeps its own no-data batches."""
     name = "s" + uuid.uuid4().hex[:12]
     writer = (
         stream_df.writeStream.format("memory")
@@ -184,13 +212,22 @@ def _run_to_memory(
             return spark.table(name).localCheckpoint(eager=True)
         finally:
             spark.catalog.dropTempView(name)
-    q = writer.trigger(availableNow=True).start()
-    # Materialize off the sink, then drop the temp view: without the
-    # drop, every invocation leaked one uuid-named in-memory table for
-    # the session lifetime (catalog growth + pinned sink rows) — on
-    # the TIMEOUT path too, which is why the drop is in a finally.
-    # localCheckpoint severs the plan's dependency on the view so the
-    # drop is safe before the caller consumes the frame.
+    writer = writer.trigger(availableNow=True)
+    if emit_on_arrival:
+        conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+        prev_conf = spark.conf.get(conf_key, "true")
+        spark.conf.set(conf_key, "false")
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(conf_key, prev_conf)
+    else:
+        q = writer.start()
+    # Materialize off the sink, then drop the temp view (also on the
+    # timeout path): otherwise every invocation leaks one uuid-named
+    # in-memory table for the session lifetime. localCheckpoint severs
+    # the plan's dependency on the view so the drop is safe before the
+    # caller consumes the frame.
     try:
         if not q.awaitTermination(300):
             q.stop()
@@ -203,41 +240,110 @@ def _run_to_memory(
         spark.catalog.dropTempView(name)
 
 
-def _run_to_memory_emit_on_arrival(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    output_mode: str = "append",
-) -> DataFrame:
-    """:func:`_run_to_memory`, with the engine's final NO-DATA
-    micro-batch disabled (``spark.sql.streaming.noDataMicroBatches
-    .enabled``) for this one drain.
+# The OOO CEP reorder window: an event may arrive up to this long
+# (event time) after a later-timestamped event and still be sequenced
+# correctly — the watermark delay of the OOO CEP stream.
+CEP_OOO_DELAY_US = 3_600_000_000  # 1 h
 
-    The no-data batch exists to act on an advanced watermark AFTER the
-    last data batch: it EMITS rows for append-mode aggregations/outer
-    joins and stateful timeouts — those drains must keep it. But for
-    operators that emit every result row on ARRIVAL — inner
-    stream-stream joins, dropDuplicates(WithinWatermark) — it only
-    EVICTS state, and on a terminating drain whose temp checkpoint is
-    discarded that eviction is pure cost (r16 profile: ~2.2-2.9 s of
-    state-store commit across 32 partitions × 4 join state stores for
-    stream_stream_join_true, 0 rows emitted;
-    plans/r16/ssj_nodata_ab.json pins rows_equal between both drain
-    modes for every caller). Callers MUST emit entirely from data
-    batches; each caller's DuckDB oracle MATCH is the pin. At 100 TB
-    the same holds per drain — a continuous deployment amortizes ONE
-    eviction batch over the stream's lifetime, a terminating replay
-    pays it per run for nothing.
+# The OOO replay's maximum delivery displacement, strictly less than
+# CEP_OOO_DELAY_US, so no replayed event arrives later than the
+# reorder window and the oracle equality proves zero drops (30 min vs
+# the fixture's ~3 min median inter-event spacing: a typical event is
+# displaced past ~10 others).
+CEP_OOO_JITTER_US = 1_800_000_000  # 30 min
 
-    The conf is session-wide, so it is set just before the drain and
-    restored in a finally (queries run sequentially in the bench and
-    the driver's verify; nothing here starts streams concurrently)."""
-    conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prev_conf = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        return _run_to_memory(stream_df, spark, output_mode)
-    finally:
-        spark.conf.set(conf_key, prev_conf)
+
+@contextmanager
+def _replay(
+    spark: SparkSession, sf_dir: str, ooo: bool = False
+) -> Iterator[DataFrame]:
+    """Replay the events fixture as a stream of TWO micro-batches: two
+    parquet files with ascending mtimes in a temp dir, read one per
+    trigger (maxFilesPerTrigger=1), so per-key state must survive the
+    trigger boundary to give the right answer. Yields the
+    :func:`_read_events_stream` source; the temp dir is removed on
+    exit, so callers drain (and materialize) inside the block.
+
+    In order (default), the files are the fixture sorted by
+    (ts, event_id) and split in half: each file is time-contiguous.
+    With ``ooo=True`` the delivery order is ts + a deterministic
+    jitter(event_id) < CEP_OOO_JITTER_US, and one WATERMARK-ADVANCER
+    row (user -1, non-stage type, CEP_OOO_DELAY_US past the fixture
+    maximum) ends the last file: while its batch runs the watermark
+    still predates it, and the no-data batch after it has a watermark
+    past every real event, so the EventTimeTimeout flush seals the
+    tail. An empty fixture gets no advancer (nothing to flush).
+
+    Two triggers are the minimum that still forces cross-trigger
+    state, and every job replayed here has a split-invariant result;
+    each extra trigger pays planning plus a state-store commit. The
+    deeper splits stay pinned by the multi-file tests in
+    tests/test_streaming.py. The split is fixture plumbing: a
+    deployment's stream arrives in its own order."""
+    import os
+    import tempfile
+    import time as _time
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq_mod
+
+    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
+    ts_us = (
+        tbl.column("ts")
+        .to_pandas()
+        .values.astype("datetime64[us]")
+        .astype("int64")
+    )
+    eid = tbl.column("event_id").to_pandas().values
+    delivery = ts_us
+    if ooo:
+        jitter = ((eid.astype("int64") * 2654435761) % (1 << 32)) % (
+            CEP_OOO_JITTER_US
+        )
+        delivery = ts_us + jitter
+    order = (
+        pd.DataFrame({"ts": delivery, "event_id": eid})
+        .sort_values(["ts", "event_id"], kind="mergesort")
+        .index
+    )
+    # typed indices: a bare empty list is null-typed and pyarrow's
+    # take kernel rejects (int64, null) on an empty fixture
+    tbl = tbl.take(pa.array(order, type=pa.int64()))
+    step = (tbl.num_rows + 1) // 2
+    parts = [tbl.slice(0, step), tbl.slice(step)]
+    if ooo and tbl.num_rows:
+        advancer = pa.table(
+            {
+                "event_id": pa.array([-1], pa.int64()),
+                "ts": pa.array(
+                    [int(ts_us.max()) + CEP_OOO_DELAY_US + 1_000_000],
+                    pa.timestamp("us"),
+                ),
+                "user_id": pa.array([-1], pa.int64()),
+                "event_type": pa.array(["__advance__"], pa.string()),
+                "value": pa.array([None], pa.float64()),
+                "props": pa.array([None], pa.string()),
+            }
+        )
+        advancer = advancer.select(tbl.schema.names).cast(tbl.schema)
+        parts[1] = pa.concat_tables([parts[1], advancer])
+    now = _time.time()
+    with tempfile.TemporaryDirectory(
+        prefix="mrs_replay_", ignore_cleanup_errors=True
+    ) as src:
+        for i, part in enumerate(parts):
+            p = os.path.join(src, f"part{i}.parquet")
+            pq_mod.write_table(part, p)
+            os.utime(p, (now + i, now + i))  # mtime order = delivery order
+        # the split files inherit the fixture's ts encoding, so the
+        # footer probe reads one of them
+        yield _read_events_stream(
+            spark,
+            os.path.join(src, "part0.parquet"),
+            src,
+            maxFilesPerTrigger="1",
+        )
 
 
 @query(
@@ -345,10 +451,11 @@ def stream_dedup_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a doubled input)."""
     ev = _read_event_stream(spark, sf_dir)
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
-    # r16: dropDuplicates emits each first occurrence in its own data
-    # batch; the no-data batch only evicts state — skip it.
-    return _run_to_memory_emit_on_arrival(
-        deduped.select("event_id", "user_id", "value"), spark
+    # each first occurrence is emitted in its data batch
+    return _run_to_memory(
+        deduped.select("event_id", "user_id", "value"),
+        spark,
+        emit_on_arrival=True,
     )
 
 
@@ -525,83 +632,28 @@ GROUP BY user_id
 def stream_stateful_ema_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cross-micro-batch form of stream_stateful_ema — the
     reference's cross-round state (neurons/validator.py:146) as a
-    driver-checked query: the events fixture is split into 2
-    time-contiguous files fed as 2 micro-batches
-    (maxFilesPerTrigger=1, ascending mtimes so the file source takes
-    them in time order), so each user's EMA state MUST survive in the
-    state store between triggers to produce the right answer. The
-    final per-user row (max n_events across the per-batch update-mode
-    emissions) equals the same closed-form oracle as the single-batch
-    job — bit-exact, because the time-contiguous split preserves the
-    global (ts, event_id) fold order. (r16, guide §1.2/§4: the drain
-    cost is per-trigger — micro-batch planning + state commit + the
-    Python stateful round trip — and the result is split-invariant,
-    so the replay drains in TWO triggers, the minimum that still
-    forces cross-trigger state; the 4-batch shape stays pinned by
-    tests/test_streaming.py::
-    test_stateful_ema_state_carries_across_micro_batches.)
+    driver-checked query: the fixture replays as 2 time-contiguous
+    micro-batches (:func:`_replay`), so each user's EMA state MUST
+    survive in the state store between triggers to produce the right
+    answer. The final per-user row (max n_events across the per-batch
+    update-mode emissions) equals the same closed-form oracle as the
+    single-batch job — bit-exact, because the time-contiguous split
+    preserves the global (ts, event_id) fold order. The 4-batch shape
+    stays pinned by tests/test_streaming.py::
+    test_stateful_ema_state_carries_across_micro_batches.
 
-    The driver-side file split is fixture plumbing (a deployment's
-    stream arrives in time order on its own); state handling is the
-    real path — RocksDB-backed on a cluster, partitioned by user.
-    """
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-    import uuid
-
-    import pyarrow.parquet as pq_mod
-
-    import pyarrow as pa
-
-    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
-    pdf_order = (
-        tbl.select(["ts", "event_id"])
-        .to_pandas()
-        .sort_values(["ts", "event_id"], kind="mergesort")
-        .index
-    )
-    # typed indices: a bare empty list is null-typed and pyarrow's
-    # take kernel rejects (int64, null) — surfaces on empty fixtures
-    tbl = tbl.take(pa.array(pdf_order, type=pa.int64()))
-    src = os.path.join(
-        tempfile.gettempdir(), f"mrs_ema_batches_{uuid.uuid4().hex[:12]}"
-    )
-    os.makedirs(src)
-    n_files = 2  # r16: two triggers — the minimum cross-batch drain
-    step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
-    try:
-        for i in range(n_files):
-            p = os.path.join(src, f"part{i}.parquet")
-            pq_mod.write_table(tbl.slice(i * step, step), p)
-            os.utime(p, (now + i, now + i))  # mtime order = time order
-        # the split files inherit the source fixture's ts encoding, so
-        # probe one of them exactly as _read_event_stream probes the
-        # original
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
+    State handling is the real path — RocksDB-backed on a cluster,
+    partitioned by user."""
+    with _replay(spark, sf_dir) as ev:
         sink = _run_to_memory(stateful_ema(ev), spark, output_mode="update")
-        # final state per user: the update-mode emission with the
-        # largest n_events (n is strictly increasing per user)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-        final = (
-            sink.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select("user_id", "ema", "n_events")
-        )
-        rows = final.collect()
-        schema = final.schema
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    # final state per user: the update-mode emission with the largest
+    # n_events (n is strictly increasing per user)
+    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    return (
+        sink.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .select("user_id", "ema", "n_events")
+    )
 
 
 @query(
@@ -662,11 +714,9 @@ def stream_stream_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("c_ts") <= F.col("p_ts"))
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
     ).select("p_event_id", "c_event_id", "user_id")
-    # r16: an INNER stream-stream join emits every match in the data
-    # batch that completes it; the trailing no-data batch only evicts
-    # state (profiled: 0 emitted rows, ~2.5 s of store commit) — skip
-    # it on this terminating drain (_run_to_memory_emit_on_arrival).
-    return _run_to_memory_emit_on_arrival(joined, spark)
+    # an inner join emits every match in the data batch that
+    # completes it
+    return _run_to_memory(joined, spark, emit_on_arrival=True)
 
 
 def stream_stateful_topk_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,7 +810,7 @@ def stream_stateful_topk_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 def upsert_latest_merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
     """The per-batch latest-wins MERGE used by stream_upsert_foreachbatch,
     module-level so its foreachBatch REPLAY idempotency is directly
-    testable (VERDICT r9 #4): foreachBatch can redeliver a batch id
+    testable: foreachBatch can redeliver a batch id
     after a failure, and exactly-once state requires
     merge(merge(S, B), B) == merge(S, B).
 
@@ -819,18 +869,16 @@ WHERE rn = 1
 )
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental UPSERT sink via foreachBatch: the event stream
-    arrives as 2 real micro-batches (time-split files,
-    maxFilesPerTrigger=1 — r16: latest-wins merges are associative,
-    so the final table is split-invariant and two triggers is the
-    minimum that still proves cross-batch MERGE; per-trigger planning
-    + state-table write was the row's dominant cost, guide §1.2)
-    and each batch MERGES its per-user latest
-    row into a keyed parquet state table — latest (ts, event_id) wins.
-    This is the production "stream → serving table" pattern
-    (foreachBatch + MERGE) that memory/append sinks can't express, and
-    the streaming twin of the batch merge_upsert operator; the
-    reference's validator holds exactly this latest-state-per-peer
-    table across rounds (reference neurons/validator.py:166-170).
+    arrives as 2 real micro-batches (:func:`_replay`; latest-wins
+    merges are associative, so the final table is split-invariant and
+    two triggers is the minimum that still proves cross-batch MERGE)
+    and each batch MERGES its per-user latest row into a keyed parquet
+    state table — latest (ts, event_id) wins. This is the production
+    "stream → serving table" pattern (foreachBatch + MERGE) that
+    memory/append sinks can't express, and the streaming twin of the
+    batch merge_upsert operator; the reference's validator holds
+    exactly this latest-state-per-peer table across rounds (reference
+    neurons/validator.py:166-170).
 
     Mechanics: each batch reduces to one row per user BEFORE the merge
     (batch-local row_number), then the merge re-ranks
@@ -844,92 +892,46 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle — regardless of how events are split across batches,
     because per-key latest-wins merges are associative."""
     import os
-    import shutil
     import tempfile
-    import time as _time
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
-    from pyspark.sql import Window
-
-    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
-    pdf_order = (
-        tbl.select(["ts", "event_id"])
-        .to_pandas()
-        .sort_values(["ts", "event_id"], kind="mergesort")
-        .index
-    )
-    tbl = tbl.take(pa.array(pdf_order, type=pa.int64()))
-    root = os.path.join(
-        tempfile.gettempdir(), f"mrs_upsert_{uuid.uuid4().hex[:12]}"
-    )
-    src = os.path.join(root, "src")
-    os.makedirs(src)
-    n_files = 2  # r16: two triggers — the minimum cross-batch merge
-    step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
     state = {"dir": None, "version": 0}
 
-    def upsert_batch(batch_df, batch_id):
-        # foreachBatch runs on the driver; the merge plan inside still
-        # executes distributed. The merge itself is the module-level
-        # upsert_latest_merge (replay-idempotent — see its docstring).
-        old = (
-            batch_df.sparkSession.read.parquet(state["dir"])
-            if state["dir"] is not None
-            else None
-        )
-        merged = upsert_latest_merge(old, batch_df)
-        state["version"] += 1
-        new_dir = os.path.join(root, f"state_v{state['version']}")
-        merged.write.parquet(new_dir)
-        state["dir"] = new_dir  # swap AFTER the write completes
+    with _replay(spark, sf_dir) as ev, tempfile.TemporaryDirectory(
+        prefix="mrs_upsert_", ignore_cleanup_errors=True
+    ) as root:
 
-    try:
-        for i in range(n_files):
-            p = os.path.join(src, f"part{i}.parquet")
-            pq_mod.write_table(tbl.slice(i * step, step), p)
-            os.utime(p, (now + i, now + i))
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
+        def upsert_batch(batch_df, batch_id):
+            # foreachBatch runs on the driver; the merge plan inside
+            # still executes distributed. The merge itself is the
+            # module-level upsert_latest_merge (replay-idempotent — see
+            # its docstring).
+            old = (
+                batch_df.sparkSession.read.parquet(state["dir"])
+                if state["dir"] is not None
+                else None
+            )
+            merged = upsert_latest_merge(old, batch_df)
+            state["version"] += 1
+            new_dir = os.path.join(root, f"state_v{state['version']}")
+            merged.write.parquet(new_dir)
+            state["dir"] = new_dir  # swap AFTER the write completes
+
         q = (
             ev.writeStream.foreachBatch(upsert_batch)
             .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", os.path.join(root, "ckpt")
-            )
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
             .start()
         )
         if not q.awaitTermination(300):
             q.stop()
             raise TimeoutError("upsert stream did not drain within 300s")
         if state["dir"] is None:  # empty fixture: no batch ever fired
-            from pyspark.sql.types import (
-                DoubleType,
-                LongType,
-                StructField,
-                StructType,
-            )
-
             return spark.createDataFrame(
                 [],
-                StructType(
-                    [
-                        StructField("user_id", LongType()),
-                        StructField("last_ts_us", LongType()),
-                        StructField("last_event_id", LongType()),
-                        StructField("last_value", DoubleType()),
-                    ]
-                ),
+                "user_id LONG, last_ts_us LONG, last_event_id LONG, "
+                "last_value DOUBLE",
             )
         return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -959,12 +961,12 @@ def stream_python_source_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned integer arithmetic, so the DuckDB oracle regenerates the
     whole stream from range(); counts are exact and the sum is
     decimal-stabilized, so the batched arrival order cannot move the
-    result. (r16, guide §1.2: each process_all trigger pays planning
-    + a Python source read + a state commit and the complete-mode
-    aggregate is arrival-split-invariant, so the bounded range drains
-    in the minimum TWO offset-bounded batches; the 4-batch offset
-    walk stays pinned by tests/test_streaming.py::
-    test_python_stream_source_spans_micro_batches.)"""
+    result. Each process_all trigger pays planning + a Python source
+    read + a state commit and the complete-mode aggregate is
+    arrival-split-invariant, so the bounded range drains in the
+    minimum TWO offset-bounded batches; the 4-batch offset walk stays
+    pinned by tests/test_streaming.py::
+    test_python_stream_source_spans_micro_batches."""
     from pyspark import cloudpickle as _cp
 
     from map_reduce_subnet_spark.sources import pydatasource as pds
@@ -1084,7 +1086,7 @@ def stream_python_sink_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = tempfile.mkdtemp(prefix="mrs_pystreamsink_")
     ckpt = os.path.join(out, "_ckpt")
     try:
-        # r16: 2 micro-batches (stream_python_source_true's rationale)
+        # 2 micro-batches (stream_python_source_true's rationale)
         # — the sink's per-batch commit-log discipline needs >= 2
         # committed batches to be exercised, which 2 still provides.
         ev = (
@@ -1160,10 +1162,11 @@ def stream_dedup_within_watermark_true(
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    # r16: first occurrences are emitted in their data batch; the
-    # no-data batch only evicts state — skip it.
-    return _run_to_memory_emit_on_arrival(
-        deduped.select("event_id", "event_type", "value"), spark
+    # each first occurrence is emitted in its data batch
+    return _run_to_memory(
+        deduped.select("event_id", "event_type", "value"),
+        spark,
+        emit_on_arrival=True,
     )
 
 
@@ -1186,7 +1189,7 @@ def stream_tumbling_distinct_true(spark: SparkSession, sf_dir: str) -> DataFrame
     every window is emitted and the result is deterministic on the
     static fixture.
 
-    BOUND-CHECKED oracle (the r7 sketch discipline applied to
+    BOUND-CHECKED oracle (the sketch discipline applied to
     STREAMING): the batch side recomputes each window's exact
     distinct count (the anchor the oracle reproduces) and the stream
     side's sketch estimate must sit within max(3, 5%·exact) —
@@ -1288,7 +1291,7 @@ def stream_pit_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING incremental materialized-view maintenance — the
     online half of mv_incremental_refresh, as stream_pit_join_true is
-    to join_point_in_time (VERDICT r8 #4): successive CHANGE FEEDS of
+    to join_point_in_time: successive CHANGE FEEDS of
     the versioned latest-state table (v1→v2, then v2→v3 — each a real
     CDC frame from VersionedTable.changes with pre-images) arrive as
     separate micro-batches of a file stream, and a foreachBatch
@@ -1484,791 +1487,250 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def cep_pattern_stream(ev: DataFrame) -> DataFrame:
-    """Live CEP over an event stream: per-user state = the last TWO
-    events (type, epoch-µs, id); each arriving event closes a match
-    iff (prev2, prev1, current) equals the stage sequence and the
-    anchor→close span is within CEP_SPAN_US — the
-    applyInPandasWithState form of operators/streaming_batch.py::
-    events_cep_pattern's lead() window, with APPEND output (a match
-    is emitted exactly once, when its closing event arrives; batches
-    with no completed match emit nothing for that user).
+def cep_stream(ev: DataFrame, pattern: str, ooo: bool) -> DataFrame:
+    """Live CEP over an event stream: per user, the stage sequence
+    CEP_STAGES (view → click → purchase) matched over the events in
+    (ts_us, event_id) order — the applyInPandasWithState twin of
+    operators/streaming_batch.py's events_cep_pattern
+    (``pattern="contiguous"``) and events_cep_gapped
+    (``pattern="gapped"``). APPEND output: a match is emitted exactly
+    once, when its closing event is SEALED (fed to the matcher); a
+    batch with no completed match emits nothing for that user. Exposed
+    module-level so tests can drive it over multi-batch sources.
 
-    Exposed module-level so tests can drive it over a multi-batch
-    source and prove the state carries PARTIAL matches across
-    micro-batch boundaries (a triple whose first two stages arrive in
-    batch k and whose close arrives in batch k+1 must still fire) —
-    the property the batch twin gets for free from its global sort
-    and a streaming CEP engine exists to provide.
+    One grouped-state step holds a reorder buffer and feeds its sealed
+    events to one of two matchers:
 
-    ARRIVAL-ORDER PRECONDITION (ADVICE r13): state is the last-two
-    events and sorting happens only WITHIN a micro-batch, so the
-    operator assumes per-user event-time monotone arrival ACROSS
-    triggers — an event arriving with ts_us earlier than the newest
-    event already in state (cross-batch late data) is folded into
-    state as if it were newest, which can fabricate or miss matches.
-    The harness feeds time-contiguous slices, which satisfies the
-    precondition by construction; a production deployment must either
-    feed from a source ordered per key (e.g. a keyed log partition)
-    or put a watermark-sorted buffer in front. This is the standard
-    contract for last-k-event CEP state; a full out-of-order CEP
-    needs an event buffer keyed by watermark, which is a different
-    (heavier) operator.
+    * ``ooo=False`` (in order): every arrival is sealed at once, in
+      (ts_us, event_id) order within its micro-batch, and the matcher
+      evicts against the batch's newest ts. No watermark, no timeout.
+      ARRIVAL-ORDER PRECONDITION: per-user event time must be monotone
+      ACROSS triggers. An event older than one already sealed is
+      sealed as if newest, which can fabricate or miss matches. The
+      time-contiguous replay satisfies this by construction; a
+      deployment feeds from a source ordered per key, or uses OOO mode.
+    * ``ooo=True`` (out of order): the watermark delay is
+      CEP_OOO_DELAY_US. Arrivals at or below the current watermark are
+      DROPPED (the watermark contract); the rest are buffered, and the
+      buffered prefix with ts <= watermark is sealed — every future
+      arrival has ts > watermark, so the sealed order is final and the
+      matches equal the batch twin's whatever the delivery order. The
+      matcher evicts against the watermark. FLUSH: groups are only
+      invoked on data, so while the buffer is non-empty an
+      EventTimeTimeout is registered at its oldest ts; the watermark
+      passing it re-invokes the group with no data, including in the
+      no-data batch after the last file. The buffer costs the user's
+      event rate × CEP_OOO_DELAY_US raw events.
 
-    Epoch microseconds are computed IN-PLAN (unix_micros) before the
-    stateful operator, never from the worker-side pandas timestamps:
-    Arrow renders TimestampType into pandas through the session time
-    zone, so a pandas .astype('int64') is only epoch-correct under
-    UTC — unix_micros is timezone-proof (span_us, a difference, would
-    survive either way; anchor_ts_us would not)."""
+    Matchers, each with its own state and output columns:
+
+    * contiguous: the last two events (type, ts, id). A sealed event
+      closes a match iff (prev2, prev1, it) equals the stage sequence
+      and anchor→close is within CEP_SPAN_US. O(1) per user, never
+      evicted.
+    * gapped (skip-till-next): a view is buffered; a click is THE
+      first following click of every buffered view — views within
+      CEP_GAP_US become open pairs, the rest die, the view buffer
+      clears; a purchase is THE first following purchase of every open
+      pair — pairs within CEP_GAP_US emit, the rest die, the pairs
+      clear. Views and pairs whose gap window has passed the eviction
+      horizon are dropped, so state is bounded by the user's event
+      rate × CEP_GAP_US: the price of dropping adjacency.
+
+    A group's state is removed once its buffer and matcher hold
+    nothing. Epoch microseconds are computed IN-PLAN (unix_micros),
+    never from worker-side pandas timestamps: Arrow renders TIMESTAMP
+    through the session time zone, so a pandas int64 cast is
+    epoch-correct only under UTC. Spark starts the watermark at epoch
+    0, so OOO mode drops pre-1970 events as late at stream start; in
+    order mode has no watermark and keeps them."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from map_reduce_subnet_spark.operators.streaming_batch import (
-        CEP_SPAN_US,
-        CEP_STAGES,
-    )
+    view, click, purchase = stages = tuple(CEP_STAGES)
 
-    stages = tuple(CEP_STAGES)
-    span = int(CEP_SPAN_US)
-    ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts")))
+    def columns(rows, n):
+        return [[r[i] for r in rows] for i in range(n)]
 
-    def match_cep(key, pdf_iter, state):
-        # closure: shipped by value; executors don't import this repo
-        import pandas as pd
-
-        if state.exists:
-            t1, t2, ts1, ts2, id1, id2 = state.get
-        else:
-            t1 = t2 = None
-            ts1 = ts2 = id1 = id2 = -1
-        rows = pd.concat(list(pdf_iter)).sort_values(["ts_us", "event_id"])
-        ts_us = rows["ts_us"]
-        out = []
-        for t3, ts3, id3 in zip(
-            rows["event_type"], ts_us, rows["event_id"]
-        ):
-            if (
-                (t1, t2, t3) == stages
-                and ts3 - ts1 <= span
-            ):
-                out.append((key[0], id1, int(id3), int(ts1),
-                            int(ts3 - ts1)))
-            t1, t2 = t2, str(t3)
-            ts1, ts2 = ts2, int(ts3)
-            id1, id2 = id2, int(id3)
-        state.update((t1, t2, ts1, ts2, id1, id2))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "anchor_event_id",
-                "close_event_id",
-                "anchor_ts_us",
-                "span_us",
-            ],
-        )
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        match_cep,
-        outputStructType=(
+    if pattern == "contiguous":
+        bound = int(CEP_SPAN_US)
+        fields = "t1 STRING, t2 STRING, ts1 LONG, ts2 LONG, id1 LONG, id2 LONG"
+        out_schema = (
             "user_id LONG, anchor_event_id LONG, close_event_id LONG, "
             "anchor_ts_us LONG, span_us LONG"
-        ),
-        stateStructType=(
-            "t1 STRING, t2 STRING, ts1 LONG, ts2 LONG, id1 LONG, id2 LONG"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-from map_reduce_subnet_spark.operators.streaming_batch import (  # noqa: E402
-    CEP_ORACLE as _CEP_ORACLE,
-)
-
-
-@query("stream_cep_true", oracle=_CEP_ORACLE)
-def stream_cep_true(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE streaming CEP — the state-store twin of
-    events_cep_pattern, driven over TWO time-contiguous micro-batches
-    (the stream_stateful_ema_batches harness): the events fixture is
-    split into 2 files fed one per trigger (ascending mtimes), so any
-    pattern occurrence straddling the file boundary is only found if
-    the per-user last-two-events state survives in the state store
-    between triggers. Append-mode emission = each match exactly once,
-    when its closing event arrives — which is why the union of all
-    batches' emissions equals the batch twin's full-fixture answer and
-    ONE oracle (CEP_ORACLE) certifies both keys. (r16, guide §1.2/§4:
-    the match set is split-invariant, each trigger pays micro-batch
-    planning + a 32-task Python stateful round trip + a state commit,
-    so the replay drains in the minimum two triggers; the 4-batch
-    boundary-straddle property stays pinned by tests/
-    test_streaming.py::test_cep_state_carries_partial_match_across_batches.)
-
-    Scale shape: state is O(1) per user (two tuples — type, ts, id),
-    the smallest state a 3-stage contiguous CEP can carry; each
-    micro-batch shuffles on user_id into the state store's
-    partitioning, exactly like the stateful EMA. Grounding: ordered
-    request/response step sequences per peer carried across rounds
-    (reference neurons/miner.py:151-169, validator.py:146)."""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
-    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
-    pdf_order = (
-        tbl.select(["ts", "event_id"])
-        .to_pandas()
-        .sort_values(["ts", "event_id"], kind="mergesort")
-        .index
-    )
-    tbl = tbl.take(pa.array(pdf_order, type=pa.int64()))
-    src = os.path.join(
-        tempfile.gettempdir(), f"mrs_cep_batches_{uuid.uuid4().hex[:12]}"
-    )
-    os.makedirs(src)
-    n_files = 2  # r16: two triggers — minimum cross-batch CEP state
-    step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
-    try:
-        for i in range(n_files):
-            p = os.path.join(src, f"part{i}.parquet")
-            pq_mod.write_table(tbl.slice(i * step, step), p)
-            os.utime(p, (now + i, now + i))  # mtime order = time order
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
-        sink = _run_to_memory(
-            cep_pattern_stream(ev), spark, output_mode="append"
-        )
-        rows = sink.collect()
-        schema = sink.schema
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
-
-
-def cep_gapped_stream(ev: DataFrame) -> DataFrame:
-    """Live NON-CONTIGUOUS bounded-gap CEP (the r14 state-store twin
-    of operators/streaming_batch.py::events_cep_gapped): per-user
-    state is the honest event BUFFER a gapped pattern needs — the
-    views still awaiting their first following click, and the
-    (view, click) pairs still awaiting their first following
-    purchase — with GAP-based eviction keeping it bounded by the
-    user's event rate × CEP_GAP_US, not O(1) like the contiguous
-    twin's last-two-events (a gapped match can stay open for the
-    whole gap window; that extra state IS the price of dropping
-    adjacency, and this operator makes it explicit).
-
-    Skip-till-next replay, processing each user's events in
-    (ts_us, event_id) sequence order:
-      * view    → buffer it (awaiting its first following click);
-      * click   → it is THE first following click for every buffered
-                  view: views within CEP_GAP_US become open pairs,
-                  the rest die (no backtracking — the as-of
-                  contract); the view buffer clears either way;
-      * purchase→ it is THE first following purchase for every open
-                  pair: pairs within CEP_GAP_US emit a match row
-                  (append mode — exactly once, when the closing
-                  event arrives), the rest die; open pairs clear.
-    End of batch: drop buffered views / open pairs whose gap window
-    has already passed relative to the newest event time seen
-    (monotone arrival makes the eviction safe — see the
-    ARRIVAL-ORDER PRECONDITION on cep_pattern_stream, which applies
-    verbatim here).
-
-    Epoch microseconds come from unix_micros IN-PLAN (timezone-proof,
-    the cep_pattern_stream discipline)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from map_reduce_subnet_spark.operators.streaming_batch import (
-        CEP_GAP_US,
-        CEP_STAGES,
-    )
-
-    stages = tuple(CEP_STAGES)
-    gap = int(CEP_GAP_US)
-    ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts")))
-
-    def match_gapped(key, pdf_iter, state):
-        # closure: shipped by value; executors don't import this repo
-        import pandas as pd
-
-        if state.exists:
-            vts, vid, pvts, pvid, pcts, pcid = state.get
-            views = list(zip(vts, vid))
-            pairs = list(zip(pvts, pvid, pcts, pcid))
-        else:
-            views, pairs = [], []
-        rows = pd.concat(list(pdf_iter)).sort_values(
-            ["ts_us", "event_id"]
-        )
-        out = []
-        max_ts = None
-        for t, ts, eid in zip(
-            rows["event_type"], rows["ts_us"], rows["event_id"]
-        ):
-            ts, eid = int(ts), int(eid)
-            max_ts = ts if max_ts is None else max(max_ts, ts)
-            if t == stages[0]:
-                views.append((ts, eid))
-            elif t == stages[1]:
-                pairs.extend(
-                    (v_ts, v_id, ts, eid)
-                    for v_ts, v_id in views
-                    if ts - v_ts <= gap
-                )
-                views = []
-            elif t == stages[2]:
-                out.extend(
-                    (key[0], v_id, c_id, eid, v_ts, ts - v_ts)
-                    for v_ts, v_id, c_ts, c_id in pairs
-                    if ts - c_ts <= gap
-                )
-                pairs = []
-        if max_ts is not None:
-            views = [v for v in views if max_ts - v[0] <= gap]
-            pairs = [p for p in pairs if max_ts - p[2] <= gap]
-        state.update(
-            (
-                [v[0] for v in views],
-                [v[1] for v in views],
-                [p[0] for p in pairs],
-                [p[1] for p in pairs],
-                [p[2] for p in pairs],
-                [p[3] for p in pairs],
-            )
-        )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "anchor_event_id",
-                "mid_event_id",
-                "close_event_id",
-                "anchor_ts_us",
-                "span_us",
-            ],
         )
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        match_gapped,
-        outputStructType=(
-            "user_id LONG, anchor_event_id LONG, mid_event_id LONG, "
-            "close_event_id LONG, anchor_ts_us LONG, span_us LONG"
-        ),
-        stateStructType=(
+        def load(s):
+            return list(s) if s else [None, None, -1, -1, -1, -1]
+
+        def step(m, uid, ts, eid, t, out):
+            t1, t2, ts1, ts2, id1, id2 = m
+            if (t1, t2, t) == stages and ts - ts1 <= bound:
+                out.append((uid, id1, eid, ts1, ts - ts1))
+            m[:] = [t2, t, ts2, ts, id2, eid]
+
+        def evict(m, horizon):
+            return m
+
+        def dump(m):
+            return tuple(m)
+
+    elif pattern == "gapped":
+        bound = int(CEP_GAP_US)
+        fields = (
             "vts ARRAY<LONG>, vid ARRAY<LONG>, pvts ARRAY<LONG>, "
             "pvid ARRAY<LONG>, pcts ARRAY<LONG>, pcid ARRAY<LONG>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-from map_reduce_subnet_spark.operators.streaming_batch import (  # noqa: E402
-    CEP_GAPPED_ORACLE as _CEP_GAPPED_ORACLE,
-)
-
-
-@query("stream_cep_gapped_true", oracle=_CEP_GAPPED_ORACLE)
-def stream_cep_gapped_true(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE streaming GAPPED CEP — the state-store twin of
-    events_cep_gapped, driven over TWO time-contiguous micro-batches
-    (the stream_cep_true harness verbatim): the events fixture is
-    split into 2 files fed one per trigger (ascending mtimes), so a
-    match whose stages straddle the file boundary is only found if
-    the buffered views / open pairs survive in the state store across
-    triggers — the property the contiguous twin proves for 2-event
-    state, proved here for the gapped buffer. Append-mode emission =
-    each match exactly once, when its closing purchase arrives, so
-    the union of batches equals the batch twin's full-fixture answer
-    and ONE oracle (CEP_GAPPED_ORACLE) certifies both keys. (r16:
-    split-invariant match set ⇒ minimum two triggers, same rationale
-    and test pin as stream_cep_true — the multi-boundary straddle
-    lives in tests/test_streaming.py::
-    test_cep_gapped_state_buffers_across_batches.)"""
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
-    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
-    pdf_order = (
-        tbl.select(["ts", "event_id"])
-        .to_pandas()
-        .sort_values(["ts", "event_id"], kind="mergesort")
-        .index
-    )
-    tbl = tbl.take(pa.array(pdf_order, type=pa.int64()))
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"mrs_cepg_batches_{uuid.uuid4().hex[:12]}",
-    )
-    os.makedirs(src)
-    n_files = 2  # r16: two triggers — minimum cross-batch CEP state
-    step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
-    try:
-        for i in range(n_files):
-            p = os.path.join(src, f"part{i}.parquet")
-            pq_mod.write_table(tbl.slice(i * step, step), p)
-            os.utime(p, (now + i, now + i))  # mtime order = time order
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
         )
-        sink = _run_to_memory(
-            cep_gapped_stream(ev), spark, output_mode="append"
+        out_schema = (
+            "user_id LONG, anchor_event_id LONG, mid_event_id LONG, "
+            "close_event_id LONG, anchor_ts_us LONG, span_us LONG"
         )
-        rows = sink.collect()
-        schema = sink.schema
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
+        def load(s):
+            if not s:
+                return [[], []]
+            vts, vid, pvts, pvid, pcts, pcid = s
+            return [list(zip(vts, vid)), list(zip(pvts, pvid, pcts, pcid))]
 
-# --- out-of-order gapped CEP (r15, VERDICT r14 #2) ----------------
-
-# The reorder window: an event may arrive up to this long (event
-# time) after a later-timestamped event and still be sequenced
-# correctly — the watermark delay of the OOO CEP stream. Events later
-# than this are dropped at arrival (the standard watermark contract;
-# the alternative — folding them into state as-if-newest, what the
-# monotone twins document — is exactly the dishonesty this operator
-# exists to remove).
-CEP_OOO_DELAY_US = 3_600_000_000  # 1 h
-
-# The harness's maximum delivery displacement: each event's delivery
-# key is ts + hash-jitter(event_id) with jitter < this, STRICTLY less
-# than CEP_OOO_DELAY_US, so by construction no event in the fixture
-# replay arrives later than the reorder window and the oracle
-# equality proves zero drops (30 min vs the fixture's ~3 min median
-# inter-event spacing: a typical event is displaced past ~10 others).
-CEP_OOO_JITTER_US = 1_800_000_000  # 30 min
-
-
-def cep_gapped_ooo_stream(ev: DataFrame) -> DataFrame:
-    """OUT-OF-ORDER live gapped CEP — cep_gapped_stream with the
-    monotone-arrival precondition REMOVED (VERDICT r14 next-round
-    #2): events may arrive in any order across and within triggers,
-    bounded by the CEP_OOO_DELAY_US watermark delay, and the match
-    semantics are still exactly events_cep_gapped's.
-
-    Mechanism: per-user state adds a REORDER BUFFER in front of the
-    gapped state machine. An arriving event is buffered, NOT fed to
-    the machine; on every invocation the buffer's prefix with
-    ts <= watermark is SEALED — fed to the machine in (ts_us,
-    event_id) sequence order — because the watermark contract
-    guarantees every future arrival has a strictly later ts (any
-    event arriving after the watermark reached w was delivered
-    within the delay of something newer, so its ts > w). Matches
-    therefore emit exactly once, when their closing purchase SEALS
-    (not when it arrives), regardless of delivery order. Arrivals
-    at or below the watermark (later than the reorder window) are
-    dropped — the documented watermark contract, same as every
-    watermarked aggregation; the harness's jitter < delay makes
-    this impossible on the fixture replay, which the shared-oracle
-    hash equality then proves.
-
-    Flushing without data: groups only get invoked on data, so the
-    final events of a bounded replay would otherwise stay buffered
-    forever. EventTimeTimeout covers it: whenever the buffer is
-    non-empty a timeout is registered at the oldest unsealed ts, so
-    the watermark passing it re-invokes the group with no data and
-    seals the newly-coverable prefix — including in the no-data
-    micro-batch Spark runs after the last file when the watermark
-    takes its final step.
-
-    State cost: the machine state is the gapped twin's (views + open
-    pairs, gap-evicted against the WATERMARK — safe, every unsealed
-    or future event is newer); the reorder buffer adds the user's
-    event rate x CEP_OOO_DELAY_US raw events — the price of
-    accepting late data, made explicit, exactly as the gap buffer
-    is the price of dropping adjacency.
-
-    Epoch convention: Spark initializes the watermark at epoch 0, so
-    pre-1970 event times would count as late at stream start — the
-    engine-wide negative-µs domain applies to the BATCH key; this
-    live twin documents the standard streaming epoch floor.
-
-    Grounding: late/stale handling in the reference's resync loop
-    (reference neurons/validator.py:166-170) — the reorder window is
-    the honest Spark-native form of "tolerate bounded staleness"."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from map_reduce_subnet_spark.operators.streaming_batch import (
-        CEP_GAP_US,
-        CEP_STAGES,
-    )
-
-    stages = tuple(CEP_STAGES)
-    gap = int(CEP_GAP_US)
-    ev = ev.withWatermark("ts", "1 hour")  # = CEP_OOO_DELAY_US
-    ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts")))
-
-    def match_gapped_ooo(key, pdf_iter, state):
-        # closure: shipped by value; executors don't import this repo
-        import pandas as pd
-
-        if state.exists:
-            (rts, rid, rtp, vts, vid, pvts, pvid, pcts, pcid) = state.get
-            buf = list(zip(rts, rid, rtp))
-            views = list(zip(vts, vid))
-            pairs = list(zip(pvts, pvid, pcts, pcid))
-        else:
-            buf, views, pairs = [], [], []
-        wm_ms = state.getCurrentWatermarkMs()
-        wm = wm_ms * 1000  # µs
-        for rows in pdf_iter:
-            for t, ts, eid in zip(
-                rows["event_type"], rows["ts_us"], rows["event_id"]
-            ):
-                ts, eid = int(ts), int(eid)
-                if ts <= wm:
-                    continue  # beyond the reorder window: dropped
-                buf.append((ts, eid, t))
-        buf.sort(key=lambda r: (r[0], r[1]))
-        sealed = [r for r in buf if r[0] <= wm]
-        buf = [r for r in buf if r[0] > wm]
-        out = []
-        for ts, eid, t in sealed:
-            if t == stages[0]:
+        def step(m, uid, ts, eid, t, out):
+            views, pairs = m
+            if t == view:
                 views.append((ts, eid))
-            elif t == stages[1]:
+            elif t == click:
                 pairs.extend(
                     (v_ts, v_id, ts, eid)
                     for v_ts, v_id in views
-                    if ts - v_ts <= gap
+                    if ts - v_ts <= bound
                 )
-                views = []
-            elif t == stages[2]:
+                views.clear()
+            elif t == purchase:
                 out.extend(
-                    (key[0], v_id, c_id, eid, v_ts, ts - v_ts)
+                    (uid, v_id, c_id, eid, v_ts, ts - v_ts)
                     for v_ts, v_id, c_ts, c_id in pairs
-                    if ts - c_ts <= gap
+                    if ts - c_ts <= bound
                 )
-                pairs = []
-        # gap eviction against the watermark: every event that can
-        # still seal has ts > wm, so a view/pair already out of gap
-        # range at wm can never close
-        views = [v for v in views if wm - v[0] <= gap]
-        pairs = [p for p in pairs if wm - p[2] <= gap]
-        if not buf and not views and not pairs:
+                pairs.clear()
+
+        def evict(m, horizon):
+            views, pairs = m
+            return [
+                [v for v in views if horizon - v[0] <= bound],
+                [p for p in pairs if horizon - p[2] <= bound],
+            ]
+
+        def dump(m):
+            return (*columns(m[0], 2), *columns(m[1], 4))
+
+    else:
+        raise ValueError(f"unknown CEP pattern {pattern!r}")
+
+    blank = dump(load(None))
+    n_buf = 3 if ooo else 0  # reorder-buffer columns: ts, id, type
+    out_cols = [c.split()[0] for c in out_schema.split(", ")]
+
+    def run(key, pdf_iter, state):
+        # closure: shipped by value; executors don't import this repo
+        import pandas as pd
+
+        s = state.get if state.exists else None
+        buf = list(zip(*s[:n_buf])) if s else []
+        m = load(s[n_buf:] if s else None)
+        arrivals = [
+            (int(ts), int(eid), t)
+            for rows in pdf_iter
+            for t, ts, eid in zip(
+                rows["event_type"], rows["ts_us"], rows["event_id"]
+            )
+        ]
+        if ooo:
+            wm_ms = state.getCurrentWatermarkMs()
+            horizon = wm_ms * 1000  # µs
+            arrivals = [r for r in arrivals if r[0] > horizon]
+        buf = sorted(buf + arrivals, key=lambda r: (r[0], r[1]))
+        if not ooo:
+            horizon = buf[-1][0]
+        n_sealed = sum(r[0] <= horizon for r in buf)  # a sorted prefix
+        out = []
+        for ts, eid, t in buf[:n_sealed]:
+            step(m, key[0], ts, eid, t, out)
+        buf = buf[n_sealed:]
+        m = evict(m, horizon)
+        if not buf and dump(m) == blank:
             state.remove()
         else:
-            state.update(
-                (
-                    [r[0] for r in buf],
-                    [r[1] for r in buf],
-                    [r[2] for r in buf],
-                    [v[0] for v in views],
-                    [v[1] for v in views],
-                    [p[0] for p in pairs],
-                    [p[1] for p in pairs],
-                    [p[2] for p in pairs],
-                    [p[3] for p in pairs],
-                )
-            )
+            state.update((*columns(buf, n_buf), *dump(m)))
             if buf:
-                # fire when the watermark can seal the oldest
-                # buffered event (strictly-greater contract: the
-                # registered ts must exceed the current watermark)
-                target_ms = -(-buf[0][0] // 1000)  # ceil to ms
-                state.setTimeoutTimestamp(max(target_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "anchor_event_id",
-                "mid_event_id",
-                "close_event_id",
-                "anchor_ts_us",
-                "span_us",
-            ],
-        )
+                # the timeout must exceed the current watermark
+                oldest_ms = -(-buf[0][0] // 1000)  # ceil to ms
+                state.setTimeoutTimestamp(max(oldest_ms, wm_ms + 1))
+        yield pd.DataFrame(out, columns=out_cols)
 
-    return ev.groupBy("user_id").applyInPandasWithState(
-        match_gapped_ooo,
-        outputStructType=(
-            "user_id LONG, anchor_event_id LONG, mid_event_id LONG, "
-            "close_event_id LONG, anchor_ts_us LONG, span_us LONG"
-        ),
-        stateStructType=(
-            "rts ARRAY<LONG>, rid ARRAY<LONG>, rtp ARRAY<STRING>, "
-            "vts ARRAY<LONG>, vid ARRAY<LONG>, pvts ARRAY<LONG>, "
-            "pvid ARRAY<LONG>, pcts ARRAY<LONG>, pcid ARRAY<LONG>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _write_ooo_cep_files(sf_dir: str, src: str, n_files: int = 2) -> None:
-    """Write the OOO delivery replay: the events fixture reordered by
-    (ts + jitter(event_id)) — jitter deterministic, bounded by
-    CEP_OOO_JITTER_US < CEP_OOO_DELAY_US so nothing is ever late
-    beyond the reorder window — split into n_files ascending-mtime
-    parquet files, with one WATERMARK-ADVANCER row appended to the
-    LAST file: a single non-stage event (user -1) timestamped
-    delay-past the fixture maximum, so the no-data batch after the
-    last file's trigger has a watermark past every real event and the
-    EventTimeTimeout flush seals them all.
-
-    r16 trigger economics (guide §1.2/§4): each trigger pays
-    micro-batch planning + a 32-task Python stateful round trip + a
-    state-store commit, and the emitted match set is invariant to how
-    the delivery is split (every event is buffered until the
-    watermark seals it, and the watermark only moves BETWEEN
-    triggers). The replay therefore drains in n_files=2 data triggers
-    + 1 timeout-flush batch instead of the previous 4 + 1 advancer +
-    1 flush — same final rows, half the trigger floors. The advancer
-    rides IN the last data file rather than as its own trigger: while
-    its batch runs the watermark still predates it, so it is buffered
-    exactly as before, and the post-batch watermark step is identical
-    to the one the dedicated advancer batch used to produce. Deeper
-    cross-boundary delivery stays pinned by the 4-file random-split
-    property tests (tests/test_streaming.py::
-    test_cep_gapped_ooo_matches_batch_under_random_bounded_delivery)."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
-    tbl = pq_mod.read_table(f"{sf_dir}/events.parquet")
-    ts_us = (
-        tbl.column("ts")
-        .to_pandas()
-        .values.astype("datetime64[us]")
-        .astype("int64")
-    )
-    eid = tbl.column("event_id").to_pandas().values.astype("int64")
-    jitter = ((eid * 2654435761) % (1 << 32)) % CEP_OOO_JITTER_US
-    import numpy as np
-
-    order = np.lexsort((eid, ts_us + jitter))
-    tbl = tbl.take(pa.array(order, type=pa.int64()))
-    step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
-    adv = None
-    if tbl.num_rows:
-        adv_ts = int(ts_us.max()) + CEP_OOO_DELAY_US + 1_000_000
-        adv = pa.table(
-            {
-                "event_id": pa.array([-1], pa.int64()),
-                "ts": pa.array([adv_ts], pa.timestamp("us")),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["__advance__"], pa.string()),
-                "value": pa.array([None], pa.float64()),
-                "props": pa.array([None], pa.string()),
-            }
-        ).select(tbl.schema.names)
-        adv = adv.cast(tbl.schema)
-    for i in range(n_files):
-        part = tbl.slice(i * step, step)
-        if adv is not None and i == n_files - 1:
-            part = pa.concat_tables([part, adv])
-        p = os.path.join(src, f"part{i}.parquet")
-        pq_mod.write_table(part, p)
-        os.utime(p, (now + i, now + i))  # mtime order = delivery order
-
-
-@query("stream_cep_gapped_ooo", oracle=_CEP_GAPPED_ORACLE)
-def stream_cep_gapped_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE streaming gapped CEP over an OUT-OF-ORDER delivery — the
-    r15 robustness step the monotone twins document as missing
-    (VERDICT r14 #2): the same events fixture is replayed with each
-    event displaced by a deterministic bounded jitter
-    (< CEP_OOO_JITTER_US) and split into 2 micro-batch files, so
-    stage events of one match routinely arrive out of sequence and
-    across the trigger boundary — a watermark-advancer row in the
-    last file lets the final no-data batch seal the tail (r16: see
-    _write_ooo_cep_files for the trigger economics; the emitted set
-    is delivery-split-invariant). cep_gapped_ooo_stream
-    buffers arrivals per user and feeds the gapped state machine only
-    the watermark-sealed prefix, so the emitted match set is
-    IDENTICAL to the in-order twins' and the shared batch oracle
-    (CEP_GAPPED_ORACLE) certifies all three keys — exactly-once
-    emission now proven without any arrival-order precondition."""
-    import os
-    import shutil
-    import tempfile
-
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"mrs_cepooo_batches_{uuid.uuid4().hex[:12]}",
-    )
-    os.makedirs(src)
-    try:
-        _write_ooo_cep_files(sf_dir, src)
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
-        sink = _run_to_memory(
-            cep_gapped_ooo_stream(ev), spark, output_mode="append"
-        )
-        rows = sink.collect()
-        schema = sink.schema
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
-
-
-def cep_ooo_stream(ev: DataFrame) -> DataFrame:
-    """OUT-OF-ORDER live CONTIGUOUS CEP — cep_pattern_stream with its
-    ARRIVAL-ORDER PRECONDITION removed, completing the OOO family
-    (the gapped variant landed first; the mechanism is the same
-    watermark-sealed reorder buffer, here in front of the O(1)
-    last-two-events machine). Contiguous semantics are MORE sensitive
-    to arrival order than gapped ones: an interloper folded
-    as-if-newest doesn't just shift a match, it decides adjacency —
-    so the discriminating failure of the monotone fold is fabricating
-    a match that the event-time order breaks (pinned by test).
-
-    Buffer/seal/flush contract identical to cep_gapped_ooo_stream
-    (watermark seal in (ts_us, event_id) order, too-late arrivals
-    dropped, EventTimeTimeout + advancer-file tail flush); machine
-    state is the in-order twin's last-two tuple and — unlike the
-    gapped buffer — needs no eviction (O(1) per user, kept for the
-    stream's lifetime exactly like the in-order twin)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from map_reduce_subnet_spark.operators.streaming_batch import (
-        CEP_SPAN_US,
-        CEP_STAGES,
-    )
-
-    stages = tuple(CEP_STAGES)
-    span = int(CEP_SPAN_US)
-    ev = ev.withWatermark("ts", "1 hour")  # = CEP_OOO_DELAY_US
+    if ooo:
+        ev = ev.withWatermark("ts", "1 hour")  # = CEP_OOO_DELAY_US
     ev = ev.withColumn("ts_us", F.unix_micros(F.col("ts")))
-
-    def match_cep_ooo(key, pdf_iter, state):
-        # closure: shipped by value; executors don't import this repo
-        import pandas as pd
-
-        if state.exists:
-            (rts, rid, rtp, t1, t2, ts1, ts2, id1, id2) = state.get
-            buf = list(zip(rts, rid, rtp))
-        else:
-            buf = []
-            t1 = t2 = None
-            ts1 = ts2 = id1 = id2 = -1
-        wm_ms = state.getCurrentWatermarkMs()
-        wm = wm_ms * 1000  # µs
-        for rows in pdf_iter:
-            for t, ts, eid in zip(
-                rows["event_type"], rows["ts_us"], rows["event_id"]
-            ):
-                ts, eid = int(ts), int(eid)
-                if ts <= wm:
-                    continue  # beyond the reorder window: dropped
-                buf.append((ts, eid, t))
-        buf.sort(key=lambda r: (r[0], r[1]))
-        sealed = [r for r in buf if r[0] <= wm]
-        buf = [r for r in buf if r[0] > wm]
-        out = []
-        for ts3, id3, t3 in sealed:
-            if (t1, t2, t3) == stages and ts3 - ts1 <= span:
-                out.append((key[0], id1, id3, ts1, ts3 - ts1))
-            t1, t2 = t2, str(t3)
-            ts1, ts2 = ts2, ts3
-            id1, id2 = id2, id3
-        if not buf and t1 is None and t2 is None:
-            state.remove()  # nothing ever sealed or pending
-        else:
-            state.update(
-                (
-                    [r[0] for r in buf],
-                    [r[1] for r in buf],
-                    [r[2] for r in buf],
-                    t1,
-                    t2,
-                    ts1,
-                    ts2,
-                    id1,
-                    id2,
-                )
-            )
-            if buf:
-                target_ms = -(-buf[0][0] // 1000)  # ceil to ms
-                state.setTimeoutTimestamp(max(target_ms, wm_ms + 1))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "anchor_event_id",
-                "close_event_id",
-                "anchor_ts_us",
-                "span_us",
-            ],
-        )
-
+    buffer_fields = "rts ARRAY<LONG>, rid ARRAY<LONG>, rtp ARRAY<STRING>, "
     return ev.groupBy("user_id").applyInPandasWithState(
-        match_cep_ooo,
-        outputStructType=(
-            "user_id LONG, anchor_event_id LONG, close_event_id LONG, "
-            "anchor_ts_us LONG, span_us LONG"
-        ),
-        stateStructType=(
-            "rts ARRAY<LONG>, rid ARRAY<LONG>, rtp ARRAY<STRING>, "
-            "t1 STRING, t2 STRING, ts1 LONG, ts2 LONG, id1 LONG, id2 LONG"
-        ),
+        run,
+        outputStructType=out_schema,
+        stateStructType=(buffer_fields if ooo else "") + fields,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if ooo
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 
-@query("stream_cep_ooo", oracle=_CEP_ORACLE)
+@query("stream_cep_true", oracle=CEP_ORACLE)
+def stream_cep_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LIVE contiguous CEP, the state-store twin of events_cep_pattern,
+    over the 2-trigger time-contiguous replay: a pattern straddling the
+    file boundary is found only if the last-two-events state survives
+    between triggers. Each match is emitted once, when its closing
+    event arrives, so the union of the batches equals the batch twin's
+    answer and ONE oracle (CEP_ORACLE) certifies both keys. The
+    boundary straddle is pinned by tests/test_streaming.py::
+    test_cep_state_carries_partial_match_across_batches.
+
+    Grounding: ordered request/response step sequences per peer carried
+    across rounds (reference neurons/miner.py:151-169, validator.py:146)."""
+    with _replay(spark, sf_dir) as ev:
+        return _run_to_memory(cep_stream(ev, "contiguous", ooo=False), spark)
+
+
+@query("stream_cep_gapped_true", oracle=CEP_GAPPED_ORACLE)
+def stream_cep_gapped_true(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LIVE gapped CEP, the state-store twin of events_cep_gapped, over
+    the 2-trigger time-contiguous replay: a match whose stages straddle
+    the boundary is found only if the buffered views and open pairs
+    survive between triggers. CEP_GAPPED_ORACLE certifies both keys; the
+    three-batch straddle is pinned by tests/test_streaming.py::
+    test_cep_gapped_state_buffers_across_batches."""
+    with _replay(spark, sf_dir) as ev:
+        return _run_to_memory(cep_stream(ev, "gapped", ooo=False), spark)
+
+
+@query("stream_cep_gapped_ooo", oracle=CEP_GAPPED_ORACLE)
+def stream_cep_gapped_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LIVE gapped CEP over an OUT-OF-ORDER delivery: the fixture is
+    replayed with each event displaced by a bounded jitter (< the
+    reorder window) in 2 files plus the in-file watermark advancer, so
+    the stages of one match routinely arrive out of sequence and across
+    the trigger boundary. The reorder buffer seals events in event-time
+    order, so the emitted set equals the in-order twins' and
+    CEP_GAPPED_ORACLE certifies all three keys without any
+    arrival-order precondition."""
+    with _replay(spark, sf_dir, ooo=True) as ev:
+        return _run_to_memory(cep_stream(ev, "gapped", ooo=True), spark)
+
+
+@query("stream_cep_ooo", oracle=CEP_ORACLE)
 def stream_cep_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LIVE streaming CONTIGUOUS CEP over an OUT-OF-ORDER delivery —
-    the stream_cep_gapped_ooo harness verbatim (bounded-jitter
-    2-file replay + watermark-advancer row in the last file, see
-    _write_ooo_cep_files) driving cep_ooo_stream, so the contiguous
-    pattern family now also has its no-arrival-order-precondition
-    member and ONE oracle (CEP_ORACLE) certifies all three contiguous
-    keys. Matches emit exactly once when their closing event SEALS;
-    the emitted set is identical to the in-order twins' by the
-    watermark-seal argument (every future arrival is strictly newer
-    than the sealed prefix)."""
-    import os
-    import shutil
-    import tempfile
-
-    src = os.path.join(
-        tempfile.gettempdir(),
-        f"mrs_cepco_batches_{uuid.uuid4().hex[:12]}",
-    )
-    os.makedirs(src)
-    try:
-        _write_ooo_cep_files(sf_dir, src)
-        ev = _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
-        sink = _run_to_memory(
-            cep_ooo_stream(ev), spark, output_mode="append"
-        )
-        rows = sink.collect()
-        schema = sink.schema
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
+    """LIVE contiguous CEP over the OUT-OF-ORDER delivery of
+    stream_cep_gapped_ooo. Contiguous matching is the more
+    order-sensitive one: an interloper sealed as if newest decides
+    adjacency, so folding arrivals in delivery order would fabricate
+    matches (pinned by test). CEP_ORACLE certifies all three contiguous
+    keys."""
+    with _replay(spark, sf_dir, ooo=True) as ev:
+        return _run_to_memory(cep_stream(ev, "contiguous", ooo=True), spark)

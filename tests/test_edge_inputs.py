@@ -309,7 +309,7 @@ _EMPTY_SWEEP_KEYS = (
     "sim_ann_ivfpq",             # empty corpus: degenerate codebook
     # -> stable-schema empty frame (the pq_adc/ivf_kmeans posture)
     "multimodal_probe_mp4",      # empty documents: no blobs, no rows
-    "stream_cep_gapped_true",    # 4 empty micro-batch files: empty
+    "stream_cep_gapped_true",    # 2 empty micro-batch files: empty
     # buffers, no state, no rows
     # round-15 additions:
     "stream_cep_gapped_ooo",     # empty replay: no advancer file is
@@ -324,7 +324,7 @@ _EMPTY_SWEEP_KEYS = (
     # explicit read-back schema is what makes a footer-less partition
     # dir readable (caught by this sweep when the key was added)
     "dedup_fuzzy_blocked",       # empty corpus: no blocks, no pairs
-    "stream_cep_true",           # 4 empty micro-batch files, no state
+    "stream_cep_true",           # 2 empty micro-batch files, no state
 )
 
 

@@ -30,6 +30,45 @@ def _sorted(df: pd.DataFrame) -> pd.DataFrame:
     return df[cols].sort_values(cols).reset_index(drop=True)
 
 
+def _events(rows):
+    """An events table from (event_id, ts_us, user_id, event_type)
+    tuples; value and props are constant."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array([r[3] for r in rows], pa.string()),
+            "value": pa.array([1.0] * len(rows), pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }
+    )
+
+
+def _file_stream(spark, src, tables):
+    """Write each events table as one parquet file in the new dir
+    ``src`` with ascending mtimes and return a stream that reads them
+    one per trigger, in that order."""
+    import os
+    import time as _time
+
+    import pyarrow.parquet as pq_mod
+
+    from map_reduce_subnet_spark.streaming.jobs import _read_events_stream
+
+    src.mkdir()
+    now = _time.time()
+    for i, t in enumerate(tables):
+        p = str(src / f"part{i}.parquet")
+        pq_mod.write_table(t, p)
+        os.utime(p, (now + i, now + i))  # mtime order = delivery order
+    return _read_events_stream(
+        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
+    )
+
+
 def test_stream_tumbling_matches_batch(spark):
     """Append-mode semantics: windows still inside the final watermark
     (max event time − 10 min) never close, so the stream emits exactly
@@ -169,13 +208,9 @@ def test_stateful_ema_state_carries_across_micro_batches(spark, tmp_path):
     closed form, and users appearing in several batches emit a running
     row per batch (update mode), proving state survived between
     triggers."""
-    import os
-    import time as _time
-
     import pyarrow.parquet as pq_mod
 
     from map_reduce_subnet_spark.streaming.jobs import (
-        _read_events_stream,
         _run_to_memory,
         stateful_ema,
     )
@@ -183,19 +218,10 @@ def test_stateful_ema_state_carries_across_micro_batches(spark, tmp_path):
     tbl = pq_mod.read_table(f"{SF_DIR}/events.parquet")
     order = tbl.column("ts").to_pandas().sort_values(kind="mergesort").index
     tbl = tbl.take(list(order))
-    src = tmp_path / "events_stream"
-    src.mkdir()
     n_files = 4
     step = (tbl.num_rows + n_files - 1) // n_files
-    now = _time.time()
-    for i in range(n_files):
-        p = src / f"part{i}.parquet"
-        pq_mod.write_table(tbl.slice(i * step, step), p)
-        os.utime(p, (now + i, now + i))  # mtime order = time order
-
-    ev = _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    parts = [tbl.slice(i * step, step) for i in range(n_files)]
+    ev = _file_stream(spark, tmp_path / "events_stream", parts)
     sink = _run_to_memory(stateful_ema(ev), spark, output_mode="update").toPandas()
 
     # multiple batches really happened: users seen in >1 batch emit >1
@@ -602,16 +628,9 @@ def test_cep_state_carries_partial_match_across_batches(spark, tmp_path):
     pins append-mode exactly-once (the boundary match is emitted in
     exactly one batch) and the no-match case (a user whose triple
     never completes emits nothing)."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
     from map_reduce_subnet_spark.streaming.jobs import (
-        _read_events_stream,
         _run_to_memory,
-        cep_pattern_stream,
+        cep_stream,
     )
 
     base = 1_700_000_000_000_000  # µs
@@ -630,32 +649,14 @@ def test_cep_state_carries_partial_match_across_batches(spark, tmp_path):
         (23, base + 3 * m, 2, "purchase"),
     ]
 
-    def tbl(rows):
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows]),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-
-    src = tmp_path / "cep_batches"
-    src.mkdir()
-    now = _time.time()
-    for i, rows in enumerate((f0, f1)):
-        p = str(src / f"part{i}.parquet")
-        pq_mod.write_table(tbl(rows), p)
-        os.utime(p, (now + i, now + i))
-    ev = _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    batches = [_events(r) for r in (f0, f1)]
+    ev = _file_stream(spark, tmp_path / "cep_batches", batches)
     got = sorted(
         tuple(r)
         for r in _run_to_memory(
-            cep_pattern_stream(ev), spark, output_mode="append"
+            cep_stream(ev, "contiguous", ooo=False),
+            spark,
+            output_mode="append",
         ).collect()
     )
     assert got == [(1, 10, 12, base, 2 * m)], got
@@ -670,16 +671,9 @@ def test_cep_gapped_state_buffers_across_batches(spark, tmp_path):
     skip-till-next no-backtracking rule across a boundary (the first
     click after a view is its match even when a later, in-gap click
     arrives in the next batch) and append-mode exactly-once."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
     from map_reduce_subnet_spark.streaming.jobs import (
-        _read_events_stream,
         _run_to_memory,
-        cep_gapped_stream,
+        cep_stream,
     )
 
     base = 1_700_000_000_000_000  # µs
@@ -706,32 +700,14 @@ def test_cep_gapped_state_buffers_across_batches(spark, tmp_path):
         (23, base + 14 * h, 2, "purchase"),
     ]
 
-    def tbl(rows):
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows]),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-
-    src = tmp_path / "cepg_batches"
-    src.mkdir()
-    now = _time.time()
-    for i, rows in enumerate((f0, f1, f2)):
-        p = str(src / f"part{i}.parquet")
-        pq_mod.write_table(tbl(rows), p)
-        os.utime(p, (now + i, now + i))
-    ev = _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    batches = [_events(r) for r in (f0, f1, f2)]
+    ev = _file_stream(spark, tmp_path / "cepg_batches", batches)
     got = sorted(
         tuple(r)
         for r in _run_to_memory(
-            cep_gapped_stream(ev), spark, output_mode="append"
+            cep_stream(ev, "gapped", ooo=False),
+            spark,
+            output_mode="append",
         ).collect()
     )
     assert got == [(1, 10, 12, 13, base, 3 * h)], got
@@ -751,17 +727,10 @@ def test_cep_gapped_ooo_boundary_match_out_of_order(spark, tmp_path):
     as-if-newest would wrongly emit here). The final watermark-
     advancer file (user -1, non-stage type) lets the no-data batch
     seal the tail via EventTimeTimeout."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
     from map_reduce_subnet_spark.streaming.jobs import (
         CEP_OOO_DELAY_US,
-        _read_events_stream,
         _run_to_memory,
-        cep_gapped_ooo_stream,
+        cep_stream,
     )
 
     base = 1_700_000_000_000_000  # µs
@@ -787,32 +756,14 @@ def test_cep_gapped_ooo_boundary_match_out_of_order(spark, tmp_path):
     adv_ts = base + 20 * m + CEP_OOO_DELAY_US + 1_000_000
     f3 = [(-1, adv_ts, -1, "__advance__")]
 
-    def tbl(rows):
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows]),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-
-    src = tmp_path / "cepooo_batches"
-    src.mkdir()
-    now = _time.time()
-    for i, rows in enumerate((f0, f1, f2, f3)):
-        p = str(src / f"part{i}.parquet")
-        pq_mod.write_table(tbl(rows), p)
-        os.utime(p, (now + i, now + i))
-    ev = _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    batches = [_events(r) for r in (f0, f1, f2, f3)]
+    ev = _file_stream(spark, tmp_path / "cepooo_batches", batches)
     got = sorted(
         tuple(r)
         for r in _run_to_memory(
-            cep_gapped_ooo_stream(ev), spark, output_mode="append"
+            cep_stream(ev, "gapped", ooo=True),
+            spark,
+            output_mode="append",
         ).collect()
     )
     assert got == [(1, 10, 11, 12, base, 20 * m)], got
@@ -826,10 +777,9 @@ def test_cep_gapped_ooo_matches_batch_under_random_bounded_delivery(
     uniform jitter per event, strictly inside the 1 h reorder window)
     must both reproduce the BATCH events_cep_gapped answer exactly —
     the match set is a function of event time only, never of arrival
-    order. This is the property the monotone twins could not state."""
-    import os
-    import time as _time
-
+    order. This is the property the monotone twins could not state.
+    The time-sorted delivery (no jitter, no advancer) driven through
+    the in-order modes must reproduce both batch twins too."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
@@ -837,10 +787,8 @@ def test_cep_gapped_ooo_matches_batch_under_random_bounded_delivery(
     from map_reduce_subnet_spark.operators import QUERIES
     from map_reduce_subnet_spark.streaming.jobs import (
         CEP_OOO_DELAY_US,
-        _read_events_stream,
         _run_to_memory,
-        cep_gapped_ooo_stream,
-        cep_ooo_stream,
+        cep_stream,
     )
 
     rng = np.random.RandomState(20260817)
@@ -878,6 +826,22 @@ def test_cep_gapped_ooo_matches_batch_under_random_bounded_delivery(
     )
     assert want_contig, "degenerate corpus: no contiguous matches"
 
+    def files(order):
+        shuffled = tbl.take(pa.array(order, type=pa.int64()))
+        step = (n + 3) // 4  # 4 files
+        return [shuffled.slice(i * step, step) for i in range(4)]
+
+    def drain(name, tables, pattern, ooo):
+        ev = _file_stream(spark, tmp_path / name, tables)
+        return sorted(
+            tuple(r)
+            for r in _run_to_memory(
+                cep_stream(ev, pattern, ooo), spark, output_mode="append"
+            ).collect()
+        )
+
+    adv_ts = int(ts.max()) + CEP_OOO_DELAY_US + 1_000_000
+    advancer = _events([(-1, adv_ts, -1, "__advance__")])
     jitter_bound = CEP_OOO_DELAY_US // 2
     for perm in range(2):
         order = np.lexsort(
@@ -886,60 +850,20 @@ def test_cep_gapped_ooo_matches_batch_under_random_bounded_delivery(
                 ts + rng.randint(0, jitter_bound, size=n).astype("int64"),
             )
         )
-        shuffled = tbl.take(pa.array(order, type=pa.int64()))
-        src = tmp_path / f"delivery{perm}"
-        src.mkdir()
-        now = _time.time()
-        n_files = 4
-        step = (n + n_files - 1) // n_files
-        for i in range(n_files):
-            p = str(src / f"part{i}.parquet")
-            pq_mod.write_table(shuffled.slice(i * step, step), p)
-            os.utime(p, (now + i, now + i))
-        adv = pa.table(
-            {
-                "event_id": pa.array([-1], pa.int64()),
-                "ts": pa.array(
-                    [int(ts.max()) + CEP_OOO_DELAY_US + 1_000_000],
-                    pa.timestamp("us"),
-                ),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["__advance__"]),
-                "value": pa.array([1.0]),
-                "props": pa.array(["{}"]),
-            }
-        )
-        p = str(src / f"part{n_files}.parquet")
-        pq_mod.write_table(adv, p)
-        os.utime(p, (now + n_files, now + n_files))
-        ev = _read_events_stream(
-            spark,
-            str(src / "part0.parquet"),
-            str(src),
-            maxFilesPerTrigger="1",
-        )
-        got = sorted(
-            tuple(r)
-            for r in _run_to_memory(
-                cep_gapped_ooo_stream(ev), spark, output_mode="append"
-            ).collect()
-        )
+        delivery = files(order) + [advancer]
+        got = drain(f"delivery{perm}g", delivery, "gapped", True)
         assert got == want, f"permutation {perm} diverged (gapped)"
-        ev2 = _read_events_stream(
-            spark,
-            str(src / "part0.parquet"),
-            str(src),
-            maxFilesPerTrigger="1",
-        )
-        got2 = sorted(
-            tuple(r)
-            for r in _run_to_memory(
-                cep_ooo_stream(ev2), spark, output_mode="append"
-            ).collect()
-        )
+        got2 = drain(f"delivery{perm}c", delivery, "contiguous", True)
         assert got2 == want_contig, (
             f"permutation {perm} diverged (contiguous)"
         )
+    # ts is sorted and event_id is the row number: already in
+    # (ts, event_id) order
+    in_order = files(np.arange(n))
+    got = drain("sorted_g", in_order, "gapped", False)
+    assert got == want, "time-sorted delivery diverged (gapped)"
+    got2 = drain("sorted_c", in_order, "contiguous", False)
+    assert got2 == want_contig, "time-sorted delivery diverged (contiguous)"
 
 
 def test_cep_ooo_contiguous_boundary_and_fabrication_guard(
@@ -953,17 +877,10 @@ def test_cep_ooo_contiguous_boundary_and_fabrication_guard(
     times interleave an error between view and click, so the correct
     sequencer must NOT fire: contiguous semantics make as-if-newest
     folding fabricate matches, not just shift them."""
-    import os
-    import time as _time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_mod
-
     from map_reduce_subnet_spark.streaming.jobs import (
         CEP_OOO_DELAY_US,
-        _read_events_stream,
         _run_to_memory,
-        cep_ooo_stream,
+        cep_stream,
     )
 
     base = 1_700_000_000_000_000  # µs
@@ -988,32 +905,55 @@ def test_cep_ooo_contiguous_boundary_and_fabrication_guard(
     adv_ts = base + 20 * m + CEP_OOO_DELAY_US + 1_000_000
     f3 = [(-1, adv_ts, -1, "__advance__")]
 
-    def tbl(rows):
-        return pa.table(
-            {
-                "event_id": pa.array([r[0] for r in rows], pa.int64()),
-                "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                "user_id": pa.array([r[2] for r in rows], pa.int64()),
-                "event_type": pa.array([r[3] for r in rows]),
-                "value": pa.array([1.0] * len(rows), pa.float64()),
-                "props": pa.array(["{}"] * len(rows)),
-            }
-        )
-
-    src = tmp_path / "cepco_batches"
-    src.mkdir()
-    now = _time.time()
-    for i, rows in enumerate((f0, f1, f2, f3)):
-        p = str(src / f"part{i}.parquet")
-        pq_mod.write_table(tbl(rows), p)
-        os.utime(p, (now + i, now + i))
-    ev = _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    batches = [_events(r) for r in (f0, f1, f2, f3)]
+    ev = _file_stream(spark, tmp_path / "cepco_batches", batches)
     got = sorted(
         tuple(r)
         for r in _run_to_memory(
-            cep_ooo_stream(ev), spark, output_mode="append"
+            cep_stream(ev, "contiguous", ooo=True),
+            spark,
+            output_mode="append",
         ).collect()
     )
     assert got == [(1, 10, 12, base, 20 * m)], got
+
+
+def test_emit_on_arrival_restores_conf_before_drain(
+    spark, tmp_path, monkeypatch
+):
+    """``emit_on_arrival=True`` must skip the no-data micro-batch
+    without leaving the session-wide conf flipped while the stream
+    drains: the query snapshots its conf at start(), so the session
+    is restored before awaitTermination. The watermarked dedup still
+    emits every first occurrence, and no zero-input batch runs."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prior = spark.conf.get(key, "true")
+    base = 1_700_000_000_000_000  # µs
+    m = 60_000_000  # one minute
+    # event_ids 0-4, each seen twice 5 minutes apart
+    rows = [(i % 5, base + i * m, 1, "view") for i in range(10)]
+    ev = _file_stream(spark, tmp_path / "dedup", [_events(rows)])
+    drains = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, timeout=None):
+        drains.append((self, spark.conf.get(key, "true")))
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    deduped = ev.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
+    got = _run_to_memory(
+        deduped.select("event_id"), spark, emit_on_arrival=True
+    ).collect()
+
+    assert [conf for _, conf in drains] == [prior]
+    assert sorted(r.event_id for r in got) == [0, 1, 2, 3, 4]
+    progress = drains[0][0].recentProgress
+    assert progress, "no micro-batch ran"
+    assert all(p.numInputRows > 0 for p in progress), [
+        p.numInputRows for p in progress
+    ]
