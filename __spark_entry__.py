@@ -38,33 +38,33 @@ SWEEP_CAP = 50
 
 _SWEEP_PRIORITY = [
     # --- FRESHNESS SCHEDULE ---
-    # Composition, auditable sum: 0 new + 44 changed (27 carried + 17
-    # this change) + 6 backfill = 50 = SWEEP_CAP. The 27 carried keys
-    # changed in the previous rotation and have no CORRECTNESS
-    # row for their current program yet, so they stay. Backfill cohorts
-    # are COMPUTED from the CORRECTNESS_r01..r16 union (latest green
-    # row per key), not hand-copied: the three keys that did not fit
-    # last time lead, then the r11-vintage cohort in sorted order. The
-    # changed-key rule is mechanized: scripts/fingerprints.py records
-    # key -> md5(oracle + engine source) per rotation, and
-    # tests/test_correctness.py fails if any fingerprint changed
-    # without the key appearing here.
+    # Composition, auditable sum: 0 new + 47 changed (27 carried + 20
+    # this change) + 3 backfill = 50 = SWEEP_CAP. The 27 carried keys
+    # changed in an earlier rotation and have no CORRECTNESS row for
+    # their current program yet, so they stay. Backfill cohorts are
+    # COMPUTED from the CORRECTNESS_r01..r16 union (latest green row per
+    # key), not hand-copied: the keys that did not fit last time lead,
+    # then the r11-vintage cohort in sorted order. The changed-key rule
+    # is mechanized: scripts/fingerprints.py records key -> md5(oracle +
+    # engine source) per rotation, and tests/test_correctness.py fails
+    # if any fingerprint changed without the key appearing here.
     #
-    # (1a) changed this rotation: every streaming drain through
-    # _run_to_memory (its no-data-batch conf is now scoped to stream
-    # start), the four CEP keys (one cep_stream operator) and the
-    # replay consumers (one _replay writer: stream_stateful_ema_batches,
-    # stream_upsert_foreachbatch):
+    # (1a) changed this rotation: all 20 streaming keys (every stream
+    # now starts through streaming/jobs.py::_start, which caps the
+    # state-partition count at the session's task slots):
     "stream_cep_gapped_ooo",
     "stream_cep_gapped_true",
     "stream_cep_ooo",
     "stream_cep_true",
     "stream_dedup_true",
     "stream_dedup_within_watermark_true",
+    "stream_mv_refresh_true",
     "stream_pit_join_true",
+    "stream_python_sink_true",
     "stream_python_source_true",
     "stream_session_true",
     "stream_sliding_true",
+    "stream_state_inspect",
     "stream_stateful_ema",
     "stream_stateful_ema_batches",
     "stream_static_join_true",
@@ -72,7 +72,7 @@ _SWEEP_PRIORITY = [
     "stream_tumbling_distinct_true",
     "stream_tumbling_true",
     "stream_upsert_foreachbatch",
-    # (1b) changed in the previous rotation, not yet re-verified:
+    # (1b) changed in an earlier rotation, not yet re-verified:
     # every fixture-artifact consumer (the one artifact helper in
     # functions/cache.py replaced the hand-rolled caches) — the MinHash
     # dedup family and the graph, sampling, split and curation keys
@@ -108,14 +108,13 @@ _SWEEP_PRIORITY = [
     "split_leakage_safe",
     "text_bpe_encode",
     "text_bpe_merges",
-    # (2) backfill: the three keys left over from the last backfill,
-    # then the r11-vintage cohort (all hash-green in r11), sorted:
+    # (2) backfill: the three keys left over from an earlier backfill.
+    # The three new streaming keys displaced the r11-vintage cohort
+    # (limit_topk, quality_dedup_rates, sample_stratified_rebalance),
+    # which leads the next backfill:
     "timeseries_gapfill",
     "udtf_grouped_map",
     "window_row_number",
-    "limit_topk",
-    "quality_dedup_rates",
-    "sample_stratified_rebalance",
 ]
 
 

@@ -5,6 +5,12 @@ the one you would also set on a real multi-executor cluster at 100 TB:
 AQE for runtime coalescing / skew splitting / broadcast conversion,
 Arrow for any Python<->JVM batch transfer, and a shuffle-partition count
 sized to the input rather than Spark's static 200 default.
+
+The shuffle-partition count is what batch plans over-provision and AQE
+coalesces. Streaming plans run without AQE, so every streaming query is
+started through ``streaming/jobs.py::_start``, which caps the count at
+the session's task slots for that query's state partitions; the value
+set here stays the ceiling.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ def get_spark(
         # --- Shuffle sizing ---------------------------------------------
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))),
+            str(shuffle_partitions or 32),
         )
         # --- Arrow for every pandas_udf / applyInPandas boundary --------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

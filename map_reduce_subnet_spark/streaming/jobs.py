@@ -31,6 +31,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DataType,
     DoubleType,
@@ -164,6 +165,57 @@ def _read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _start(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    no_data_batches: bool = True,
+) -> StreamingQuery:
+    """Start a streaming query with at most one state partition per
+    task slot: ``spark.sql.shuffle.partitions`` is lowered to
+    ``min(<session value>, defaultParallelism)`` for this query only.
+
+    Streaming plans run without AQE, so nothing coalesces a stateful
+    operator's shuffle: every state partition is a task, and a store
+    load and commit, on every micro-batch. At the batch default of 32
+    partitions on 4 slots that is 8 waves of mostly-empty commits. The
+    session value stays the ceiling, and the cap itself never goes
+    below the slot count (fewer partitions than slots measured a loss).
+
+    The count is pinned in the checkpoint at the query's first start.
+    Every drain here starts from a fresh checkpoint, so it always
+    takes the current slot count; a long-lived deployment that
+    restarts from its checkpoint on a resized cluster should set its
+    own count explicitly.
+
+    ``no_data_batches=False`` skips the final NO-DATA micro-batch
+    (``spark.sql.streaming.noDataMicroBatches.enabled=false``); see
+    :func:`_run_to_memory` for which drains may skip it.
+
+    The query snapshots the session conf at ``start()``, so both confs
+    are set just before it and restored right after: the session never
+    reads the scoped values while the stream drains, and a concurrent
+    stream (FAIR scheduling) keeps its own settings."""
+    key = "spark.sql.shuffle.partitions"
+    scoped = {
+        key: str(
+            min(int(spark.conf.get(key)), spark.sparkContext.defaultParallelism)
+        )
+    }
+    if not no_data_batches:
+        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prior = {k: spark.conf.get(k, None) for k in scoped}
+    for k, v in scoped.items():
+        spark.conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def _run_to_memory(
     stream_df: DataFrame,
     spark: SparkSession,
@@ -179,8 +231,7 @@ def _run_to_memory(
     PythonMicroBatchStream does not support AvailableNow (Spark falls
     back to a SINGLE batch and silently truncates the stream).
 
-    ``emit_on_arrival=True`` skips the final NO-DATA micro-batch
-    (``spark.sql.streaming.noDataMicroBatches.enabled=false``). That
+    ``emit_on_arrival=True`` skips the final NO-DATA micro-batch. That
     batch acts on the watermark advanced by the last data batch: it
     EMITS rows for append-mode aggregations, outer joins and stateful
     timeouts, so those drains must keep it. For operators that emit
@@ -188,11 +239,7 @@ def _run_to_memory(
     dropDuplicates[WithinWatermark]) it only evicts state, which a
     terminating drain with a discarded checkpoint pays for nothing —
     mostly state-store commit. Callers MUST emit entirely from data
-    batches; each caller's oracle MATCH is the pin. The query
-    snapshots the session conf at ``start()``, so the conf is set just
-    before it and restored right after: the session never reads
-    ``false`` while the stream drains, and a concurrent stream
-    (FAIR scheduling) keeps its own no-data batches."""
+    batches; each caller's oracle MATCH is the pin."""
     name = "s" + uuid.uuid4().hex[:12]
     writer = (
         stream_df.writeStream.format("memory")
@@ -200,7 +247,7 @@ def _run_to_memory(
         .outputMode(output_mode)
     )
     if drain == "process_all":
-        q = writer.trigger(processingTime="0 seconds").start()
+        q = _start(writer.trigger(processingTime="0 seconds"), spark)
         try:
             q.processAllAvailable()
             q.stop()
@@ -212,17 +259,11 @@ def _run_to_memory(
             return spark.table(name).localCheckpoint(eager=True)
         finally:
             spark.catalog.dropTempView(name)
-    writer = writer.trigger(availableNow=True)
-    if emit_on_arrival:
-        conf_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-        prev_conf = spark.conf.get(conf_key, "true")
-        spark.conf.set(conf_key, "false")
-        try:
-            q = writer.start()
-        finally:
-            spark.conf.set(conf_key, prev_conf)
-    else:
-        q = writer.start()
+    q = _start(
+        writer.trigger(availableNow=True),
+        spark,
+        no_data_batches=not emit_on_arrival,
+    )
     # Materialize off the sink, then drop the temp view (also on the
     # timeout path): otherwise every invocation leaks one uuid-named
     # in-memory table for the session lifetime. localCheckpoint severs
@@ -916,11 +957,11 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged.write.parquet(new_dir)
             state["dir"] = new_dir  # swap AFTER the write completes
 
-        q = (
+        q = _start(
             ev.writeStream.foreachBatch(upsert_batch)
             .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
+            spark,
         )
         if not q.awaitTermination(300):
             q.stop()
@@ -1017,13 +1058,13 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         ev = _read_event_stream(spark, sf_dir)
         agg = ev.groupBy("event_type").count()
-        q = (
+        q = _start(
             agg.writeStream.format("memory")
             .queryName(name)
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .trigger(availableNow=True),
+            spark,
         )
         try:
             if not q.awaitTermination(300):
@@ -1094,12 +1135,12 @@ def stream_python_sink_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("batch", str(pds.SYNTH_STREAM_TOTAL // 2))
             .load()
         )
-        q = (
+        q = _start(
             ev.writeStream.format("jsonl_stream_sink")
             .option("path", out)
             .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds")
-            .start()
+            .trigger(processingTime="0 seconds"),
+            spark,
         )
         q.processAllAvailable()
         q.stop()
@@ -1460,11 +1501,11 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", "1")
             .parquet(feeds)
         )
-        q = (
+        q = _start(
             stream.writeStream.foreachBatch(apply_feed)
             .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
+            spark,
         )
         if not q.awaitTermination(300):
             q.stop()

@@ -30,9 +30,12 @@ This sweep pins the invariance directly, Spark-vs-Spark:
   depend on ARRIVAL ORDER (watermarks advance between micro-batches,
   so file layout IS the contract — at scale the analogous contract is
   Kafka partition ordering). The input layout therefore stays
-  pristine, and only the state-store partition count is varied
-  (streaming jobs inherit spark.sql.shuffle.partitions; a deployment
-  will never run with the fixture's count).
+  pristine, and only the state-store partition count is varied: a
+  stream starts with min(spark.sql.shuffle.partitions, task slots)
+  state partitions (streaming/jobs.py::_start), so the alternate run
+  sets 3, below that cap, and every stateful drain must report a
+  count different from the baseline's (a deployment will never run
+  with the fixture's count). The check needs more than 3 task slots.
 
 Deliberately uncovered: nothing. join_skew_aqe builds its own
 isolated session (confs pinned inside the query) and round-robin
@@ -62,6 +65,7 @@ from tests.conftest import SF_DIR, assert_frames_match
 SEED = 20260816
 N_SHARDS = 7
 ALT_SHUFFLE_PARTITIONS = 57
+ALT_STATE_PARTITIONS = 3
 ALT_ARROW_BATCH = 13
 
 STREAMING_KEYS = sorted(
@@ -89,8 +93,8 @@ def resharded_dir(tmp_path_factory) -> str:
 
 
 @contextmanager
-def alt_execution_conf(spark, arrow_batch: bool):
-    keys = {"spark.sql.shuffle.partitions": str(ALT_SHUFFLE_PARTITIONS)}
+def alt_execution_conf(spark, arrow_batch: bool, shuffle_partitions: int):
+    keys = {"spark.sql.shuffle.partitions": str(shuffle_partitions)}
     if arrow_batch:
         keys["spark.sql.execution.arrow.maxRecordsPerBatch"] = str(
             ALT_ARROW_BATCH
@@ -112,17 +116,51 @@ def alt_execution_conf(spark, arrow_batch: bool):
 def test_reshard_and_parallelism_invariant(spark, resharded_dir, key):
     baseline = QUERIES[key](spark, SF_DIR).toPandas()
     # build AND collect inside the conf window — plans are lazy
-    with alt_execution_conf(spark, arrow_batch=True):
+    with alt_execution_conf(
+        spark, arrow_batch=True, shuffle_partitions=ALT_SHUFFLE_PARTITIONS
+    ):
         resharded = QUERIES[key](spark, resharded_dir).toPandas()
     assert_frames_match(resharded, baseline, f"reshard:{key}")
 
 
+@pytest.fixture
+def state_partitions(monkeypatch):
+    """Collect the state-partition count of every stateful drain: one
+    list per run, appended to after each drain terminates."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    runs: list[list[int]] = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, timeout=None):
+        done = await_termination(self, timeout)
+        runs[-1].extend(
+            op.numShufflePartitions
+            for p in self.recentProgress
+            for op in p.stateOperators
+        )
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    return runs
+
+
 @pytest.mark.parametrize("key", STREAMING_KEYS)
-def test_streaming_state_partition_invariant(spark, key):
+def test_streaming_state_partition_invariant(spark, key, state_partitions):
+    state_partitions.append([])
     baseline = QUERIES[key](spark, SF_DIR).toPandas()
     # Arrow batch size stays default here: applyInPandasWithState
     # contracts are per-group, not per-batch, and the tiny batch knob
     # multiplies the (already slow) stream drain for no extra signal.
-    with alt_execution_conf(spark, arrow_batch=False):
+    state_partitions.append([])
+    with alt_execution_conf(
+        spark, arrow_batch=False, shuffle_partitions=ALT_STATE_PARTITIONS
+    ):
         repartitioned = QUERIES[key](spark, SF_DIR).toPandas()
     assert_frames_match(repartitioned, baseline, f"state-parts:{key}")
+    base_counts, alt_counts = state_partitions
+    assert len(alt_counts) == len(base_counts), state_partitions
+    assert set(alt_counts).isdisjoint(base_counts), (
+        "the alternate run used the baseline's state-partition count, "
+        f"so it checked nothing: {state_partitions}"
+    )

@@ -918,42 +918,93 @@ def test_cep_ooo_contiguous_boundary_and_fabrication_guard(
     assert got == [(1, 10, 12, base, 20 * m)], got
 
 
+_SCOPED_CONFS = (
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+    "spark.sql.shuffle.partitions",
+)
+
+
+@pytest.fixture
+def drain_spy(spark, monkeypatch):
+    """Record every drained query with the session's value of each conf
+    the stream start scopes, read while the query drains."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    drains = []
+    await_termination = StreamingQuery.awaitTermination
+
+    def spy(self, timeout=None):
+        drains.append(
+            (self, {k: spark.conf.get(k, None) for k in _SCOPED_CONFS})
+        )
+        return await_termination(self, timeout)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
+    return drains
+
+
+def _dedup_stream(spark, path):
+    base = 1_700_000_000_000_000  # µs
+    m = 60_000_000  # one minute
+    # event_ids 0-4, each seen twice 5 minutes apart
+    rows = [(i % 5, base + i * m, 1, "view") for i in range(10)]
+    ev = _file_stream(spark, path, [_events(rows)])
+    return ev.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
+
+
 def test_emit_on_arrival_restores_conf_before_drain(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, drain_spy
 ):
     """``emit_on_arrival=True`` must skip the no-data micro-batch
     without leaving the session-wide conf flipped while the stream
     drains: the query snapshots its conf at start(), so the session
     is restored before awaitTermination. The watermarked dedup still
     emits every first occurrence, and no zero-input batch runs."""
-    from pyspark.sql.streaming.query import StreamingQuery
-
     from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
 
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prior = spark.conf.get(key, "true")
-    base = 1_700_000_000_000_000  # µs
-    m = 60_000_000  # one minute
-    # event_ids 0-4, each seen twice 5 minutes apart
-    rows = [(i % 5, base + i * m, 1, "view") for i in range(10)]
-    ev = _file_stream(spark, tmp_path / "dedup", [_events(rows)])
-    drains = []
-    await_termination = StreamingQuery.awaitTermination
-
-    def spy(self, timeout=None):
-        drains.append((self, spark.conf.get(key, "true")))
-        return await_termination(self, timeout)
-
-    monkeypatch.setattr(StreamingQuery, "awaitTermination", spy)
-    deduped = ev.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
+    prior = {k: spark.conf.get(k, None) for k in _SCOPED_CONFS}
     got = _run_to_memory(
-        deduped.select("event_id"), spark, emit_on_arrival=True
+        _dedup_stream(spark, tmp_path / "dedup").select("event_id"),
+        spark,
+        emit_on_arrival=True,
     ).collect()
 
-    assert [conf for _, conf in drains] == [prior]
+    assert [confs for _, confs in drain_spy] == [prior]
     assert sorted(r.event_id for r in got) == [0, 1, 2, 3, 4]
-    progress = drains[0][0].recentProgress
+    progress = drain_spy[0][0].recentProgress
     assert progress, "no micro-batch ran"
     assert all(p.numInputRows > 0 for p in progress), [
         p.numInputRows for p in progress
     ]
+
+
+def test_stream_state_partitions_capped_at_task_slots(
+    spark, tmp_path, drain_spy
+):
+    """A stateful drain runs min(session shuffle partitions, task
+    slots) state partitions — streaming plans have no AQE to coalesce
+    them — while the session keeps reading its own value during the
+    drain. The session value stays the ceiling: set below the slot
+    count, it is used as is."""
+    from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "8"
+    slots = spark.sparkContext.defaultParallelism
+    counts = []
+    for session_value in ("8", "2"):
+        spark.conf.set(key, session_value)
+        try:
+            _run_to_memory(
+                _dedup_stream(spark, tmp_path / f"dedup{session_value}"),
+                spark,
+            ).collect()
+        finally:
+            spark.conf.set(key, "8")
+        query, confs = drain_spy[-1]
+        assert confs[key] == session_value
+        counts.append(
+            query.recentProgress[-1].stateOperators[0].numShufflePartitions
+        )
+
+    assert counts == [min(8, slots), min(2, slots)], (counts, slots)
