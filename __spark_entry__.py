@@ -38,20 +38,22 @@ SWEEP_CAP = 50
 
 _SWEEP_PRIORITY = [
     # --- FRESHNESS SCHEDULE ---
-    # Composition, auditable sum: 0 new + 47 changed (27 carried + 20
-    # this change) + 3 backfill = 50 = SWEEP_CAP. The 27 carried keys
-    # changed in an earlier rotation and have no CORRECTNESS row for
-    # their current program yet, so they stay. Backfill cohorts are
-    # COMPUTED from the CORRECTNESS_r01..r16 union (latest green row per
-    # key), not hand-copied: the keys that did not fit last time lead,
-    # then the r11-vintage cohort in sorted order. The changed-key rule
+    # Composition, auditable sum: 0 new + 49 changed (20 streaming +
+    # 27 carried + 2 WAV keys) + 1 backfill = 50 = SWEEP_CAP. The
+    # streaming and carried keys changed in an earlier rotation and
+    # have no CORRECTNESS row for their current program yet, so they
+    # stay; eight of the carried media keys changed again this
+    # rotation. Backfill cohorts are COMPUTED from the
+    # CORRECTNESS_r01..r16 union (latest green row per key), not
+    # hand-copied: the keys that did not fit last time lead, then the
+    # r11-vintage cohort in sorted order. The changed-key rule
     # is mechanized: scripts/fingerprints.py records key -> md5(oracle +
     # engine source) per rotation, and tests/test_correctness.py fails
     # if any fingerprint changed without the key appearing here.
     #
-    # (1a) changed this rotation: all 20 streaming keys (every stream
-    # now starts through streaming/jobs.py::_start, which caps the
-    # state-partition count at the session's task slots):
+    # (1a) changed in the previous rotation: all 20 streaming keys
+    # (every stream now starts through streaming/jobs.py::_start, which
+    # caps the state-partition count at the session's task slots):
     "stream_cep_gapped_ooo",
     "stream_cep_gapped_true",
     "stream_cep_ooo",
@@ -80,7 +82,9 @@ _SWEEP_PRIORITY = [
     # ANN/PQ family, BPE, the two month-partitioned pruning keys and
     # join_bucketed — plus the two other media keys that share the
     # by-value multimodal shipping helper (multimodal_probe_mp4,
-    # scan_binaryfile_media):
+    # scan_binaryfile_media). The eight media keys changed again this
+    # rotation: every codec stage now runs through
+    # operators/llm.py::_per_blob.
     "dedup_cluster",
     "dedup_containment",
     "dedup_minhash_est",
@@ -108,13 +112,15 @@ _SWEEP_PRIORITY = [
     "split_leakage_safe",
     "text_bpe_encode",
     "text_bpe_merges",
-    # (2) backfill: the three keys left over from an earlier backfill.
-    # The three new streaming keys displaced the r11-vintage cohort
-    # (limit_topk, quality_dedup_rates, sample_stratified_rebalance),
-    # which leads the next backfill:
+    # (1c) changed this rotation: the two WAV keys, which now decode
+    # through functions/multimodal.py::decode_wav_pcm via _per_blob:
+    "multimodal_audio_stats",
+    "multimodal_decode_wav",
+    # (2) backfill: the one key left over from an earlier backfill.
+    # The two WAV keys displaced udtf_grouped_map and window_row_number,
+    # which lead the next backfill, then the r11-vintage cohort
+    # (limit_topk, quality_dedup_rates, sample_stratified_rebalance):
     "timeseries_gapfill",
-    "udtf_grouped_map",
-    "window_row_number",
 ]
 
 

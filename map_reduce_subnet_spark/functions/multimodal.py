@@ -47,10 +47,20 @@ import numpy as np
 MEDIA_FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, byte_sum long, head_hex string"
 )
-# The featurizer itself lives as a closure inside
-# operators/llm.py::multimodal_features — shipped UDFs must be
-# closure-serialized, so a module-level copy here would be dead code
-# that drifts from the one actually executed.
+# The featurizer itself lives in operators/llm.py::multimodal_features,
+# next to its oracle. The codec stages instead call this module's
+# functions directly: operators/llm.py::_per_blob registers the module
+# to pickle BY VALUE, so workers never import it.
+
+
+def weighted_checksum(values: np.ndarray) -> int:
+    """Order-sensitive checksum of an integer array: the row-major
+    flattened values weighted by ``position % 251 + 1``, summed, mod
+    2**31 - 1 — the checksum the decode oracles regenerate in SQL. Any
+    corrupted or misplaced value anywhere changes it."""
+    flat = values.reshape(-1).astype(np.int64)
+    weights = np.arange(flat.size, dtype=np.int64) % 251 + 1
+    return int((flat * weights).sum()) % (2**31 - 1)
 
 
 def decode_wav_pcm(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -455,6 +465,26 @@ def _decode_gif_body(payload: bytes):
         else:
             raise ValueError(f"unknown GIF block 0x{block:02x}")
     raise ValueError("GIF contains no image data")
+
+
+def gif_blob_rows(doc_id, payload):
+    """Per-blob GIF decode stage (operators/llm.py::_per_blob) → one
+    (doc_id, width, height, n_colors, interlaced, mean_pixel,
+    pixel_checksum) row: dimensions, palette size, the PARSED
+    interlace flag, and the mean and weighted checksum of the
+    rendered RGB bytes."""
+    pal, idx, interlaced = decode_gif(bytes(payload))
+    h, w = idx.shape
+    rendered = pal[idx]  # (h, w, 3) uint8
+    yield (
+        int(doc_id),
+        w,
+        h,
+        int(pal.shape[0]),
+        int(interlaced),
+        float(rendered.mean()),
+        weighted_checksum(rendered),
+    )
 
 
 def synthesize_gif(seed: int, w: int = 24, h: int = 16) -> bytes:
@@ -892,7 +922,11 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     """Baseline JPEG → uint8 pixels (h, w) for grayscale, (h, w, 3)
     RGB for 3-component YCbCr (1x1 sampling). Dequantize → IDCT →
     level shift → clip (+ BT.601 YCbCr→RGB for color)."""
-    p = _parse_jpeg(payload)
+    return _jpeg_pixels(_parse_jpeg(payload))
+
+
+def _jpeg_pixels(p: dict) -> np.ndarray:
+    """The pixel half of decode_jpeg, from ``_parse_jpeg``'s output."""
     w, h = p["width"], p["height"]
     planes = []
     for c in p["components"]:
@@ -914,6 +948,32 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     return np.clip(
         np.round(np.stack([r, g, b], axis=-1)), 0, 255
     ).astype(np.uint8)
+
+
+def jpeg_frame_metrics(payload: bytes) -> tuple[int, int, int, int, int, int]:
+    """One grayscale baseline JPEG frame → (width, height, n_blocks,
+    dc_sum, n_nonzero_ac, coef_checksum): the integer-exact metrics of
+    the dequantized coefficients that the JPEG and MJPEG oracles
+    regenerate. The payload is parsed ONCE; the full pixel decode
+    (IDCT included, the honest per-frame price) runs from the same
+    parsed coefficients and its shape is checked against the header."""
+    p = _parse_jpeg(payload)
+    w, h = p["width"], p["height"]
+    px = _jpeg_pixels(p)
+    if px.shape != (h, w):
+        raise ValueError(f"decoded pixel shape {px.shape} != ({h}, {w})")
+    [comp] = p["components"]
+    nby, nbx = comp["coefs"].shape[:2]
+    coefs = comp["coefs"].reshape(nby * nbx, 64).astype(np.int64)
+    deq = coefs * comp["qtab"].reshape(1, 64).astype(np.int64)
+    return (
+        w,
+        h,
+        nby * nbx,
+        int(deq[:, 0].sum()),
+        int(np.count_nonzero(deq[:, 1:])),
+        weighted_checksum(deq),
+    )
 
 
 # Coefficient program shared by synthesize_jpeg and the SQL oracle

@@ -76,6 +76,35 @@ def test_changed_keys_are_in_sweep_priority():
     )
 
 
+@pytest.mark.parametrize(
+    "key, codec",
+    [
+        ("multimodal_decode_jpeg", "_parse_jpeg"),
+        ("multimodal_decode_mjpeg", "_parse_jpeg"),
+        ("multimodal_decode_png", "decode_png"),
+        ("multimodal_image_resize", "decode_png"),
+        ("multimodal_image_ahash", "decode_png"),
+        ("multimodal_decode_gif", "decode_gif"),
+        ("scan_binaryfile_media", "decode_gif"),
+        ("multimodal_probe_mp4", "probe_mp4"),
+        ("multimodal_decode_wav", "decode_wav_pcm"),
+        ("multimodal_audio_stats", "decode_wav_pcm"),
+    ],
+)
+def test_media_key_fingerprint_covers_codec(key, codec):
+    """A media key's fingerprint closure must contain the source of
+    the codec its workers run, so a codec edit in
+    functions/multimodal.py fingers the key and forces a sweep slot.
+    Reaching the codecs through an opaque module handle hides them
+    from scripts/fingerprints.py."""
+    from map_reduce_subnet_spark.functions import multimodal
+    from scripts.fingerprints import _closure_sources, _package_obj_source
+
+    srcs: list[str] = []
+    _closure_sources(QUERIES[key], set(), srcs)
+    assert _package_obj_source(getattr(multimodal, codec)) in srcs
+
+
 def test_entry_sweep_order():
     """The driver checks only a prefix of queries() (SWEEP_CAP entries,
     observed in rounds 1-2) — the priority list must be real keys, fit

@@ -497,10 +497,10 @@ def test_stop_shingle_cap_bounds_hot_shingle(spark, tmp_path):
 
 def test_multimodal_decode_wav_parity(spark):
     """The WAV decode query must (a) produce real decoded features —
-    rate/frames as synthesized, RMS of a full-period sine ~1/sqrt(2) of
-    amplitude — and (b) bit-match the module-level synthesize_wav /
-    decode_wav_pcm pair (the closure inlines the same logic; this pins
-    them together so they cannot drift)."""
+    rate/frames as synthesized, RMS of the sawtooth — and (b)
+    bit-match the module-level synthesize_wav / decode_wav_pcm pair run
+    driver-side (the query ships that same pair to its workers, so
+    this pins the worker path to the library path)."""
     from map_reduce_subnet_spark.functions.multimodal import (
         decode_wav_pcm,
         synthesize_wav,
@@ -522,6 +522,83 @@ def test_multimodal_decode_wav_parity(spark):
         rms = float(np.sqrt(np.mean(s * s)))
         assert got.loc[doc_id, "rms"] == rms  # bit-exact, same op order
         assert got.loc[doc_id, "sample_rate"] == rate
+
+
+def test_wav_decode_rejections():
+    """decode_wav_pcm (the codec behind both WAV keys) must reject a
+    non-RIFF payload, a RIFF/WAVE payload with no data chunk, and
+    non-16-bit PCM with the documented ValueError, never a garbage
+    decode."""
+    import struct
+
+    import pytest as _pytest
+
+    from map_reduce_subnet_spark.functions.multimodal import (
+        decode_wav_pcm,
+        synthesize_wav,
+    )
+
+    with _pytest.raises(ValueError, match="not a RIFF/WAVE"):
+        decode_wav_pcm(b"RIFX" + synthesize_wav(3)[4:])
+    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 8000, 1, 8)
+    no_data = b"RIFF" + struct.pack("<I", 4 + len(fmt)) + b"WAVE" + fmt
+    with _pytest.raises(ValueError, match="missing fmt/data"):
+        decode_wav_pcm(no_data)
+    pcm8 = bytes(range(100))
+    eight_bit = (
+        b"RIFF"
+        + struct.pack("<I", 4 + len(fmt) + 8 + len(pcm8))
+        + b"WAVE"
+        + fmt
+        + b"data"
+        + struct.pack("<I", len(pcm8))
+        + pcm8
+    )
+    with _pytest.raises(ValueError, match="only 16-bit PCM"):
+        decode_wav_pcm(eight_bit)
+
+
+def test_jpeg_frame_metrics_single_parse(monkeypatch):
+    """jpeg_frame_metrics (the per-frame stage of both JPEG keys) must
+    equal the two-parse computation it replaced — decode_jpeg_coefficients
+    for the coefficient metrics plus a separate decode_jpeg for the
+    pixel shape check — on single JPEGs and on every demuxed MJPEG
+    frame, while parsing each frame exactly once."""
+    from map_reduce_subnet_spark.functions import multimodal as mm
+
+    def two_parse(data):
+        w, h, [(coefs, qtab)] = mm.decode_jpeg_coefficients(data)
+        assert mm.decode_jpeg(data).shape == (h, w)
+        nby, nbx = coefs.shape[:2]
+        deq = coefs.reshape(nby * nbx, 64).astype(np.int64) * qtab.reshape(
+            1, 64
+        ).astype(np.int64)
+        flat = deq.reshape(-1)
+        weights = (np.arange(flat.size, dtype=np.int64) % 251) + 1
+        return (
+            w,
+            h,
+            nby * nbx,
+            int(deq[:, 0].sum()),
+            int(np.count_nonzero(deq[:, 1:])),
+            int((flat * weights).sum()) % (2**31 - 1),
+        )
+
+    frames = [mm.synthesize_jpeg(s) for s in range(8)]
+    for s in range(8):
+        frames += mm.demux_mjpeg_mp4(mm.synthesize_mjpeg_mp4(s))[1]
+    expected = [two_parse(f) for f in frames]
+
+    calls = []
+    real_parse = mm._parse_jpeg
+
+    def spy(payload):
+        calls.append(payload)
+        return real_parse(payload)
+
+    monkeypatch.setattr(mm, "_parse_jpeg", spy)
+    assert [mm.jpeg_frame_metrics(f) for f in frames] == expected
+    assert calls == frames  # one parse per frame
 
 
 def test_png_decode_roundtrip_and_rejections():
