@@ -3,7 +3,9 @@
 Iterative algorithms (connected-components label propagation, the
 validator EMA fold — reference neurons/validator.py:146) grow their
 plan by one join per round; without truncation every action at round N
-re-executes all N rounds (O(rounds²)). Spark offers two truncation
+re-executes all N rounds (O(rounds²)). Label propagation truncates
+every round; the validator truncates once per sink period, at the
+round that sinks weights. Spark offers two truncation
 modes with different durability:
 
 - ``df.checkpoint()`` — RELIABLE: blocks are written to the

@@ -10,22 +10,27 @@ Reference mapping (file:line):
   BUILDERS (Column -> Column / DataFrame predicates), not Python UDFs,
   so the whole round stays JVM-side.
 - blacklist before deserialization (reference neurons/miner.py:107-123)
-  → left-semi join on the registered-peer set, applied before any
-  payload column is touched (Catalyst pushes it into the scan).
+  → a filter on the request rows in ``miner_respond``, a NULL response
+  in ``validator_round``; either way no payload column is touched for
+  a rejected peer.
 - priority by stake (reference neurons/miner.py:127-137) → orderBy
   stake descending.
 - forward transform ``×2`` (reference neurons/miner.py:140-147).
 - oracle scoring ``1 if resp == step*2 else 0`` (reference
-  neurons/validator.py:134-141) + non-responders score 0 via left
-  join (validator.py:127 timeout semantics).
+  neurons/validator.py:134-141) + non-responders score 0: a
+  blacklisted peer's response is NULL on its own request row
+  (validator.py:127 timeout semantics).
 - EMA fold α=0.9 seeded at 1.0 (reference neurons/validator.py:
   109-110,146).
 - every-2-steps L1-normalized weight sink (reference
   neurons/validator.py:149-163).
 
 State (the score vector) is a small keyed DataFrame carried across
-rounds — at cluster scale it lives as a checkpointed table keyed by
-uid; each round is one broadcast join against it.
+rounds. Each round scores the metagraph in one projection (``uid`` is
+its key) and joins that onto the state lazily; the round that sinks
+weights checkpoints the state once per SINK_PERIOD rounds, so the
+state's plan holds at most SINK_PERIOD joins and durable state is
+written when the weights become visible.
 """
 
 from __future__ import annotations
@@ -90,6 +95,14 @@ class SubnetPipeline:
         responses against the recomputed oracle, EMA-fold the score
         vector, and sink L1 weights every SINK_PERIOD steps.
 
+        ``uid`` must be the metagraph's key. A non-sink round returns
+        its scores lazily: they read this round's metagraph when the
+        period's sink runs. So the data a non-sink round's metagraph
+        reads must not change before that sink; a caller whose
+        metagraph reads a mutable source (a table or path rewritten
+        between rounds) must materialize it first, e.g. with
+        ``localCheckpoint()``.
+
         Returns (new_scores, weights_or_None).
         """
         step = self.step
@@ -101,52 +114,52 @@ class SubnetPipeline:
             "registered",
             F.lit(step).alias("dummy_input"),
         )
-        responses = self.miner_respond(requests).select("uid", "response")
 
-        # exact-match oracle; peers with no response score 0
+        # exact-match oracle on the same rows; a peer the blacklist
+        # rejects (or leaves NULL) gets a NULL response and scores 0
         # (validator.py:134-141)
         expected = step * 2
-        scored = (
-            metagraph.select("uid")
-            .join(responses, "uid", "left")
-            .select(
-                "uid",
-                F.when(F.col("response") == expected, 1.0)
-                .otherwise(0.0)
-                .alias("score"),
-            )
+        response = F.when(
+            self.blacklist(requests), self.forward(F.col("dummy_input"))
+        )
+        scored = requests.select(
+            "uid",
+            F.when(response == expected, 1.0)
+            .otherwise(0.0)
+            .alias("score"),
         )
 
-        # EMA fold into persistent state (validator.py:146).
-        # stable_checkpoint truncates lineage each round — without it
-        # the score frame's plan grows by one join per round and every
-        # action at round N re-executes all N rounds (O(rounds²)).
-        # Durable (checkpoint-dir) when the session sets one, executor
-        # -local otherwise: see functions/checkpoint.py.
-        new_scores = stable_checkpoint(
-            scores.join(scored, "uid", "left")
-            .select(
-                "uid",
-                (
-                    F.lit(ALPHA) * F.col("ema")
-                    + (1 - ALPHA) * F.coalesce(F.col("score"), F.lit(0.0))
-                ).alias("ema"),
-            )
+        # EMA fold into persistent state (validator.py:146)
+        new_scores = scores.join(scored, "uid", "left").select(
+            "uid",
+            (
+                F.lit(ALPHA) * F.col("ema")
+                + (1 - ALPHA) * F.coalesce(F.col("score"), F.lit(0.0))
+            ).alias("ema"),
         )
 
-        weights = None
         self.step += 1
-        if self.step % SINK_PERIOD == 0:  # validator.py:149
-            total = new_scores.agg(
-                F.sum(F.col("ema").cast("decimal(27,6)")).cast("double")
-            ).collect()[0][0]
-            # empty metagraph (all peers deregistered) → no total; skip
-            # the sink rather than emitting all-NULL weights
-            if total:
-                weights = new_scores.select(
-                    "uid", (F.col("ema") / F.lit(total)).alias("weight")
-                )
-                self.sunk_weights.append(weights)  # set_weights sink
+        if self.step % SINK_PERIOD:
+            return new_scores, None
+
+        # The sink round truncates lineage, once per period: without it
+        # the score frame's plan grows by one join per round and every
+        # action at round N re-executes all N rounds (O(rounds²)); with
+        # it the plan holds at most SINK_PERIOD joins. Durable
+        # (checkpoint-dir) when the session sets one, executor-local
+        # otherwise: see functions/checkpoint.py.
+        new_scores = stable_checkpoint(new_scores)
+        total = new_scores.agg(  # validator.py:149
+            F.sum(F.col("ema").cast("decimal(27,6)")).cast("double")
+        ).collect()[0][0]
+        # empty metagraph (all peers deregistered) → no total; skip
+        # the sink rather than emitting all-NULL weights
+        weights = None
+        if total:
+            weights = new_scores.select(
+                "uid", (F.col("ema") / F.lit(total)).alias("weight")
+            )
+            self.sunk_weights.append(weights)  # set_weights sink
         return new_scores, weights
 
 

@@ -2,17 +2,28 @@
 
 Simulates the reference's validator/miner rounds (dummy ×2 protocol,
 EMA scoring, periodic L1 weight sink) over a metagraph built from the
-supplier fixture, and checks the DataFrame implementation against a
-step-by-step Python recomputation — the same differential discipline
-as everywhere else.
+supplier fixture, and over small in-memory metagraphs for the edge
+cases, and checks the DataFrame implementation against a step-by-step
+Python recomputation — the same differential discipline as everywhere
+else. It also pins the cost of a sink period: its Spark jobs and the
+lineage the score state carries between checkpoints.
 """
 
 from __future__ import annotations
 
+import re
+import uuid
+from decimal import ROUND_HALF_UP, Decimal
+
 import pyspark.sql.functions as F
 import pytest
 
-from map_reduce_subnet_spark.pipeline import SubnetPipeline, init_scores
+from map_reduce_subnet_spark.pipeline import (
+    ALPHA,
+    SINK_PERIOD,
+    SubnetPipeline,
+    init_scores,
+)
 from map_reduce_subnet_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
@@ -29,35 +40,75 @@ def metagraph(spark):
     )
 
 
+def python_rounds(rounds, forward=lambda x: x * 2):
+    """The reference round loop in plain Python, computed the way the
+    engine computes it: ``rounds`` is one ``{uid: registered}`` dict per
+    step (a missing uid has left the metagraph), ``forward`` maps a
+    step to the miner's response (None for no response). Peers are the
+    first round's uids. Returns one (ema, weights_or_None) per step;
+    the sink total sums the EMA as decimal(27,6)."""
+    ema = {uid: 1.0 for uid in rounds[0]}
+    out = []
+    for step, peers in enumerate(rounds):
+        for uid in ema:
+            response = forward(step) if peers.get(uid) else None
+            score = 1.0 if response is not None and response == step * 2 else 0.0
+            ema[uid] = ALPHA * ema[uid] + (1 - ALPHA) * score
+        weights = None
+        if (step + 1) % SINK_PERIOD == 0:
+            total = float(
+                sum(
+                    Decimal(repr(e)).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+                    for e in ema.values()
+                )
+            )
+            weights = {uid: e / total for uid, e in ema.items()} if total else None
+        out.append((dict(ema), weights))
+    return out
+
+
+def run_rounds(spark, rounds, forward=None):
+    """Run ``rounds`` (as in ``python_rounds``) through the engine;
+    returns the same shape, plus the pipeline."""
+
+    def frame(peers):
+        return spark.createDataFrame(
+            [(uid, float(uid), reg) for uid, reg in peers.items()],
+            "uid long, stake double, registered boolean",
+        )
+
+    pipe = SubnetPipeline.attach(forward=forward)
+    scores = init_scores(frame(rounds[0]))
+    out = []
+    for peers in rounds:
+        scores, weights = pipe.validator_round(frame(peers), scores)
+        out.append(
+            (
+                {r["uid"]: r["ema"] for r in scores.collect()},
+                None
+                if weights is None
+                else {r["uid"]: r["weight"] for r in weights.collect()},
+            )
+        )
+    return out, pipe
+
+
 def test_round_loop_matches_python_model(spark, metagraph):
     pipe = SubnetPipeline.attach()
     scores = init_scores(metagraph)
-    peers = {
-        r["uid"]: r["registered"] for r in metagraph.collect()
-    }
-    model = {uid: 1.0 for uid in peers}
-
-    for step in range(5):
+    peers = {r["uid"]: r["registered"] for r in metagraph.collect()}
+    # registered peers answer step*2 (score 1), unregistered are
+    # blacklisted -> no response -> score 0
+    for step, (ema, want) in enumerate(python_rounds([peers] * 5)):
         scores, weights = pipe.validator_round(metagraph, scores)
-        # python model: registered peers answer step*2 (score 1),
-        # unregistered are blacklisted -> no response -> score 0
-        for uid in model:
-            s = 1.0 if peers[uid] else 0.0
-            model[uid] = 0.9 * model[uid] + 0.1 * s
         got = {r["uid"]: r["ema"] for r in scores.collect()}
-        for uid in model:
-            assert got[uid] == pytest.approx(model[uid], abs=1e-12), (
-                f"step {step} uid {uid}"
-            )
-        if step % 2 == 1:
-            assert weights is not None
-            w = {r["uid"]: r["weight"] for r in weights.collect()}
-            assert sum(w.values()) == pytest.approx(1.0, abs=1e-9)
-            total = sum(model.values())
-            for uid in model:
-                assert w[uid] == pytest.approx(model[uid] / total, abs=1e-9)
-        else:
+        assert got == ema, f"step {step}"
+        if want is None:
             assert weights is None
+        else:
+            w = {r["uid"]: r["weight"] for r in weights.collect()}
+            assert w == want, f"step {step}"
+            assert sum(w.values()) == pytest.approx(1.0, abs=1e-9)
 
     assert len(pipe.sunk_weights) == 2  # sink every 2 of 5 steps
 
@@ -77,3 +128,110 @@ def test_custom_attach_overrides(spark, metagraph):
     assert {r["uid"] for r in rows} == {
         r["uid"] for r in metagraph.where("registered").collect()
     }
+
+
+PEERS = {1: True, 2: False, 3: True, 4: True, 5: None, 6: True}
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["null_registered", "null_forward", "metagraph_changes", "empty_metagraph"],
+)
+def test_round_edge_semantics_match_python_model(spark, case):
+    """Edge cases of the round against the Python model, exactly: a
+    NULL ``registered`` scores 0 (the blacklist drops it); a forward
+    that returns NULL scores 0; a metagraph that changes inside a
+    period (peer 3 deregisters, peer 4 leaves) is read per round, so
+    the lazy non-sink round keeps its own step and metagraph; with zero
+    peers the sink has no total, so it returns no weights, appends
+    nothing to ``sunk_weights`` and raises nothing."""
+    rounds = [PEERS] * 4
+    forward, forward_py = None, lambda x: x * 2
+    if case == "null_forward":
+        forward = lambda x: F.when(x % 2 == 0, x * 2)  # noqa: E731
+        forward_py = lambda x: x * 2 if x % 2 == 0 else None  # noqa: E731
+    elif case == "metagraph_changes":
+        changed = {**PEERS, 3: False}
+        del changed[4]
+        rounds = [PEERS, changed, changed, PEERS]
+    elif case == "empty_metagraph":
+        rounds = [{}] * SINK_PERIOD
+    got, pipe = run_rounds(spark, rounds, forward)
+    want = python_rounds(rounds, forward_py)
+    assert got == want
+    assert len(pipe.sunk_weights) == sum(w is not None for _, w in want)
+
+
+def _jobs(spark, group):
+    """(job count, checkpoint job count) the group has run so far."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    ids = tracker.getJobIdsForGroup(group)
+    checkpoints = 0
+    for job in ids:
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        if any(st is not None and st.name.startswith("checkpoint ") for st in stages):
+            checkpoints += 1
+    return len(ids), checkpoints
+
+
+def test_sink_period_job_budget(spark, metagraph, tmp_path):
+    """One sink period, its weights written to the noop sink, runs 5
+    jobs: the broadcast of the round scores, one reliable checkpoint of
+    the state, the two jobs of the sink total, and the write. A
+    non-sink round runs none."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    group = f"sink-period-{uuid.uuid4()}"
+    try:
+        pipe = SubnetPipeline.attach()
+        scores = init_scores(metagraph)
+        sc.setJobGroup(group, "one sink period")
+        for _ in range(SINK_PERIOD - 1):
+            scores, weights = pipe.validator_round(metagraph, scores)
+            assert weights is None
+        non_sink = _jobs(spark, group)
+        scores, weights = pipe.validator_round(metagraph, scores)
+        weights.write.format("noop").mode("overwrite").save()
+        assert _jobs(spark, group) == (5, 1)
+        assert non_sink == (0, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setCheckpointDir(None)
+
+
+def _plan_joins(df) -> int:
+    plan = df._jdf.queryExecution().analyzed().toString()
+    return sum(
+        1 for line in plan.splitlines() if re.match(r"[\s:+\-]*Join ", line)
+    )
+
+
+def _is_checkpoint_scan(df) -> bool:
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getSimpleName() == "LogicalRDD"
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_round_lineage_bounded_by_sink_period(spark, metagraph, tmp_path, reliable):
+    """Lineage is truncated once per sink period: the scores' plan
+    never holds SINK_PERIOD joins, and after each sink round it is a
+    checkpoint scan, with or without a checkpoint dir."""
+    sc = spark.sparkContext
+    if reliable:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        pipe = SubnetPipeline.attach()
+        scores = init_scores(metagraph)
+        for _ in range(7):
+            scores, weights = pipe.validator_round(metagraph, scores)
+            assert _plan_joins(scores) < SINK_PERIOD
+            if pipe.step % SINK_PERIOD == 0:
+                assert weights is not None
+                assert _is_checkpoint_scan(scores)
+            else:
+                assert not _is_checkpoint_scan(scores)
+    finally:
+        sc.setCheckpointDir(None)
