@@ -11,15 +11,60 @@ coalesces. Streaming plans run without AQE, so every streaming query is
 started through ``streaming/jobs.py::_start``, which caps the count at
 the session's task slots for that query's state partitions; the value
 set here stays the ceiling.
+
+Python workers. Every Python task (a pandas UDF, ``mapInPandas``, a
+Python data source) pays a fixed cost before its function runs, and on
+small inputs that cost is most of the task. Two parts of it are cut
+here, for local masters only, since a cluster's executors cannot see
+the driver's paths:
+
+* Spark starts its Python workers through ``workerpath/mrs_daemon.py``,
+  which stops each task from re-reading the ``pyspark.zip`` and Spark
+  jar archives on CPython before 3.13 (the module says why). That
+  module's directory, and only it, goes on the workers' PYTHONPATH:
+  the package stays off it, so the functions ``operators/llm.py``
+  ships by value cannot come to depend on it by accident. The shim can
+  go once the workers run CPython 3.13 or later.
+* Worker and driver sockets are Unix domain sockets in the session's
+  temp dir, which spares the first batch of each task a ~40 ms TCP
+  wait. Spark names a socket ``<dir>/.<uuid4>.sock``, the JVM takes
+  that path up to 106 bytes and Spark refuses a dir longer than 61
+  chars, so a temp dir too long for either keeps TCP
+  (``python_socket_confs``): a long temp path may cost speed, never
+  the session.
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
+
+WORKER_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "workerpath")
+# the longest socket path both ends accept, in bytes: AF_UNIX's 108-byte
+# sun_path holds 107 and a NUL for Python, and the JVM refuses 107
+UNIX_SOCKET_PATH_MAX = 106
+# the longest spark.python.unix.domain.socket.dir Spark accepts, in Java
+# chars, which equal str chars for any dir that passes the byte limit;
+# a longer one fails the session at start
+SPARK_SOCKET_DIR_MAX = 61
+
+
+def python_socket_confs(tmp_dir: str) -> dict[str, str]:
+    """Confs that make the Python worker and driver sockets Unix domain
+    sockets in ``tmp_dir`` when Spark accepts the dir and every socket
+    path it names there is short enough, and keep them on TCP otherwise."""
+    sock = os.path.join(tmp_dir, f".{uuid.UUID(int=0)}.sock")
+    if len(tmp_dir) > SPARK_SOCKET_DIR_MAX or len(os.fsencode(sock)) > UNIX_SOCKET_PATH_MAX:
+        return {"spark.python.unix.domain.socket.enabled": "false"}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": tmp_dir,
+    }
 
 
 def get_spark(
@@ -35,10 +80,10 @@ def get_spark(
     runtime size of a side is below the threshold, and splits skewed
     shuffle partitions (the salting fallback is in operators/joins.py).
     """
-    cpus = DEFAULT_CPUS
+    master = master or f"local[{DEFAULT_CPUS}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         # --- Adaptive execution: the scale story -------------------------
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -80,11 +125,10 @@ def get_spark(
         # sc.setLocalProperty("spark.scheduler.pool", <pool>).
         .config("spark.scheduler.mode", "FAIR")
         # --- Heap sizing: in local mode driver + all 32 executor
-        # threads share ONE JVM, and Spark's 1g default put a long
-        # bench run (224 queries, streaming state stores, memory
-        # sinks) one unlucky GC away from OutOfMemoryError — observed
-        # once late r9 (heap OOM in stream_tumbling_distinct_true
-        # killed the SparkContext and failed every later query). 16g
+        # threads share ONE JVM, and Spark's 1g default puts a long
+        # bench run (every query, streaming state stores, memory
+        # sinks) one unlucky GC away from an OutOfMemoryError, which
+        # kills the SparkContext and fails every later query. 16g
         # is still tiny against the 128 GiB harness box. Only takes
         # effect at JVM launch (getOrCreate on a live session ignores
         # it — e.g. under the driver's own pre-built session, which
@@ -93,6 +137,13 @@ def get_spark(
         # Quieter Ivy/UI in the harness.
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # --- Python workers: see the module docstring ------------------
+        builder = builder.config(map={
+            "spark.python.daemon.module": "mrs_daemon",
+            "spark.executorEnv.PYTHONPATH": WORKER_PATH,
+            **python_socket_confs(tempfile.gettempdir()),
+        })
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

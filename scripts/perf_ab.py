@@ -16,7 +16,10 @@ writes are copied into this checkout's ``.bench_out/`` as
 workload and metric it prints the base and change medians, the base's
 interquartile range, the relative change of the medians and the pairs
 in which the change was better; "better" is the metric's direction in
-``BENCHMARK.json``.
+``BENCHMARK.json``. Then, from the same records, it prints each
+operation's calm median (its median latency over its untraced
+executions with the least CPU steal, the rule perfbench applies) the
+same way, lower being better.
 Before committing the change, compare against ``--base HEAD``.
 
 Exits 1 when any run failed, reported ``correct: false`` or failed an
@@ -38,6 +41,10 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 RUN_TIMEOUT_S = 600
+# perfbench/host.py::calm: an execution under this CPU steal is calm,
+# and a median is taken over at least MIN_KEPT executions
+STEAL_CALM_PCT = 2.0
+MIN_KEPT = 3
 
 
 def export(rev: str | None, dest: str) -> None:
@@ -61,7 +68,8 @@ def export(rev: str | None, dest: str) -> None:
 
 
 def run(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict | None:
-    """One perfbench run; its JSON result, or None when it printed none."""
+    """One perfbench run; its JSON result with the per-operation calm
+    medians of its record under ``"ops"``, or None when it printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     try:
@@ -72,10 +80,30 @@ def run(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> 
         return None
     lines = proc.stdout.strip().splitlines()
     try:
-        return json.loads(lines[-1])
+        res = json.loads(lines[-1])
     except (IndexError, json.JSONDecodeError):
         print(proc.stderr[-2000:], file=sys.stderr)
         return None
+    rec = os.path.join(checkout, ".bench_out", f"{workload}-seed{seed}-trace{trace}.json")
+    with open(rec) as f:
+        res["ops"] = op_medians(json.load(f))
+    return res
+
+
+def op_medians(record: dict) -> dict[str, float]:
+    """Each operation's median latency over its calm untraced executions,
+    or over its ``MIN_KEPT`` calmest when fewer were calm."""
+    runs: dict[str, list[tuple[float, float]]] = {}
+    for ops, traced in zip(record["ops"], record["pass_traced"]):
+        for key, s, steal in ([] if traced else ops):
+            if s is not None:
+                runs.setdefault(key, []).append((steal, s))
+    out = {}
+    for key, execs in runs.items():
+        execs.sort()
+        n = max(sum(steal < STEAL_CALM_PCT for steal, _ in execs), MIN_KEPT)
+        out[key] = statistics.median(s for _, s in execs[:n])
+    return out
 
 
 def iqr(values: list[float]) -> float:
@@ -85,17 +113,22 @@ def iqr(values: list[float]) -> float:
     return q3 - q1
 
 
-def report(workload: str, pairs: list[tuple[dict, dict]], better: dict[str, str]) -> None:
-    print(f"\n{workload}: {len(pairs)} pairs")
+def report(title: str, rows: dict[str, tuple[list[float], list[float]]],
+           better: dict[str, str]) -> None:
+    """Per row: the base and change medians, the base IQR, their relative
+    change and the pairs in which the change was better."""
+    print(f"\n{title}")
     print(f"  {'metric':<26}{'base':>12}{'change':>12}{'base IQR':>12}{'rel':>9}  better")
-    for name in pairs[0][0]["metrics"]:
-        a = [p[0]["metrics"][name]["value"] for p in pairs]
-        b = [p[1]["metrics"][name]["value"] for p in pairs]
+    for name, (a, b) in rows.items():
         ma, mb = statistics.median(a), statistics.median(b)
         rel = f"{(mb - ma) / ma:+.1%}" if ma else "n/a"
         sign = -1 if better.get(name, "lower") == "lower" else 1
         wins = sum(sign * (y - x) > 0 for x, y in zip(a, b))
-        print(f"  {name:<26}{ma:>12.4g}{mb:>12.4g}{iqr(a):>12.3g}{rel:>9}  {wins}/{len(pairs)}")
+        print(f"  {name:<26}{ma:>12.4g}{mb:>12.4g}{iqr(a):>12.3g}{rel:>9}  {wins}/{len(a)}")
+
+
+def paired(pairs: list[tuple[dict, dict]], get) -> tuple[list[float], list[float]]:
+    return [get(p[0]) for p in pairs], [get(p[1]) for p in pairs]
 
 
 def main() -> int:
@@ -130,7 +163,12 @@ def main() -> int:
                 if all(r is not None for r in got.values()):
                     pairs.append((got["base"], got["change"]))
             if pairs:
-                report(workload, pairs, better)
+                report(f"{workload}: {len(pairs)} pairs",
+                       {name: paired(pairs, lambda r: r["metrics"][name]["value"])
+                        for name in pairs[0][0]["metrics"]}, better)
+                ops = [k for k in pairs[0][0]["ops"] if all(k in r["ops"] for p in pairs for r in p)]
+                report(f"{workload}: per-operation calm medians (s)",
+                       {key: paired(pairs, lambda r: r["ops"][key]) for key in ops}, {})
         keep = os.path.join(ROOT, ".bench_out")
         for side, checkout in sides.items():
             records = os.path.join(checkout, ".bench_out")
