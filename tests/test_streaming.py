@@ -7,8 +7,15 @@ differential oracle.
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from map_reduce_subnet_spark.operators import QUERIES
 from tests.conftest import SF_DIR
@@ -142,12 +149,20 @@ def test_stream_session_matches_batch_closed_sessions(spark):
 def test_memory_sink_views_are_dropped(spark):
     """Each _run_to_memory invocation must leave the catalog as it
     found it — round 1/2 leaked one uuid-named in-memory table per
-    streaming query for the session lifetime."""
-    before = {t.name for t in spark.catalog.listTables()}
-    df = QUERIES["stream_dedup_true"](spark, SF_DIR)
-    assert df.count() > 0  # frame must remain usable after the drop
-    after = {t.name for t in spark.catalog.listTables()}
-    assert after == before, f"leaked temp views: {after - before}"
+    streaming query for the session lifetime. The frame is resolved
+    before the drop, so it still reads the sink afterwards, the same
+    rows on every read, on both the ``available_now`` drain
+    (stream_dedup_true) and the ``process_all`` one
+    (stream_python_source_true)."""
+    for key in ("stream_dedup_true", "stream_python_source_true"):
+        before = {t.name for t in spark.catalog.listTables()}
+        df = QUERIES[key](spark, SF_DIR)
+        after = {t.name for t in spark.catalog.listTables()}
+        assert after == before, f"{key} leaked temp views: {after - before}"
+        first = sorted(map(tuple, df.collect()))
+        assert first, f"{key}: frame must remain usable after the drop"
+        assert sorted(map(tuple, df.collect())) == first, key
+        assert df.where(F.lit(True)).count() == len(first), key
 
 
 def test_stream_static_join_matches_batch(spark):
@@ -921,6 +936,7 @@ def test_cep_ooo_contiguous_boundary_and_fabrication_guard(
 _SCOPED_CONFS = (
     "spark.sql.streaming.noDataMicroBatches.enabled",
     "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.checkpointFileManagerClass",
 )
 
 
@@ -1008,3 +1024,154 @@ def test_stream_state_partitions_capped_at_task_slots(
         )
 
     assert counts == [min(8, slots), min(2, slots)], (counts, slots)
+
+
+@pytest.mark.parametrize("drain", ["available_now", "process_all"])
+def test_run_to_memory_starts_no_job_after_termination(
+    spark, tmp_path, monkeypatch, drain
+):
+    """The drained sink is handed back as is: once the query has
+    terminated, ``_run_to_memory`` starts no Spark job (a copy of the
+    sink's rows would be one). Every job the calling thread starts
+    after ``awaitTermination`` returns falls in a fresh job group."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
+
+    sc = spark.sparkContext
+    group = f"after-termination-{drain}"
+    await_termination = StreamingQuery.awaitTermination
+
+    def mark(self, timeout=None):
+        done = await_termination(self, timeout)
+        sc.setJobGroup(group, "after the drain")
+        return done
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", mark)
+    try:
+        df = _run_to_memory(
+            _dedup_stream(spark, tmp_path / "dedup").select("event_id"),
+            spark,
+            drain=drain,
+        )
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], jobs
+    assert sorted(r.event_id for r in df.collect()) == [0, 1, 2, 3, 4]
+
+
+def test_checkpoint_manager_is_local_only():
+    """Checkpoints on the local filesystem use the FileSystem-based
+    manager; any other scheme keeps Spark's default (None). An unset
+    or schemeless location resolves against ``fs.defaultFS``."""
+    from map_reduce_subnet_spark.streaming.jobs import (
+        _FS_CHECKPOINT_MANAGER,
+        _checkpoint_manager,
+    )
+
+    local = (None, "/tmp/ckpt", "ckpt", "file:/tmp/ckpt", "file:///tmp/ckpt")
+    for location in local:
+        for default_fs in (None, "file:///"):
+            got = _checkpoint_manager(location, default_fs)
+            assert got == _FS_CHECKPOINT_MANAGER, (location, default_fs)
+    for location in ("hdfs://nn:8020/ckpt", "s3a://bucket/ckpt"):
+        assert _checkpoint_manager(location, "file:///") is None
+    for location in (None, "/ckpt"):
+        assert _checkpoint_manager(location, "hdfs://nn:8020") is None
+    got = _checkpoint_manager("file:/ckpt", "hdfs://nn:8020")
+    assert got == _FS_CHECKPOINT_MANAGER
+
+
+_CHECKPOINT_SCRIPT = textwrap.dedent(
+    """
+    import json, os, sys
+    root, log, sf_dir, work = sys.argv[1:5]
+    sys.path.insert(0, root)
+    from map_reduce_subnet_spark.operators import QUERIES
+    from map_reduce_subnet_spark.session import get_spark
+    from map_reduce_subnet_spark.streaming.jobs import (
+        _read_event_stream,
+        _start,
+    )
+
+    spark = get_spark(master="local[4]", shuffle_partitions=4)
+
+
+    def logged():
+        with open(log) as f:
+            return f.read().split()
+
+
+    def checkpoint_files(name, start):
+        ckpt = os.path.join(work, name)
+        writer = (
+            _read_event_stream(spark, sf_dir)
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicates(["event_id"])
+            .writeStream.format("noop")
+            .trigger(availableNow=True)
+            .option("checkpointLocation", ckpt)
+        )
+        if not start(writer).awaitTermination(300):
+            raise TimeoutError(name)
+        return sorted(
+            os.path.relpath(os.path.join(d, f), ckpt)
+            for d, _, files in os.walk(ckpt)
+            for f in files
+        )
+
+
+    out = {}
+    n = len(logged())
+    QUERIES["stream_dedup_true"](spark, sf_dir).collect()
+    out["drain"] = logged()[n:]
+    n = len(logged())
+    out["scoped"] = checkpoint_files("scoped", lambda w: _start(w, spark))
+    out["scoped_forks"] = logged()[n:]
+    out["default"] = checkpoint_files("default", lambda w: w.start())
+    spark.stop()
+    print(json.dumps(out))
+    """
+)
+
+
+def test_local_checkpoints_fork_no_readlink_and_keep_their_files(tmp_path):
+    """Without the native Hadoop library, Spark's default checkpoint
+    manager forks a ``readlink`` per overwrite-rename (112 on a
+    stream_dedup_true drain at 4 state partitions). In a session whose
+    PATH leads with logging wrappers for Hadoop's shell commands, a
+    stateful ``_run_to_memory`` drain and a ``_start`` drain fork none.
+    The ``_start`` drain's checkpoint holds the same files, Hadoop's
+    ``.crc`` and Spark's ``N.delta.crc`` state checksums included, as
+    a plain ``writer.start()`` under Spark's default manager."""
+    from scripts.shell_forks import write_wrappers
+
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "commands.log"
+    log.touch()
+    write_wrappers(str(bin_dir), str(log))
+    env = {
+        **os.environ,
+        "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _CHECKPOINT_SCRIPT, root, str(log), SF_DIR,
+         str(tmp_path)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    assert "readlink" not in out["drain"], out["drain"]
+    assert "readlink" not in out["scoped_forks"], out["scoped_forks"]
+    assert out["scoped"] == out["default"]
+    files = out["scoped"]
+    assert {"state/0/0/1.delta.crc", "state/0/0/.1.delta.crc"} <= set(files)
+    assert {"offsets/.0.crc", "commits/.0.crc", "sources/0/.0.crc"} <= set(
+        files
+    )
