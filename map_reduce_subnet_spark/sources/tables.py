@@ -96,8 +96,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # accept it; UTC session makes the cast value-preserving
             df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture table (used by bench / ad-hoc exploration)."""
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

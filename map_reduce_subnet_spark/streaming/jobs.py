@@ -830,94 +830,6 @@ def stream_stream_join_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _run_to_memory(joined, spark, emit_on_arrival=True)
 
 
-def stream_stateful_topk_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second custom stateful streaming operator, on Spark 4's
-    arbitrary-state API (transformWithStateInPandas + a
-    StatefulProcessor): per-user running top-3 values. Unlike the
-    applyInPandasWithState EMA (a single (float, count) tuple), the
-    processor owns NAMED state (a 3-slot value state) through the
-    StatefulProcessorHandle — the API a deployment uses for
-    arbitrarily-shaped per-key state with TTL/timers.
-
-    NOT a registered @query: transformWithState's Python driver-worker
-    channel imports google.protobuf, which is broken in this container
-    (`cannot import name 'descriptor'`) and cannot be pip-installed
-    here — the query would be a guaranteed red driver row. The
-    implementation is kept callable (tests/test_streaming.py runs it
-    and checks it against the batch top-3 oracle, skipping when the
-    protobuf import fails) so environments with a working protobuf
-    light it up unchanged. Requires the RocksDB state store provider
-    (set by the caller / test).
-
-    With one availableNow batch over the static fixture the final
-    per-user emission is the corpus-wide top-3 (values-only multiset:
-    ordering among equal values cannot change v1 >= v2 >= v3). The
-    processor class is defined INSIDE this function — cloudpickle
-    ships locally-defined classes by value, module-level ones by
-    reference (the driver's workers lack this repo on sys.path)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType as _D,
-        LongType as _L,
-        StructField as _SF,
-        StructType as _ST,
-    )
-
-    state_schema = _ST([_SF("v1", _D()), _SF("v2", _D()), _SF("v3", _D())])
-    out_schema = _ST(
-        [
-            _SF("user_id", _L()),
-            _SF("v1", _D()),
-            _SF("v2", _D()),
-            _SF("v3", _D()),
-        ]
-    )
-
-    class TopKProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._top = handle.getValueState("top3", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            best = list(self._top.get()) if self._top.exists() else []
-            best = [v for v in best if v is not None]
-            for pdf in rows:
-                for v in pdf["value"]:
-                    best.append(float(v))
-                best.sort(reverse=True)
-                best = best[:3]
-            padded = (best + [None, None, None])[:3]
-            self._top.update(tuple(padded))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "v1": [padded[0]],
-                    "v2": [padded[1]],
-                    "v3": [padded[2]],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    ev = _read_event_stream(spark, sf_dir)
-    out = (
-        ev.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=TopKProcessor(),
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    return _run_to_memory(out, spark, output_mode="update")
-
-
 def upsert_latest_merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
     """The per-batch latest-wins MERGE used by stream_upsert_foreachbatch,
     module-level so its foreachBatch REPLAY idempotency is directly

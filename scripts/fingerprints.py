@@ -1,19 +1,16 @@
-"""Per-key change fingerprints for the sweep-rotation contract.
+"""Per-key fingerprints and the verified-fingerprint ledger.
 
-VERDICT r11 #2: round 11 changed 48 keys (43 oracle strings + the
-5-key VersionedTable engine path) but shipped the previous round's
-``_SWEEP_PRIORITY`` verbatim, so 34 changed keys reached the driver
-with no CORRECTNESS row for their current program. The rotation rule
-("changed keys MUST sit inside the sweep cap",
-``__spark_entry__.py``) was human-enforced and failed under a short
-round — this module mechanizes it.
+The driver checks only the first ``SWEEP_CAP`` keys of
+``__spark_entry__.queries()``. Like the reference validator, which
+trusts only responses it re-verified against its own oracle
+(neurons/validator.py:134-141), a key counts as verified only for the
+program a green driver CORRECTNESS row checked.
 
 A key's fingerprint is ``md5`` over:
 
 * its registered ORACLE string (the EXPANDED text stored in
   ``ORACLES`` — so an ``sql_dsum``/``_sql_finite`` helper edit that
-  changes the emitted SQL changes every consumer's fingerprint, which
-  is exactly what the r11 incident needed), and
+  changes the emitted SQL changes every consumer's fingerprint), and
 * the SOURCE of its engine function plus the transitive closure of
   package-defined callables/classes it references — resolved both
   through module-level globals (``co_names`` of the function and its
@@ -23,33 +20,41 @@ A key's fingerprint is ``md5`` over:
   ``functions/stable.py::_finite`` or ``sources/versioned.py``
   rewrite fingers every downstream key.
 
-Ritual (pinned by tests/test_correctness.py):
+The ledger, ``verified_fingerprints.json``, maps each key to
+``{"fingerprint", "round"}``: its fingerprint and round as of its
+newest driver CORRECTNESS row where ``rows_match``, ``schema_match``
+and ``hash_match`` are all true. A key is *unverified* when it is
+missing from the ledger or its live fingerprint differs from the
+ledger's. ``__spark_entry__`` sorts the unverified keys first, then
+the verified ones oldest round first.
 
-* ``python scripts/fingerprints.py`` regenerates
-  ``scripts/fingerprints.json``. Regenerate ONLY in the same change
-  that rotates ``_SWEEP_PRIORITY`` for the round — the committed
-  file means "the registry state the CURRENT sweep list was written
-  against".
-* The pinned test recomputes fingerprints and asserts every key that
-  differs from (or is absent from) the committed file appears in
-  ``_SWEEP_PRIORITY``. Editing an oracle or engine path without
-  rotating the sweep list fails the suite.
+Usage:
 
-Grounding: the oracle-vs-engine exact-match contract the project
-generalizes (reference neurons/validator.py:134-141 — a validator
-only trusts responses it re-verified against its own oracle).
+* ``python scripts/fingerprints.py`` only reads: it prints the
+  unverified keys, their count and the free slots (``SWEEP_CAP``
+  minus that count); tests/test_correctness.py fails below zero.
+* ``python scripts/fingerprints.py --advance CORRECTNESS_rN.json REV``
+  is the only way the ledger changes. Run it when a driver round
+  lands, with REV the commit the driver ran. It fingerprints
+  ``git archive REV`` in a subprocess with the current algorithm and
+  sets ``(fingerprint, N)`` for each key with a green row; every
+  other key keeps its entry, so it stays unverified.
 """
 
 from __future__ import annotations
 
+import argparse
 import ast
 import hashlib
 import importlib
+import importlib.util
 import inspect
-import io
 import json
 import os
+import re
+import subprocess
 import sys
+import tempfile
 import textwrap
 
 _PKG = "map_reduce_subnet_spark"
@@ -131,38 +136,19 @@ def _local_package_imports(src: str):
             yield obj
 
 
-def _referenced_globals(fn):
-    """Objects reachable through co_names of fn + nested code objects."""
-    code_objs = [fn.__code__]
-    i = 0
-    while i < len(code_objs):
-        for const in code_objs[i].co_consts:
-            if inspect.iscode(const):
-                code_objs.append(const)
-        i += 1
-    names = set()
-    for c in code_objs:
-        names.update(c.co_names)
-    g = getattr(fn, "__globals__", {})
-    for name in names:
-        if name in g:
-            yield g[name]
-
-
 def _code_names(fn) -> set[str]:
     """co_names of fn plus every nested code object (lambdas,
     closures) — covers both global references and ATTRIBUTE names."""
     code_objs = [fn.__code__]
-    i = 0
-    while i < len(code_objs):
-        for const in code_objs[i].co_consts:
-            if inspect.iscode(const):
-                code_objs.append(const)
-        i += 1
-    names: set[str] = set()
-    for c in code_objs:
-        names.update(c.co_names)
-    return names
+    for code in code_objs:
+        code_objs.extend(c for c in code.co_consts if inspect.iscode(c))
+    return {name for code in code_objs for name in code.co_names}
+
+
+def _referenced_globals(fn, names: set[str]) -> list:
+    """The objects ``names`` resolve to in fn's module globals."""
+    g = getattr(fn, "__globals__", {})
+    return [g[name] for name in names if name in g]
 
 
 def _closure_sources(fn, seen: set[int], out: list[str]) -> None:
@@ -172,22 +158,16 @@ def _closure_sources(fn, seen: set[int], out: list[str]) -> None:
     seen.add(id(fn))
     out.append(src)
     names = _code_names(fn)
-    referenced = list(_referenced_globals(fn))
+    referenced = _referenced_globals(fn, names)
     referenced.extend(_local_package_imports(src))
     # classes: recurse into their methods' references too
     for obj in referenced:
         if inspect.ismodule(obj):
-            # cross-module helpers are referenced as module
-            # attributes (`tx.shingles(...)`): the attribute name
-            # sits in co_names next to the module's own name, so
-            # resolve each co_name AGAINST the module — per-attribute
-            # precision (an edit to functions/text.py fingers only
-            # the keys that actually reach the edited helper, not
-            # every key that imports the module). Over-inclusion from
-            # a coincidentally-shared name is harmless (a few extra
-            # sources in the bag); under-inclusion would miss real
-            # changes, so both the module's own functions AND classes
-            # resolve here.
+            # a module attribute (`tx.shingles(...)`) sits in
+            # co_names next to the module's name: resolve each co_name
+            # against the module, so an edit fingers only the keys
+            # that reach the edited helper. A name shared by chance
+            # only adds sources; functions and classes both resolve.
             mname = getattr(obj, "__name__", "")
             if not (mname == _PKG or mname.startswith(_PKG + ".")):
                 continue
@@ -206,7 +186,9 @@ def _closure_sources(fn, seen: set[int], out: list[str]) -> None:
                 seen.add(id(obj))
                 out.append(csrc)
                 for _, meth in inspect.getmembers(obj, inspect.isfunction):
-                    for sub in list(_referenced_globals(meth)) + list(
+                    for sub in _referenced_globals(
+                        meth, _code_names(meth)
+                    ) + list(
                         _local_package_imports(
                             _package_obj_source(meth) or ""
                         )
@@ -233,21 +215,109 @@ def compute_fingerprints() -> dict[str, str]:
     return fps
 
 
-FINGERPRINT_FILE = os.path.join(
-    os.path.dirname(os.path.abspath(__file__)), "fingerprints.json"
-)
+_HERE = os.path.dirname(os.path.abspath(__file__))
+_REPO = os.path.dirname(_HERE)
+LEDGER_FILE = os.path.join(_HERE, "verified_fingerprints.json")
+_GREEN = ("rows_match", "schema_match", "hash_match")
+
+
+def load_ledger(path: str = LEDGER_FILE) -> dict[str, dict]:
+    with open(path) as f:
+        return json.load(f)
+
+
+def unverified(live: dict[str, str], ledger: dict[str, dict]) -> list[str]:
+    """Keys whose live fingerprint is not the one the ledger verified."""
+    return sorted(
+        k for k, fp in live.items() if ledger.get(k, {}).get("fingerprint") != fp
+    )
+
+
+def fingerprints_at(rev: str) -> dict[str, str]:
+    """Fingerprints of the package as committed at ``rev``, computed in
+    a fresh interpreter so that it imports the archived tree."""
+    archive = subprocess.run(
+        ["git", "-C", _REPO, "archive", rev, _PKG],
+        check=True,
+        capture_output=True,
+    ).stdout
+    with tempfile.TemporaryDirectory() as tree:
+        subprocess.run(["tar", "-x", "-C", tree], input=archive, check=True)
+        out = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "--compute", tree],
+            check=True,
+            capture_output=True,
+            text=True,
+            cwd=tree,
+        ).stdout
+    return json.loads(out.splitlines()[-1])
+
+
+def advance(
+    correctness_file: str, rev: str, ledger_file: str = LEDGER_FILE
+) -> list[str]:
+    """Record the keys a driver round verified; returns them."""
+    match = re.search(r"CORRECTNESS_r(\d+)\.json$", correctness_file)
+    if match is None:
+        raise ValueError(f"not a CORRECTNESS_rN.json: {correctness_file}")
+    rnd = int(match.group(1))
+    with open(correctness_file) as f:
+        rows = json.load(f)
+    fps = fingerprints_at(rev)
+    ledger = load_ledger(ledger_file)
+    green = sorted(
+        k
+        for k, row in rows.items()
+        if all(row.get(c) is True for c in _GREEN)
+        and ledger.get(k, {}).get("round", 0) <= rnd
+    )
+    for k in green:
+        ledger[k] = {"fingerprint": fps[k], "round": rnd}
+    lines = [
+        f"{json.dumps(k)}: {json.dumps(ledger[k], sort_keys=True)}"
+        for k in sorted(ledger)
+    ]
+    with open(ledger_file, "w") as f:
+        f.write("{\n" + ",\n".join(lines) + "\n}\n")
+    return green
+
+
+def _sweep_cap() -> int:
+    spec = importlib.util.spec_from_file_location(
+        "_sweep_entry", os.path.join(_REPO, "__spark_entry__.py")
+    )
+    entry = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(entry)
+    return entry.SWEEP_CAP
 
 
 def main() -> None:
-    sys.path.insert(
-        0,
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ap = argparse.ArgumentParser(
+        description="Print the unverified keys, or advance the ledger."
     )
-    fps = compute_fingerprints()
-    with io.open(FINGERPRINT_FILE, "w") as f:
-        json.dump(fps, f, indent=0, sort_keys=True)
-        f.write("\n")
-    print(f"wrote {len(fps)} fingerprints to {FINGERPRINT_FILE}")
+    ap.add_argument(
+        "--advance",
+        nargs=2,
+        metavar=("CORRECTNESS_rN.json", "REV"),
+        help="record the green rows of a driver round run at REV",
+    )
+    ap.add_argument("--compute", metavar="TREE", help=argparse.SUPPRESS)
+    args = ap.parse_args()
+    if args.compute:
+        sys.path.insert(0, args.compute)
+        print(json.dumps(compute_fingerprints(), sort_keys=True))
+        return
+    if args.advance:
+        green = advance(*args.advance)
+        print(f"advanced {len(green)} keys in {LEDGER_FILE}")
+        return
+    sys.path.insert(0, _REPO)
+    stale = unverified(compute_fingerprints(), load_ledger())
+    cap = _sweep_cap()
+    for k in stale:
+        print(k)
+    print(f"{len(stale)} unverified keys, SWEEP_CAP {cap}, "
+          f"free slots: {cap - len(stale)}")
 
 
 if __name__ == "__main__":

@@ -45,34 +45,24 @@ def test_entry_smoke(spark):
 
 
 def test_changed_keys_are_in_sweep_priority():
-    """Mechanized sweep-rotation rule (VERDICT r11 #2): r11 edited 43
-    oracle strings and a 5-key engine path but shipped the r10 sweep
-    list verbatim, so 34 changed keys reached the driver unverified.
-    scripts/fingerprints.json records key -> md5(oracle text + the
-    transitive package source closure of its engine function) as of
-    the last sweep-list rotation; any key whose live fingerprint
-    differs (or that is new) MUST be inside _SWEEP_PRIORITY. Editing
-    an oracle or an engine helper without rotating the list fails
-    here. Regenerate the file (python scripts/fingerprints.py) ONLY
-    in the same change that rotates _SWEEP_PRIORITY."""
-    import json
-
+    """Every key whose live fingerprint is not the one a green driver
+    CORRECTNESS row verified (scripts/verified_fingerprints.json) must
+    fit inside the SWEEP_CAP prefix of queries(), or the driver would
+    never check its current program. An oracle or engine edit that
+    fingers more keys than there are free slots fails here."""
     import __spark_entry__ as e
-    from scripts.fingerprints import FINGERPRINT_FILE, compute_fingerprints
-
-    with open(FINGERPRINT_FILE) as f:
-        committed = json.load(f)
-    live = compute_fingerprints()
-    changed = sorted(
-        k for k, fp in live.items() if committed.get(k) != fp
+    from scripts.fingerprints import (
+        compute_fingerprints,
+        load_ledger,
+        unverified,
     )
-    missing = [k for k in changed if k not in e._SWEEP_PRIORITY]
-    assert not missing, (
-        "keys changed since the last sweep rotation but absent from "
-        f"_SWEEP_PRIORITY (driver would never re-verify them): {missing}. "
-        "Add them to __spark_entry__._SWEEP_PRIORITY (displacing backfill "
-        "slots), then regenerate scripts/fingerprints.json in the SAME "
-        "change."
+
+    stale = unverified(compute_fingerprints(), load_ledger())
+    free = e.SWEEP_CAP - len(stale)
+    assert free >= 0, (
+        f"{len(stale)} unverified keys, SWEEP_CAP {e.SWEEP_CAP}, "
+        f"free slots: {free}; the driver would never check {-free} of "
+        f"them: {stale}"
     )
 
 
@@ -106,19 +96,93 @@ def test_media_key_fingerprint_covers_codec(key, codec):
 
 
 def test_entry_sweep_order():
-    """The driver checks only a prefix of queries() (SWEEP_CAP entries,
-    observed in rounds 1-2) — the priority list must be real keys, fit
-    in that prefix, and lead the returned dict so never-swept and
-    changed-this-round operators get a CORRECTNESS row before the cap
-    hits. The cap lives in ONE place (__spark_entry__.SWEEP_CAP) so a
-    registry/cap change can't silently push changed keys past it."""
+    """queries() orders the whole registry: the unverified keys first,
+    then the verified ones by (ledger round, key), so the driver's
+    SWEEP_CAP prefix checks changed programs before it refreshes the
+    oldest rows. oracle_sql() follows the same order."""
+    import __spark_entry__ as e
+    from scripts.fingerprints import (
+        compute_fingerprints,
+        load_ledger,
+        unverified,
+    )
+
+    qs, osql = list(e.queries()), list(e.oracle_sql())
+    assert sorted(qs) == sorted(QUERIES)
+    assert osql == [k for k in qs if k in ORACLES]
+    ledger = load_ledger()
+    stale = unverified(compute_fingerprints(), ledger)
+    assert sorted(qs[: len(stale)]) == stale
+    rest = qs[len(stale) :]
+    assert rest == sorted(rest, key=lambda k: (ledger[k]["round"], k))
+
+
+def test_advance_records_only_green_rows(tmp_path):
+    """--advance sets (fingerprint at REV, round N) for each key whose
+    row matched on rows, schema and hash; every other key keeps its
+    entry, so it stays unverified."""
+    import json
+
+    from scripts.fingerprints import (
+        advance,
+        compute_fingerprints,
+        load_ledger,
+    )
+
+    green, red = sorted(QUERIES)[:2]
+    ledger = load_ledger()
+    ledger[green] = {"fingerprint": "stale", "round": 1}
+    ledger_file = tmp_path / "verified_fingerprints.json"
+    ledger_file.write_text(json.dumps(ledger))
+    row = {"rows_match": True, "schema_match": True, "hash_match": True}
+    rows = tmp_path / "CORRECTNESS_r99.json"
+    rows.write_text(
+        json.dumps({green: row, red: {**row, "hash_match": False}})
+    )
+
+    assert advance(str(rows), "HEAD", str(ledger_file)) == [green]
+    after = load_ledger(str(ledger_file))
+    assert after[green] == {
+        "fingerprint": compute_fingerprints()[green],
+        "round": 99,
+    }
+    del after[green], ledger[green]
+    assert after == ledger
+
+
+def test_entry_sweep_order_ignores_foreign_scripts_package(tmp_path):
+    """The driver loads __spark_entry__.py by path from its own cwd, in
+    a process that may already hold a `scripts` module of its own: the
+    order must still come from the scripts/fingerprints.py beside the
+    entry file, so it must not be imported as `scripts.fingerprints`."""
+    import json
+    import os
+    import subprocess
+    import sys
+
     import __spark_entry__ as e
 
-    qs, osql = e.queries(), e.oracle_sql()
-    assert set(qs) == set(QUERIES)  # ordering must not drop keys
-    assert set(osql) == set(ORACLES)
-    prio = e._SWEEP_PRIORITY
-    assert len(prio) == len(set(prio)), "duplicate priority keys"
-    assert len(prio) <= e.SWEEP_CAP, "priority list exceeds the sweep cap"
-    assert not set(prio) - set(QUERIES), "priority names not in registry"
-    assert list(qs)[: len(prio)] == prio
+    decoy = tmp_path / "decoy" / "scripts"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "fingerprints.py").write_text(
+        "def compute_fingerprints():\n"
+        "    raise RuntimeError('decoy scripts package imported')\n"
+    )
+    code = (
+        "import importlib.util, json, scripts.fingerprints\n"
+        f"spec = importlib.util.spec_from_file_location('e', {e.__file__!r})\n"
+        "m = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(m)\n"
+        "print(json.dumps(list(m.queries())))\n"
+    )
+    path = [str(tmp_path / "decoy"), os.environ.get("PYTHONPATH", "")]
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": os.pathsep.join(path)},
+        capture_output=True,
+        text=True,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert json.loads(proc.stdout.splitlines()[-1]) == list(e.queries())
