@@ -12,26 +12,33 @@ started through ``streaming/jobs.py::_start``, which caps the count at
 the session's task slots for that query's state partitions; the value
 set here stays the ceiling.
 
-Python workers. Every Python task (a pandas UDF, ``mapInPandas``, a
-Python data source) pays a fixed cost before its function runs, and on
-small inputs that cost is most of the task. Two parts of it are cut
-here, for local masters only, since a cluster's executors cannot see
-the driver's paths:
+Python workers. Every Python process and task (a pandas UDF,
+``mapInPandas``, a Python data source, a Python streaming source or
+sink) pays a fixed cost before its function runs, and on small inputs
+that cost is most of the work. Three parts of it are cut here, for
+local masters only, since a cluster's executors cannot see the driver's
+paths. One directory, ``workerpath/``, goes on the workers' PYTHONPATH,
+and the package stays off it, so the functions ``operators/llm.py``
+ships by value cannot come to depend on it by accident. Its
+``sitecustomize.py`` runs in every worker interpreter: the daemon, and
+the Python streaming runners the JVM starts without it (the module
+says why and what it measured):
 
-* Spark starts its Python workers through ``workerpath/mrs_daemon.py``,
-  which stops each task from re-reading the ``pyspark.zip`` and Spark
-  jar archives on CPython before 3.13 (the module says why). That
-  module's directory, and only it, goes on the workers' PYTHONPATH:
-  the package stays off it, so the functions ``operators/llm.py``
-  ships by value cannot come to depend on it by accident. The shim can
-  go once the workers run CPython 3.13 or later.
+* ``import pyspark`` and ``import py4j`` resolve to the installed,
+  bytecode-compiled copies when their ``version.py`` equals the one in
+  Spark's source-only ``pyspark.zip`` and ``py4j-*-src.zip``, so no
+  process compiles PySpark from the zip; on a mismatch the archives
+  stay first on the path, as Spark put them.
+* On CPython before 3.13 a task's ``importlib.invalidate_caches()``
+  re-reads a zip archive (the Spark jar on the path, or an archive
+  kept above) only when the archive changed.
 * Worker and driver sockets are Unix domain sockets in the session's
   temp dir, which spares the first batch of each task a ~40 ms TCP
   wait. Spark names a socket ``<dir>/.<uuid4>.sock``, the JVM takes
   that path up to 106 bytes and Spark refuses a dir longer than 61
   chars, so a temp dir too long for either keeps TCP
   (``python_socket_confs``): a long temp path may cost speed, never
-  the session.
+  the session. This part is a conf, not the start-up module.
 """
 
 from __future__ import annotations
@@ -140,7 +147,6 @@ def get_spark(
     if master.startswith("local"):
         # --- Python workers: see the module docstring ------------------
         builder = builder.config(map={
-            "spark.python.daemon.module": "mrs_daemon",
             "spark.executorEnv.PYTHONPATH": WORKER_PATH,
             **python_socket_confs(tempfile.gettempdir()),
         })

@@ -18,8 +18,14 @@ interquartile range, the relative change of the medians and the pairs
 in which the change was better; "better" is the metric's direction in
 ``BENCHMARK.json``. Then, from the same records, it prints each
 operation's calm median (its median latency over its untraced
-executions with the least CPU steal, the rule perfbench applies) the
-same way, lower being better.
+executions with the least CPU steal, the rule perfbench applies) and
+its cold latency the same way, lower being better. An operation's cold
+latency is its mean over the run's set-ups, each of which runs every
+operation once on a new session in a shuffled order. A mean, not a
+median: the one-time cost of a set-up (such as starting the Python
+workers) lands on whichever operation runs first, so a median over
+three set-ups would drop it, while the means add up to the cold pass.
+They show which operation a ``setup_s`` change came from.
 Before committing the change, compare against ``--base HEAD``.
 
 Exits 1 when any run failed, reported ``correct: false`` or failed an
@@ -69,7 +75,8 @@ def export(rev: str | None, dest: str) -> None:
 
 def run(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict | None:
     """One perfbench run; its JSON result with the per-operation calm
-    medians of its record under ``"ops"``, or None when it printed none."""
+    medians and cold means of its record under ``"ops"`` and ``"cold"``,
+    or None when it printed none."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", str(trace)]
     try:
@@ -86,7 +93,9 @@ def run(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> 
         return None
     rec = os.path.join(checkout, ".bench_out", f"{workload}-seed{seed}-trace{trace}.json")
     with open(rec) as f:
-        res["ops"] = op_medians(json.load(f))
+        record = json.load(f)
+    res["ops"] = op_medians(record)
+    res["cold"] = cold_means(record)
     return res
 
 
@@ -104,6 +113,16 @@ def op_medians(record: dict) -> dict[str, float]:
         n = max(sum(steal < STEAL_CALM_PCT for steal, _ in execs), MIN_KEPT)
         out[key] = statistics.median(s for _, s in execs[:n])
     return out
+
+
+def cold_means(record: dict) -> dict[str, float]:
+    """Each operation's mean latency over the run's set-ups."""
+    runs: dict[str, list[float]] = {}
+    for ops in record["setup_ops"]:
+        for key, s in ops:
+            if s is not None:
+                runs.setdefault(key, []).append(s)
+    return {key: statistics.fmean(times) for key, times in runs.items()}
 
 
 def iqr(values: list[float]) -> float:
@@ -166,9 +185,11 @@ def main() -> int:
                 report(f"{workload}: {len(pairs)} pairs",
                        {name: paired(pairs, lambda r: r["metrics"][name]["value"])
                         for name in pairs[0][0]["metrics"]}, better)
-                ops = [k for k in pairs[0][0]["ops"] if all(k in r["ops"] for p in pairs for r in p)]
-                report(f"{workload}: per-operation calm medians (s)",
-                       {key: paired(pairs, lambda r: r["ops"][key]) for key in ops}, {})
+                for field, title in (("ops", "calm medians"), ("cold", "cold means")):
+                    ops = [k for k in pairs[0][0][field]
+                           if all(k in r[field] for p in pairs for r in p)]
+                    report(f"{workload}: per-operation {title} (s)",
+                           {key: paired(pairs, lambda r: r[field][key]) for key in ops}, {})
         keep = os.path.join(ROOT, ".bench_out")
         for side, checkout in sides.items():
             records = os.path.join(checkout, ".bench_out")

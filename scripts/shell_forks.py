@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Count the shell commands a registered query forks while it runs.
+"""Count the shell commands and Python interpreters a registered query
+starts while it runs.
 
     python3 scripts/shell_forks.py [--sf-dir DIR] [--master local[4]] KEY...
 
@@ -8,16 +9,22 @@ shell command for some file operations: ``chmod`` for every file it
 creates and directory it makes, ``readlink`` for every link-status
 lookup (Spark's default checkpoint manager does one per overwrite-
 rename), ``ls``/``stat`` for some permission reads. Each is a process
-fork on the calling task's thread.
+fork on the calling task's thread. Spark also starts a Python
+interpreter for its worker daemon, once per session, and for the
+source or sink runner of each Python streaming query, once per drain;
+every other Python worker is a fork of the daemon. Every interpreter
+start pays Python's and PySpark's imports.
 
 The script writes a logging wrapper for each command in
-:data:`COMMANDS` into a temp dir, then starts a ``get_spark`` session
-in a subprocess whose ``PATH`` leads with that dir, so the JVM and
-every process it starts run the wrappers. Each key runs twice (the
-result is collected); the first run pays the one-time class loading
-and fixture-artifact builds, and only the second run's commands are
-counted. Prints one JSON object, ``{key: {command: count}}``; a key
-that forks nothing maps to ``{}``.
+:data:`COMMANDS` into a temp dir, and one named ``python`` for the
+worker interpreter (``PYSPARK_PYTHON``, else ``python3``), then starts
+a ``get_spark`` session in a subprocess whose ``PATH`` leads with that
+dir and whose ``PYSPARK_PYTHON`` is the interpreter's wrapper, so the
+JVM and every process it starts run the wrappers. Each key runs twice
+(the result is collected); the first run pays the one-time class
+loading, fixture-artifact builds and the daemon's start, and only the
+second run's commands are counted. Prints one JSON object, ``{key:
+{command: count}}``; a key that starts nothing maps to ``{}``.
 
 The fixture dir defaults to the sf0.01 tier next to the tests' fixture
 dir (``tests/conftest.py::SF_DIR``).
@@ -66,17 +73,23 @@ print(json.dumps(out))
 """
 
 
+def write_wrapper(bin_dir: str, name: str, real: str, log: str) -> str:
+    """A ``sh`` wrapper ``bin_dir/name`` that appends ``name`` to ``log``,
+    then execs ``real``; its path."""
+    path = os.path.join(bin_dir, name)
+    with open(path, "w") as f:
+        f.write(f'#!/bin/sh\necho {name} >> "{log}"\nexec "{real}" "$@"\n')
+    os.chmod(path, 0o755)
+    return path
+
+
 def write_wrappers(bin_dir: str, log: str) -> None:
-    """A ``sh`` wrapper per command in ``bin_dir``: append the command's
-    name to ``log``, then exec the real binary found on ``PATH`` now."""
+    """A wrapper per command in ``bin_dir`` for the real binary found on
+    ``PATH`` now."""
     for cmd in COMMANDS:
         real = shutil.which(cmd)
-        if real is None:
-            continue
-        path = os.path.join(bin_dir, cmd)
-        with open(path, "w") as f:
-            f.write(f'#!/bin/sh\necho {cmd} >> "{log}"\nexec "{real}" "$@"\n')
-        os.chmod(path, 0o755)
+        if real is not None:
+            write_wrapper(bin_dir, cmd, real, log)
 
 
 def count_forks(
@@ -89,7 +102,9 @@ def count_forks(
         log = os.path.join(tmp, "commands.log")
         open(log, "w").close()
         write_wrappers(bin_dir, log)
-        env = {**os.environ, "PATH": bin_dir + os.pathsep + os.environ["PATH"]}
+        worker = shutil.which(os.environ.get("PYSPARK_PYTHON", "python3"))
+        env = {**os.environ, "PATH": bin_dir + os.pathsep + os.environ["PATH"],
+               "PYSPARK_PYTHON": write_wrapper(bin_dir, "python", worker, log)}
         env.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
         proc = subprocess.run(
             [sys.executable, "-c", _CHILD, ROOT, log, sf_dir, master, *keys],

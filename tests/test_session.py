@@ -1,14 +1,21 @@
 """The session's Python-worker set-up (``session.py``, "Python workers").
 
-A Python task's fixed cost is pinned where it is paid: inside a worker
-of the test session, an ``importlib.invalidate_caches()`` re-reads no
-unchanged zip archive, yet a changed archive is still seen. The
-socket-path guard is pinned as a pure function, and end to end on
-sessions whose temp dir sits at either side of it.
+A Python process's fixed cost is pinned where it is paid: a worker of
+the test session, a data source planner and a streaming source runner
+(a process started without the daemon) all import the installed
+PySpark rather than Spark's source-only archives, and inside
+a worker an ``importlib.invalidate_caches()`` re-reads no unchanged zip
+archive, yet a changed archive is still seen. The start-up module's
+archive check and its chain-loading run in plain subprocesses with
+synthetic archives. The socket-path guard is pinned as a pure
+function, and end to end on sessions whose temp dir sits at either
+side of it.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import os
 import shutil
 import subprocess
@@ -23,6 +30,7 @@ import pytest
 from map_reduce_subnet_spark.session import (
     SPARK_SOCKET_DIR_MAX,
     UNIX_SOCKET_PATH_MAX,
+    WORKER_PATH,
     python_socket_confs,
 )
 
@@ -105,6 +113,157 @@ def test_worker_sees_a_rewritten_zip(spark, tmp_path):
         return {"before": before, "after": after}
 
     assert _run_in_worker(spark, probe, "before long, after long") == {"before": 1, "after": 2}
+
+
+def _is_shipped_archive(entry: str) -> bool:
+    name = os.path.basename(entry)
+    return name == "pyspark.zip" or (name.startswith("py4j-") and name.endswith("-src.zip"))
+
+
+def test_worker_imports_installed_pyspark(spark):
+    def probe():
+        import py4j
+        import pyspark
+
+        return {"pyspark": pyspark.__file__, "py4j": py4j.__file__,
+                "path": os.pathsep.join(sys.path)}
+
+    got = _run_in_worker(spark, probe, "pyspark string, py4j string, path string")
+    assert os.path.isfile(got["pyspark"]), got
+    assert os.path.isfile(got["py4j"]), got
+    assert not [e for e in got["path"].split(os.pathsep) if _is_shipped_archive(e)], got
+
+
+def test_planner_process_imports_installed_pyspark(spark):
+    """A Python data source's ``schema()`` runs in a planner process,
+    which imports its worker module after the daemon forks it; it
+    names its column after where that process imported ``pyspark``
+    from."""
+    from pyspark.sql.datasource import DataSource
+
+    class PysparkOrigin(DataSource):
+        @classmethod
+        def name(cls):
+            return "mrs_pyspark_origin"
+
+        def schema(self):
+            import os
+
+            import pyspark
+
+            return ("installed" if os.path.isfile(pyspark.__file__) else "archive") + " string"
+
+    spark.dataSource.register(PysparkOrigin)
+    assert spark.read.format("mrs_pyspark_origin").load().columns == ["installed"]
+
+
+def test_stream_source_runner_imports_installed_pyspark(spark):
+    """A Python streaming source's reader runs in a process the JVM
+    starts without the daemon, one per drain; its one row names where
+    that process imported ``pyspark`` from."""
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
+
+    class OriginReader(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"done": 0}
+
+        def read(self, start):
+            if start["done"]:
+                return iter([]), start
+            import os
+
+            import pyspark
+
+            origin = "installed" if os.path.isfile(pyspark.__file__) else "archive"
+            return iter([(origin,)]), {"done": 1}
+
+        def readBetweenOffsets(self, start, end):
+            return self.read(start)[0]
+
+    class OriginSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "mrs_stream_origin"
+
+        def schema(self):
+            return "origin string"
+
+        def simpleStreamReader(self, schema):
+            return OriginReader()
+
+    spark.dataSource.register(OriginSource)
+    stream = spark.readStream.format("mrs_stream_origin").load()
+    rows = _run_to_memory(stream, spark, drain="process_all").collect()
+    assert [r.origin for r in rows] == ["installed"]
+
+
+_PATH_PROBE = textwrap.dedent(
+    """
+    import json, sys
+    import sitecustomize
+    print(json.dumps({"hook": sitecustomize.__file__, "path": sys.path,
+                      "decoy": getattr(sys, "mrs_decoy_ran", False)}))
+    """
+)
+
+
+def _shipped_zip(path, package: str, version: bytes) -> str:
+    path.parent.mkdir(parents=True, exist_ok=True)
+    with zipfile.ZipFile(path, "w") as zf:
+        zf.writestr(f"{package}/__init__.py", "")
+        zf.writestr(f"{package}/version.py", version)
+    return str(path)
+
+
+def _installed_version(package: str) -> bytes:
+    spec = importlib.util.find_spec(package)
+    with open(os.path.join(spec.submodule_search_locations[0], "version.py"), "rb") as f:
+        return f.read()
+
+
+def _start_python(cwd, pythonpath: list[str], *flags: str) -> dict:
+    """Start an interpreter with ``pythonpath`` and report which
+    ``sitecustomize`` it ran and its ``sys.path``."""
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(pythonpath)}
+    proc = subprocess.run([sys.executable, *flags, "-c", _PATH_PROBE], cwd=cwd, env=env,
+                          capture_output=True, text=True, timeout=60)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    got = json.loads(proc.stdout)
+    assert os.path.dirname(got["hook"]) == WORKER_PATH
+    return got
+
+
+def test_archive_with_other_version_stays_on_path(tmp_path):
+    archive = _shipped_zip(tmp_path / "lib" / "pyspark.zip", "pyspark", b"__version__ = '0.0.1'\n")
+    assert archive in _start_python(tmp_path, [archive, WORKER_PATH])["path"]
+
+
+def test_archive_with_installed_version_is_dropped(tmp_path):
+    archives = [
+        _shipped_zip(tmp_path / "lib" / "pyspark.zip", "pyspark", _installed_version("pyspark")),
+        _shipped_zip(tmp_path / "lib" / "py4j-0.0-src.zip", "py4j", _installed_version("py4j")),
+    ]
+    path = _start_python(tmp_path, [*archives, WORKER_PATH])["path"]
+    assert not [e for e in path if _is_shipped_archive(e)]
+
+
+def test_archive_stays_without_installed_copy(tmp_path):
+    """``-S`` keeps site-packages off the path, so nothing is installed;
+    the probe then imports the start-up module itself."""
+    archive = _shipped_zip(tmp_path / "lib" / "pyspark.zip", "pyspark", _installed_version("pyspark"))
+    assert archive in _start_python(tmp_path, [archive, WORKER_PATH], "-S")["path"]
+
+
+def test_shadowed_sitecustomize_still_runs(tmp_path):
+    decoy = tmp_path / "decoy"
+    decoy.mkdir()
+    (decoy / "sitecustomize.py").write_text("import sys\nsys.mrs_decoy_ran = True\n")
+    archive = _shipped_zip(tmp_path / "lib" / "pyspark.zip", "pyspark", _installed_version("pyspark"))
+    got = _start_python(tmp_path, [archive, WORKER_PATH, str(decoy)])
+    assert got["decoy"] is True
+    assert archive not in got["path"]
 
 
 def _dir_of_bytes(n: int, char: str = "a") -> str:
