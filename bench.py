@@ -46,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from map_reduce_subnet_spark.operators import QUERIES  # noqa: E402
 from map_reduce_subnet_spark.session import get_spark  # noqa: E402
+from perfbench import host  # noqa: E402
 
 REPEAT_UNDER = 12.0  # sec: first-run times below this get a 2nd run
 # (above it: jobs whose single-run noise is relatively small and
@@ -91,19 +92,6 @@ def _load_baseline() -> dict[str, float]:
             return {k: float(v) for k, v in json.load(f).items()}
     except Exception:
         return {}
-
-
-def _cpu_ticks() -> tuple[int, int]:
-    """(total, steal) jiffies from /proc/stat — the per-row steal%%
-    in the detail file makes a noisy sample legible as interference
-    (r16: this harness box showed intermittent 10-20%% CPU steal with
-    kernel-time spikes; a wild row with high steal is the HOST's
-    noise, not a plan regression)."""
-    try:
-        vals = [int(x) for x in open("/proc/stat").readline().split()[1:]]
-        return sum(vals), vals[7] if len(vals) > 7 else 0
-    except Exception:
-        return 0, 0
 
 
 def _wait_for_quiet_machine() -> float:
@@ -196,7 +184,7 @@ def main() -> None:
         # sample(s) (n_runs records how many survived); only
         # 0-successes records a failure.
         loads[name] = round(os.getloadavg()[0], 2)
-        tick0 = _cpu_ticks()
+        tick0 = host.cpu_ticks()
         is_streaming = (
             name.startswith("stream_") or name in ALWAYS_TWO_RUNS
         )
@@ -244,19 +232,18 @@ def main() -> None:
         # stays separable from an engine change in the round artifact
         # (cold first run and warm repeats are all on record).
         samples[name] = [round(r, 4) for r in runs]
-        tick1 = _cpu_ticks()
-        dtot = max(tick1[0] - tick0[0], 1)
-        steal_pct[name] = round(100.0 * (tick1[1] - tick0[1]) / dtot, 1)
+        # the row's CPU steal marks a wild sample as the host's noise,
+        # not a plan regression
+        steal_pct[name] = round(host.steal_pct(tick0, host.cpu_ticks()), 1)
 
-    # Per-leg breakdown of the 8-leg recall harness (VERDICT r14 #4:
-    # sim_ann_recall is the heaviest bench row, and a single min-of-2
-    # total can mask a real regression in ONE leg behind noise in the
-    # other seven). ann_recall_leg_frames eagerly checkpoints the
-    # shared artifacts (exact baseline, band tables, ADC sums) during
-    # construction — timed as "_shared_artifacts" — so each leg's
-    # collect() then measures only that leg's incremental cost.
-    # Informational (single run, not min-of-2); lives only in the
-    # detail file, never the summary line.
+    # Per-leg breakdown of the 8-leg recall harness: sim_ann_recall is
+    # the heaviest bench row, and one min-of-2 total can hide a real
+    # regression in ONE leg behind noise in the other seven. Building
+    # ann_recall_leg_frames builds the shared index artifacts (cells,
+    # band tables, ADC sums, exact baseline) — timed as
+    # "_shared_artifacts" — so each leg's collect() then measures only
+    # that leg's incremental cost. Informational (single run, not
+    # min-of-2); lives only in the detail file, never the summary line.
     recall_legs: dict[str, float] = {}
     if times.get("sim_ann_recall", -1.0) >= 0:
         try:

@@ -24,6 +24,8 @@ Scale design notes (100 TB):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1836,25 +1838,27 @@ def ann_recall_leg_frames(
     spark: SparkSession, sf_dir: str
 ) -> "dict[str, DataFrame]":
     """The eight per-method recall-row frames of sim_ann_recall, in
-    its union order. Shared artifacts (the exact baseline, both
-    corpus band tables, the per-probe ADC sum table) are fixture-
-    cached HERE (functions/cache.py::artifact — built on first touch,
-    served from parquet after), so collecting one leg afterwards pays
-    only that leg's incremental cost — bench.py times each leg from
-    this dict for the per-leg breakdown in BENCH_DETAIL, so an 8-leg
-    row cannot mask a per-leg regression inside min-of-2 noise.
+    its union order. Every leg probes a shared index artifact
+    (functions/cache.py::artifact — built on first touch, served from
+    parquet after): the cell index (_ivf_cells, the same Lloyd cells
+    sim_ann_ivf_kmeans and sim_ann_ivfpq read), both corpus band
+    tables, the per-probe ADC sum table and the exact baseline. So
+    collecting one leg afterwards pays only that leg's incremental
+    cost — bench.py times each leg from this dict for the per-leg
+    breakdown in BENCH_DETAIL, so an 8-leg row cannot mask a per-leg
+    regression inside min-of-2 noise.
 
     Recall@10 of the EIGHT approximate methods (pinned-IVF cells,
     Lloyd-trained IVF cells, sign-LSH bands, multi-probe LSH,
     int8-quantized LSH, flat PQ/ADC, IVF×PQ at nprobe=1, and IVF×PQ
-    at nprobe=2 — r15) against the exact brute-force top-10, averaged
-    over 20 probe vectors — turns "the ANN runs" into "the ANN is
-    this good", the number a deployment tunes bands/cells against.
-    The lsh vs lsh_multiprobe pair prices the multi-probe trade
-    directly (recall lift per 9x bucket occupancy); the pq_adc vs
-    ivfpq_adc pair prices CELL RESTRICTION on top of quantized
-    ranking, ivf_kmeans vs ivfpq_adc prices QUANTIZED RANKING on top
-    of cell restriction, and ivfpq_adc vs ivfpq_adc_np2 is the
+    at nprobe=2) against the exact brute-force top-10, averaged over
+    20 probe vectors — turns "the ANN runs" into "the ANN is this
+    good", the number a deployment tunes bands/cells against. The lsh
+    vs lsh_multiprobe pair prices the multi-probe trade directly
+    (recall lift per 9x bucket occupancy); the pq_adc vs ivfpq_adc
+    pair prices CELL RESTRICTION on top of quantized ranking,
+    ivf_kmeans vs ivfpq_adc prices QUANTIZED RANKING on top of cell
+    restriction, and ivfpq_adc vs ivfpq_adc_np2 is the
     recall-vs-nprobe curve's first step (what FAISS's nprobe knob
     trades — 2x the inverted-list bytes for the measured uplift).
 
@@ -1862,7 +1866,7 @@ def ann_recall_leg_frames(
     is scored against all 20 broadcast probes at once, per-probe top-k
     comes from one window, and each method's recall is
     |ANN∩exact| / (probes × k) computed as a join + count. The exact
-    top-k frame (200 rows) is checkpointed so the corpus×probes scan
+    top-k frame (200 rows) is an artifact, so the corpus×probes scan
     runs once, not once per method. Fully deterministic: pinned
     centroids, seeded hyperplanes, (cos desc, vec_id) tie-break — the
     golden test pins the emitted recalls exactly.
@@ -1871,9 +1875,8 @@ def ann_recall_leg_frames(
     recall measurement runs on a sampled probe set (20 here) at
     tuning time, not per query; candidate generation stays bucketed.
     """
-    e = scan_parallel(  # r15 opt: floor the 1-row-group scan at core count
-        load_table(spark, sf_dir, "embeddings"), key="vec_id"
-    )
+    # floor the 1-row-group scan at core count
+    e = scan_parallel(load_table(spark, sf_dir, "embeddings"), key="vec_id")
     k, n_probes = ANN_RECALL_K, ANN_RECALL_N_PROBES
 
     probes = F.broadcast(
@@ -1883,227 +1886,142 @@ def ann_recall_leg_frames(
     )
     topw = Window.partitionBy("p_id").orderBy(F.desc("cos"), F.asc("vec_id"))
 
-    def topk(scored):
+    def topk(rows):
         """Per-probe exact-cosine top-k of (p_id, vec_id, cos) rows."""
         return (
-            scored.where(F.col("cos").isNotNull() & ~F.isnan("cos"))
+            rows.where(F.col("cos").isNotNull() & ~F.isnan("cos"))
             .withColumn("rn", F.row_number().over(topw))
             .where(F.col("rn") <= k)
             .select("p_id", "vec_id")
         )
 
-    cos_pe = sim.cosine(F.col("embedding"), F.col("probe"))
-    # r16 NOTE (measured, kept OUT): respelling every leg to shuffle
-    # narrow (p_id, vec_id) pairs and join the embeddings back once
-    # per surviving pair (the embed_neardup discipline) was SLOWER
-    # here — interleaved A/B min-of-8: 9.0 s → 13.8 s — because at
-    # recall-harness candidate volumes the 16 extra join stages (2 per
-    # leg × 8 legs) cost more than the payload bytes they save. The
-    # kept optimization is the cell-assignment cache below.
+    def scored(cands):
+        """(p_id, vec_id, cos) of each candidate other than the probe,
+        scored where the candidate is generated: shuffling narrow
+        (p_id, vec_id) pairs first and joining the embeddings back per
+        surviving pair measured slower at recall-harness candidate
+        volumes (interleaved A/B min-of-8: 9.0 s → 13.8 s), because the
+        two extra join stages per leg cost more than the bytes saved."""
+        return cands.where(F.col("vec_id") != F.col("p_id")).select(
+            "p_id",
+            "vec_id",
+            sim.cosine(F.col("embedding"), F.col("probe")).alias("cos"),
+        )
+
     exact = artifact(
         spark, sf_dir, f"annrecall_exact_{n_probes}x{k}",
-        lambda: topk(
-            e.crossJoin(probes)
-            .where(F.col("vec_id") != F.col("p_id"))
-            .select("p_id", "vec_id", cos_pe.alias("cos"))
-        ),
+        lambda: topk(scored(e.crossJoin(probes))),
     )
 
-    # --- IVF: assign corpus to pinned centroid cells, search the
-    # probes' cells only (the sim_ann_ivf machinery, n probes at once;
-    # same shuffle-free per-row argmax — no corpus exchange before
-    # the cell-probe join)
-    cents_arr = F.broadcast(
-        sim.centroid_array(
-            e.where(F.col("vec_id") < 8).select(
-                F.col("vec_id").alias("cent_id"),
-                F.col("embedding").alias("cent"),
+    # --- IVF legs: probe the cell index (pinned seeds, then the Lloyd
+    # training's cells); a probe's own index row names its cell, and
+    # the candidates are that cell's rows
+    def own_cells(cells):
+        return F.broadcast(
+            cells.where(F.col("vec_id") < n_probes).select(
+                F.col("vec_id").alias("p_id"),
+                F.col("embedding").alias("probe"),
+                F.col("cent_id").alias("probe_cell"),
             )
         )
-    )
-    # r16: the per-vector cell assignment IS the IVF index's inverted
-    # list (FAISS IVF stores the vectors BY cell; a deployment builds
-    # it once with the centroids, exactly like lloyd_centroids /
-    # pq_codes_cached) — materialize (vec_id, embedding, cent_id)
-    # once per fixture. Before, the nearest-centroid HOF re-ran over
-    # the whole corpus in every leg that touched cells (4 legs: ivf,
-    # ivf_kmeans, ivfpq_adc, ivfpq_adc_np2); now the ivf legs scan
-    # the artifact and the ADC legs read only its (vec_id, cent_id)
-    # columns (parquet column pruning keeps that read narrow).
-    assigned = e.crossJoin(cents_arr).select(
-        "vec_id",
-        "embedding",
-        sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-            "cent_id"
-        ].alias("cent_id"),
-    )
-    cells_seed = artifact(
-        spark, sf_dir, "annrecall_cellseed", lambda: assigned
-    )
-    probe_cells = F.broadcast(
-        probes.crossJoin(cents_arr).select(
-            "p_id",
-            "probe",
-            sim.nearest_centroid(F.col("probe"), F.col("cents"))[
-                "cent_id"
-            ].alias("probe_cell"),
-        )
-    )
-    ivf = topk(
-        cells_seed.join(
-            probe_cells, F.col("cent_id") == F.col("probe_cell")
-        )
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select("p_id", "vec_id", cos_pe.alias("cos"))
-    )
 
-    # --- trained IVF: same cell machinery with Lloyd-trained
-    # centroids (lloyd_centroids — the sim_ann_ivf_kmeans training) —
-    # prices what 3 training iterations buy over the pinned seeds
-    # across the whole probe set, not one probe
-    cents_trained = F.broadcast(
-        sim.centroid_array(lloyd_centroids(spark, e, sf_dir=sf_dir))
-    )
-    assigned_t = e.crossJoin(cents_trained).select(
-        "vec_id",
-        "embedding",
-        sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-            "cent_id"
-        ].alias("cent_id"),
-    )
-    cells_t = artifact(
-        spark, sf_dir, "annrecall_celllloyd", lambda: assigned_t
-    )
-    probe_cells_t = F.broadcast(
-        probes.crossJoin(cents_trained).select(
-            "p_id",
-            "probe",
-            sim.nearest_centroid(F.col("probe"), F.col("cents"))[
-                "cent_id"
-            ].alias("probe_cell"),
+    def cell_leg(cells):
+        return topk(
+            scored(
+                cells.join(
+                    own_cells(cells), F.col("cent_id") == F.col("probe_cell")
+                )
+            )
         )
-    )
-    ivf_t = topk(
-        cells_t.join(
-            probe_cells_t, F.col("cent_id") == F.col("probe_cell")
-        )
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select("p_id", "vec_id", cos_pe.alias("cos"))
-    )
 
-    # --- LSH: sign-sketch bands for corpus and probes, candidates via
-    # the (band, bucket) equi-join (the sim_ann_lsh_topk machinery)
+    seeds = e.where(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent")
+    )
+    cells_t = _lloyd_cells(spark, sf_dir, e)
+    ivf = cell_leg(_ivf_cells(spark, sf_dir, "cells_seed8", seeds))
+    ivf_t = cell_leg(cells_t)
+
+    # --- LSH legs: sign-sketch bands for corpus and probes, candidates
+    # via the (band, bucket) equi-join (the sim_ann_lsh_topk machinery)
     n_bits, band_bits = 64, 8
     mdf = spark.createDataFrame(
         [(sim.hyperplane_matrix(64, n_bits, 42),)], "m: array<array<double>>"
     )
 
-    def band_frame(df, id_col, emb_out):
+    def band_frame(df):
         sk = df.crossJoin(F.broadcast(mdf)).select(
-            F.col(id_col),
-            F.col("embedding").alias(emb_out),
+            "vec_id",
+            "embedding",
             sim.sign_sketch(
                 F.col("embedding"), n_bits, matrix=F.col("m")
             ).alias("sk"),
         )
         return sk.select(
-            id_col,
-            emb_out,
+            "vec_id",
+            "embedding",
             F.explode(
                 sim.band_struct_array(F.col("sk"), n_bits, band_bits)
             ).alias("bn"),
-        ).select(id_col, emb_out, F.col("bn.band"), F.col("bn.bucket"))
+        ).select("vec_id", "embedding", F.col("bn.band"), F.col("bn.bucket"))
 
     probe_bands = F.broadcast(
-        band_frame(
-            probes.select(F.col("p_id").alias("vec_id"), "probe").select(
-                F.col("vec_id"), F.col("probe").alias("embedding")
-            ),
-            "vec_id",
-            "probe",
-        ).select(
+        band_frame(probes.select(
+            F.col("p_id").alias("vec_id"), F.col("probe").alias("embedding")
+        )).select(
             F.col("vec_id").alias("p_id"),
-            "probe",
+            F.col("embedding").alias("probe"),
             F.col("band").alias("p_band"),
             F.col("bucket").alias("p_bucket"),
         )
     )
+
+    def lsh_leg(bands, pbands):
+        # cosine is a pure function of the (probe, vector) pair, so it
+        # is computed BEFORE the dedup: the exchange moves 24-byte
+        # (p_id, vec_id, cos) rows, not two 64-double arrays per row
+        return topk(
+            scored(
+                bands.join(
+                    pbands,
+                    (F.col("band") == F.col("p_band"))
+                    & (F.col("bucket") == F.col("p_bucket")),
+                )
+            ).dropDuplicates(["p_id", "vec_id"])
+        )
+
     corpus_bands = artifact(
-        spark, sf_dir, "annrecall_bands",
-        lambda: band_frame(e, "vec_id", "embedding"),
+        spark, sf_dir, "annrecall_bands", lambda: band_frame(e)
     )
-    # r16 opt (guide §2.3 — project before the exchange), all three
-    # LSH legs: the candidate dedup used to shuffle full rows (two
-    # 64-double embedding arrays ≈ 1 KB each) and compute the cosine
-    # AFTER; cosine is a pure function of the (probe, vector) pair, so
-    # every duplicate row carries the SAME value — compute it before
-    # the dropDuplicates and the dedup exchange moves 24-byte
-    # (p_id, vec_id, cos) rows instead. Identical results (the kept
-    # row was arbitrary before and its cosine is the one value).
-    lsh_cand = (
-        corpus_bands.join(
-            probe_bands,
-            (F.col("band") == F.col("p_band"))
-            & (F.col("bucket") == F.col("p_bucket")),
-        )
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select("p_id", "vec_id", cos_pe.alias("cos"))
-        .dropDuplicates(["p_id", "vec_id"])
+    lsh = lsh_leg(corpus_bands, probe_bands)
+    # multi-probe: the same corpus bands, probe buckets expanded with
+    # their Hamming-distance-1 neighbors — the recall a deployment buys
+    # for ~9x bucket occupancy
+    lsh_mp = lsh_leg(
+        corpus_bands,
+        F.broadcast(
+            probe_bands.select(
+                "p_id",
+                "probe",
+                "p_band",
+                F.explode(
+                    sim.perturbed_buckets(F.col("p_bucket"), band_bits)
+                ).alias("p_bucket"),
+            )
+        ),
     )
-    lsh = topk(lsh_cand)
-
-    # --- multi-probe LSH: same corpus bands (checkpointed above, so
-    # the sketch pass is not re-executed), probe buckets expanded with
-    # their Hamming-distance-1 neighbors (functions/similarity.py::
-    # perturbed_buckets) — measures the recall a deployment buys for
-    # ~9x bucket occupancy
-    probe_bands_mp = F.broadcast(
-        probe_bands.select(
-            "p_id",
-            "probe",
-            "p_band",
-            F.explode(
-                sim.perturbed_buckets(F.col("p_bucket"), band_bits)
-            ).alias("p_bucket_mp"),
-        )
-    )
-    lsh_mp_cand = (
-        corpus_bands.join(
-            probe_bands_mp,
-            (F.col("band") == F.col("p_band"))
-            & (F.col("bucket") == F.col("p_bucket_mp")),
-        )
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select("p_id", "vec_id", cos_pe.alias("cos"))
-        .dropDuplicates(["p_id", "vec_id"])
-    )
-    lsh_mp = topk(lsh_mp_cand)
-
-    # --- int8 + LSH composed: a deployment that stores its corpus
+    # int8 + LSH composed: a deployment that stores its corpus
     # quantized builds the sketches AND scores candidates from the
     # dequantized int8 vectors (probes stay float — asymmetric
-    # search). This leg prices the quantized DEPLOYMENT as a whole:
-    # banding on dequantized vectors can move a sketch bit, so its
-    # recall can differ from the float-lsh leg even though int8
+    # search). Banding on dequantized vectors can move a sketch bit,
+    # so its recall can differ from the float-lsh leg even though int8
     # ranking alone is near-lossless (sim_quantized_recall).
     deq = e.select(
         "vec_id", sim.int8_dequantized(F.col("embedding")).alias("embedding")
     )
-    corpus_bands_q = artifact(
-        spark, sf_dir, "annrecall_bandsq",
-        lambda: band_frame(deq, "vec_id", "embedding"),
+    lsh_q = lsh_leg(
+        artifact(spark, sf_dir, "annrecall_bandsq", lambda: band_frame(deq)),
+        probe_bands,
     )
-    lsh_q_cand = (
-        corpus_bands_q.join(
-            probe_bands,
-            (F.col("band") == F.col("p_band"))
-            & (F.col("bucket") == F.col("p_bucket")),
-        )
-        .where(F.col("vec_id") != F.col("p_id"))
-        .select("p_id", "vec_id", cos_pe.alias("cos"))
-        .dropDuplicates(["p_id", "vec_id"])
-    )
-    lsh_q = topk(lsh_q_cand)
 
     # --- PQ/ADC legs: rank by the asymmetric quantized distance from
     # the ENCODED code table (pq_codes_cached — the index artifact,
@@ -2113,9 +2031,8 @@ def ann_recall_leg_frames(
     # 20×16×8-row frame; codes melt map-side (posexplode) and join
     # it, then group to per-(probe, vector) sums with the COUNT = m
     # completeness guard. pq_adc ranks the whole code table (flat);
-    # ivfpq_adc restricts candidates to the probe's TRAINED cell
-    # first (the FAISS IVFADC serving shape) — recall priced at
-    # 1/k-cells of the flat leg's scan.
+    # the ivfpq legs restrict candidates to the probe's nprobe
+    # nearest TRAINED cells first (the FAISS IVFADC serving shape).
     cbdf = F.broadcast(
         spark.createDataFrame(
             [
@@ -2179,56 +2096,34 @@ def ann_recall_leg_frames(
         F.asc("adist"), F.asc("vec_id")
     )
 
-    def adc_topk(scored):
+    def adc_topk(rows):
         return (
-            scored.withColumn("rn", F.row_number().over(adc_w))
+            rows.withColumn("rn", F.row_number().over(adc_w))
             .where(F.col("rn") <= k)
             .select("p_id", "vec_id")
         )
 
-    pq_flat = adc_topk(adists)
-    ivfpq = adc_topk(
-        adists.join(
-            cells_t.select("vec_id", F.col("cent_id").alias("v_cell")),
-            "vec_id",
+    def ivfpq_leg(pcells):
+        # a candidate's own cell is unique, so joining it through a
+        # several-cells-per-probe frame cannot duplicate it
+        return adc_topk(
+            adists.join(
+                cells_t.select("vec_id", F.col("cent_id").alias("v_cell")),
+                "vec_id",
+            )
+            .join(pcells.select("p_id", "probe_cell"), "p_id")
+            .where(F.col("v_cell") == F.col("probe_cell"))
+            .select("p_id", "vec_id", "adist")
         )
-        .join(probe_cells_t.select("p_id", "probe_cell"), "p_id")
-        .where(F.col("v_cell") == F.col("probe_cell"))
-        .select("p_id", "vec_id", "adist")
-    )
 
-    # --- nprobe=2 IVFADC (r15): each probe's TWO nearest trained
-    # cells — explode the broadcast centroid array (n_probes × 8
-    # rows), rank with the _assign_cte comparator (desc = NULLS LAST
-    # and NaN-greatest on both engines, so ranks 1..2 are the oracle
-    # pcells2 rows exactly), keep rn <= 2. The recall delta vs the
-    # ivfpq_adc row prices the second inverted list — the
-    # recall-vs-nprobe curve a FAISS deployment tunes (VERDICT r14
-    # #3). Joining candidates through the 2-cells-per-probe frame
-    # cannot duplicate: a candidate's own cell is unique.
-    cell2_w = Window.partitionBy("p_id").orderBy(
-        F.desc("cos"), F.asc("cent_id")
-    )
-    probe_cells2 = F.broadcast(
-        probes.crossJoin(cents_trained)
-        .select("p_id", "probe", F.explode("cents").alias("c"))
-        .select(
-            "p_id",
-            F.col("c.cent_id").cast("long").alias("cent_id"),
-            sim.cosine(F.col("probe"), F.col("c.cent")).alias("cos"),
+    pq_flat = adc_topk(adists)
+    ivfpq = ivfpq_leg(own_cells(cells_t))
+    # nprobe=2: each probe's TWO nearest trained cells; the recall
+    # delta vs the ivfpq_adc row prices the second inverted list
+    ivfpq2 = ivfpq_leg(
+        F.broadcast(
+            _probe_cells(probes, lloyd_centroids(spark, e, sf_dir=sf_dir), 2)
         )
-        .withColumn("rn", F.row_number().over(cell2_w))
-        .where(F.col("rn") <= 2)
-        .select("p_id", F.col("cent_id").alias("probe_cell2"))
-    )
-    ivfpq2 = adc_topk(
-        adists.join(
-            cells_t.select("vec_id", F.col("cent_id").alias("v_cell2")),
-            "vec_id",
-        )
-        .join(probe_cells2, "p_id")
-        .where(F.col("v_cell2") == F.col("probe_cell2"))
-        .select("p_id", "vec_id", "adist")
     )
 
     denom = float(n_probes * k)
@@ -2264,20 +2159,15 @@ def ann_recall_leg_frames(
     "sim_ann_recall",
     oracle=_ann_recall_oracle(ANN_RECALL_N_PROBES, ANN_RECALL_K),
 )
-# promoted rows->SQL late r6: even the measurement harness is
-# differential-checked (see _ann_recall_oracle)
+# even the measurement harness is differential-checked (see
+# _ann_recall_oracle)
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the eight ANN methods vs the exact brute-force
     top-10 — one row per method; see ann_recall_leg_frames for the
-    full methodology (the leg construction lives there so bench.py
-    can time each leg individually; this query unions the frames in
-    that dict's insertion order, unchanged from the pre-split
-    spelling)."""
-    legs = ann_recall_leg_frames(spark, sf_dir)
-    out = None
-    for df in legs.values():
-        out = df if out is None else out.unionAll(df)
-    return out
+    full methodology (the legs live there so bench.py can time each
+    one; this query unions them in that dict's order)."""
+    legs = list(ann_recall_leg_frames(spark, sf_dir).values())
+    return functools.reduce(DataFrame.unionAll, legs)
 
 
 EMBED_NEARDUP_THRESHOLD = 0.8  # operator default: near-duplicate
@@ -3913,6 +3803,62 @@ def lloyd_centroids(
     )
 
 
+def _ivf_cells(
+    spark: SparkSession, sf_dir: str, name: str, cents: DataFrame
+) -> DataFrame:
+    """The IVF index's inverted lists: ``(vec_id, embedding, cent_id)``
+    for EVERY embeddings row, ``cent_id`` being its nearest centroid of
+    ``cents`` (a ``(cent_id, cent)`` frame) by the shuffle-free
+    broadcast argmax fold (sim.nearest_centroid — zero corpus
+    exchanges). Built once per fixture as artifact ``name``: FAISS
+    stores an IVF index's vectors by cell, built once with the
+    centroids. Rows with a NULL or malformed embedding keep the cell
+    the fold gives them, so every reader filters them as before."""
+
+    def build():
+        e = scan_parallel(load_table(spark, sf_dir, "embeddings"), key="vec_id")
+        cents_arr = F.broadcast(sim.centroid_array(cents))
+        return e.crossJoin(cents_arr).select(
+            "vec_id",
+            "embedding",
+            sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
+                "cent_id"
+            ].alias("cent_id"),
+        )
+
+    return artifact(spark, sf_dir, name, build)
+
+
+def _lloyd_cells(spark: SparkSession, sf_dir: str, e: DataFrame) -> DataFrame:
+    """The one Lloyd-trained cell assignment: the _ivf_cells of
+    lloyd_centroids, read by sim_ann_ivf_kmeans, the IVF×PQ index
+    (ivfpq_index_cached) and the recall harness's trained-cell legs."""
+    return _ivf_cells(
+        spark, sf_dir, "cells_kmeans8x3", lloyd_centroids(spark, e, sf_dir=sf_dir)
+    )
+
+
+def _probe_cells(probes: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """The ``n`` cells each probe visits: ``(p_id, probe_cell)`` rows
+    of a ``(p_id, probe)`` frame against a ``(cent_id, cent)`` frame,
+    ranked per p_id by (cos DESC, cent_id ASC) — the _assign_cte
+    comparator (desc is NULLS LAST and NaN sorts above every real on
+    both engines), so rank 1 is the probe's nearest_centroid cell and
+    ranks 2..n extend it exactly like the oracles' rn <= n."""
+    w = Window.partitionBy("p_id").orderBy(F.desc("cos"), F.asc("cent_id"))
+    return (
+        probes.crossJoin(F.broadcast(cents))
+        .select(
+            "p_id",
+            F.col("cent_id").cast("long").alias("cent_id"),
+            sim.cosine(F.col("probe"), F.col("cent")).alias("cos"),
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") <= n)
+        .select("p_id", F.col("cent_id").alias("probe_cell"))
+    )
+
+
 @query("sim_ann_ivf_kmeans", oracle=_kmeans_oracle())
 def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with TRAINED centroids: 3 distributed Lloyd iterations of
@@ -3923,40 +3869,21 @@ def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference neurons/validator.py:130-136: fold scores, re-derive the
     structure, apply it next pass).
 
-    Scale shape per iteration: assignment is the shuffle-free
-    broadcast fold (sim.nearest_centroid — zero corpus exchanges);
-    the centroid update is posexplode → groupBy(cent_id, pos) with
-    map-side partial aggregation, so the shuffle carries O(k x dim)
-    partials per task, never the corpus. Component means use
-    decimal-exact sums (order-independent ⇒ deterministic centroids ⇒
-    golden-pinnable results). Each iteration syncs k x dim doubles
-    through the driver (k-means' inherent barrier; MLlib's
-    implementation does the same reduce) — 8 x 64 values here,
-    independent of corpus size. A drained centroid drops out
-    (standard k-means degeneracy; does not occur on the fixture)."""
-    e = load_table(spark, sf_dir, "embeddings")
-    cents_arr = F.broadcast(sim.centroid_array(lloyd_centroids(spark, e, sf_dir=sf_dir)))
-    assigned = e.crossJoin(cents_arr).select(
-        "vec_id",
-        "embedding",
-        sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-            "cent_id"
-        ].alias("cent_id"),
-    )
-    probe_cell = (
-        e.where(F.col("vec_id") == 42)
-        .crossJoin(cents_arr)
-        .select(
-            sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-                "cent_id"
-            ].alias("probe_cell"),
-            F.col("embedding").alias("probe"),
-        )
+    Scale shape: training is lloyd_centroids (k x dim partials per
+    task, k x dim doubles through the driver per iteration; its
+    decimal-exact means make the trained cells deterministic, so the
+    golden test can pin the top-5); the
+    per-vector cell assignment is the shared fixture artifact
+    (_lloyd_cells), so serving scans the inverted lists and the
+    probe's own row names its cell — no corpus-wide argmax per call.
+    A drained centroid drops out (standard k-means degeneracy; does
+    not occur on the fixture)."""
+    cells = _lloyd_cells(spark, sf_dir, load_table(spark, sf_dir, "embeddings"))
+    probe = cells.where(F.col("vec_id") == 42).select(
+        F.col("cent_id").alias("probe_cell"), F.col("embedding").alias("probe")
     )
     return (
-        assigned.join(
-            F.broadcast(probe_cell), F.col("cent_id") == F.col("probe_cell")
-        )
+        cells.join(F.broadcast(probe), F.col("cent_id") == F.col("probe_cell"))
         .where(F.col("vec_id") != 42)
         .select(
             "vec_id",
@@ -7531,7 +7458,7 @@ def dedup_fuzzy_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Product-quantization ANN (r12)
+# Product-quantization ANN
 # --------------------------------------------------------------------------
 
 
@@ -7838,7 +7765,7 @@ def _pq_serving_state(spark: SparkSession, sf_dir: str):
     promotes exactly; t*t, never t**2), quantized to DECIMAL(27,6)
     exactly like the oracle's dtab CTE (NULL when non-finite).
 
-    Operand-domain bound (ADVICE r12): the DECIMAL(27,6) quantization
+    Operand-domain bound: the DECIMAL(27,6) quantization
     of qpd is cross-engine exact only for |qpd| <= 1e9 (Spark casts
     through exact BigDecimal, DuckDB scales in floating point —
     stable.py::SUM_DECIMAL band notes). qpd is a squared L2 over
@@ -7879,20 +7806,27 @@ def _pq_serving_state(spark: SparkSession, sf_dir: str):
     return {"by_sub": by_sub, "p": p, "qpd_sql": qpd_sql}
 
 
-def pq_adc_ranked(spark: SparkSession, sf_dir: str, _st=None):
+def pq_adc_ranked(spark: SparkSession, sf_dir: str, _st=None, cells=None):
     """Phase a of the PQ search — the plan the 100 TB claim is about:
     scan the 16-byte-per-row code table, turn each row's m codes into
     m DECIMAL lookups against the literal ADC table (one CASE per
     subspace, codegen-trivial), sum (NULL-propagating: a vector
     missing any code drops out, the oracle's COUNT(*) = m), and
     TakeOrdered the top-k. No join, no exchange, no HOF — the raw
-    vectors are never read. None when degenerate."""
+    vectors are never read. ``cells``: serve only those IVF cells
+    from the IVF×PQ index (ivfpq_index_cached), whose literal IN-list
+    filter on the cell_id partition column is a STATIC partition
+    prune; the rows then carry cell_id. None when degenerate."""
     st = _st if _st is not None else _pq_serving_state(spark, sf_dir)
     if st is None:
         return None
-    codes = pq_codes_cached(spark, sf_dir, _by_sub=st["by_sub"])
+    index = ivfpq_index_cached if cells is not None else pq_codes_cached
+    codes = index(spark, sf_dir, _by_sub=st["by_sub"])
     if codes is None:
         return None
+    keep = []
+    if cells is not None:
+        codes, keep = codes.where(F.col("cell_id").isin(cells)), ["cell_id"]
     qpds = []
     for sub in range(PQ_M):
         whens = " ".join(
@@ -7905,13 +7839,61 @@ def pq_adc_ranked(spark: SparkSession, sf_dir: str, _st=None):
                 f"ELSE CAST(NULL AS DECIMAL(27,6)) END)"
             )
         )
-    adist_dec = qpds[0]
-    for q in qpds[1:]:
-        adist_dec = adist_dec + q
+    adist_dec = functools.reduce(lambda a, b: a + b, qpds)
     return (
         codes.where(F.col("vec_id") != PQ_PROBE_ID)
-        .select("vec_id", adist_dec.cast("double").alias("adist"))
+        .select("vec_id", *keep, adist_dec.cast("double").alias("adist"))
         .where(F.col("adist").isNotNull())
+        .orderBy(F.asc("adist"), F.asc("vec_id"))
+        .limit(PQ_TOPK)
+    )
+
+
+def _pq_serve(spark: SparkSession, sf_dir: str, ivf: bool = False) -> DataFrame:
+    """Serve the probe: phase a (pq_adc_ranked; with ``ivf``, over
+    only the probe's _ivfpq_probe_cells) collects the top-k, then ONE
+    point-lookup scan of the raw corpus fetches exactly those winners
+    via a pushed vec_id IN filter (row-group stats skip everything
+    else at scale) to attach each one's exact L2 to the probe — and,
+    with ``ivf``, the cell that served it. Empty (stable schema) when
+    degenerate: no valid probe, drained subspace, no probed cell."""
+    keep = ["cell_id"] if ivf else []
+    out_schema = ", ".join(
+        f"{c} long" for c in ["vec_id", *keep]
+    ) + ", adist double, exact_l2 double"
+    st = _pq_serving_state(spark, sf_dir)
+    ranked = None
+    if st is not None:
+        cells = _ivfpq_probe_cells(spark, sf_dir) if ivf else None
+        ranked = pq_adc_ranked(spark, sf_dir, _st=st, cells=cells)
+    top = [] if ranked is None else ranked.collect()  # bounded: k rows
+    if not top:
+        return spark.createDataFrame([], out_schema)
+    p = st["p"]
+
+    def per_winner(col, lit):
+        return F.expr(
+            "CASE vec_id "
+            + " ".join(
+                f"WHEN {int(r['vec_id'])} THEN {lit(r[col])}" for r in top
+            )
+            + " END"
+        ).alias(col)
+
+    exact_sql = " + ".join(
+        f"(({_pq_elem(i + 1)} - {_pq_dbl(p[i])})"
+        f" * ({_pq_elem(i + 1)} - {_pq_dbl(p[i])}))"
+        for i in range(PQ_DIM)
+    )
+    return (
+        _pq_valid(load_table(spark, sf_dir, "embeddings"))
+        .where(F.col("vec_id").isin([int(r["vec_id"]) for r in top]))
+        .select(
+            "vec_id",
+            *[per_winner(c, lambda v: f"{int(v)}L") for c in keep],
+            per_winner("adist", lambda v: _pq_dbl(float(v))),
+            F.expr(exact_sql).alias("exact_l2"),
+        )
         .orderBy(F.asc("adist"), F.asc("vec_id"))
         .limit(PQ_TOPK)
     )
@@ -7936,17 +7918,15 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1) TRAIN — one grouped job (pq_codebook_rows), cached;
     (2) ENCODE — one corpus pass paying the argmin expression per
         vector ONCE (pq_codes_cached), cached: the index build;
-    (3) SERVE — scan the CODE table (16 bytes/row, not 256), m CASE
-        lookups + a decimal sum per row, TakeOrdered top-5: no join,
-        no exchange, no HOF lambdas (pq_adc_ranked); then ONE
-        point-lookup scan of the raw corpus fetches exactly the 5
-        winners via a pushed vec_id IN filter (row-group stats skip
-        everything else at scale) to attach exact_l2. The first
-        serving spelling inlined the full argmin arithmetic into the
-        serving scan — 70 s at the 10x rehearsal scale on one
-        partition; the encoded-index spelling serves from ~1/16th
-        the bytes with ~50 flops/row and re-reads raw vectors for 5
-        rows only.
+    (3) SERVE (_pq_serve) — scan the CODE table (16 bytes/row, not
+        256), m CASE lookups + a decimal sum per row, TakeOrdered
+        top-5: no join, no exchange, no HOF lambdas (pq_adc_ranked);
+        then ONE point-lookup scan of the raw corpus for the 5
+        winners' exact_l2. Inlining the full argmin arithmetic into
+        the serving scan instead took 70 s at the 10x rehearsal scale
+        on one partition; the encoded index serves from ~1/16th the
+        bytes with ~50 flops/row and re-reads raw vectors for 5 rows
+        only.
 
     Determinism: training means are decimal-exact; encoding argmin
     ties break to the lowest cent_id (array_min over (d, cent_id) ≡
@@ -7957,46 +7937,18 @@ def sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-free, NULL-propagating) exactly like the oracle's dtab;
     every per-row float op is the identical ordered fold on both
     engines, and repr round-trips every literal exactly."""
-    out_schema = "vec_id long, adist double, exact_l2 double"
-    st = _pq_serving_state(spark, sf_dir)
-    ranked = pq_adc_ranked(spark, sf_dir, _st=st)
-    if ranked is None:
-        return spark.createDataFrame([], out_schema)
-    top = ranked.collect()  # bounded: k rows
-    if not top:
-        return spark.createDataFrame([], out_schema)
-    p = st["p"]
-    adist_case = "CASE vec_id " + " ".join(
-        f"WHEN {int(r['vec_id'])} THEN {_pq_dbl(float(r['adist']))}"
-        for r in top
-    ) + " END"
-    exact_sql = " + ".join(
-        f"(({_pq_elem(i + 1)} - {_pq_dbl(p[i])})"
-        f" * ({_pq_elem(i + 1)} - {_pq_dbl(p[i])}))"
-        for i in range(PQ_DIM)
-    )
-    e = _pq_valid(load_table(spark, sf_dir, "embeddings"))
-    return (
-        e.where(F.col("vec_id").isin([int(r["vec_id"]) for r in top]))
-        .select(
-            "vec_id",
-            F.expr(adist_case).alias("adist"),
-            F.expr(exact_sql).alias("exact_l2"),
-        )
-        .orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(PQ_TOPK)
-    )
+    return _pq_serve(spark, sf_dir)
 
 
-# --- IVF × PQ: the FAISS IVFADC composition (r14, VERDICT r13 #5) --
+# --- IVF × PQ: the FAISS IVFADC composition -----------------------
 
 # How many inverted lists a query fans out to (FAISS's nprobe;
 # Jégou et al. 2011 §V.A sweep this to trade latency for recall).
-# r15 (VERDICT r14 #3): raised from the implicit 1 — the serving
-# filter becomes an IN-list over the nprobe nearest cells, which
-# Spark still resolves as a STATIC partition prune (multi-directory).
-# 2 of 8 cells: 2x the list bytes for the measured recall uplift
-# recorded in sim_ann_recall's ivfpq_adc_np2 row.
+# The serving filter is an IN-list over the nprobe nearest cells,
+# which Spark still resolves as a STATIC partition prune
+# (multi-directory). 2 of 8 cells: 2x the list bytes for the
+# measured recall uplift recorded in sim_ann_recall's ivfpq_adc_np2
+# row.
 IVFPQ_NPROBE = 2
 
 
@@ -8008,10 +7960,10 @@ def ivfpq_index_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     literal cell_id and Spark's static partition pruning reads ONLY
     the probe's directory, never touching the other cells' files —
     the Spark-native realization of FAISS's posting-list fetch.
-    Composes the two existing cached artifacts (pq_codes_cached's
-    encoded corpus + lloyd_centroids' trained centroids), so beyond
-    the one assignment pass the build cost is zero; a fixture
-    artifact like both parents. Returns None when the PQ codebook is
+    Joins two existing cached artifacts (pq_codes_cached's encoded
+    corpus and the shared Lloyd cell assignment, _lloyd_cells), so
+    the build is one join and a partitioned write; a fixture artifact
+    like both parents. Returns None when the PQ codebook is
     degenerate (drained subspace)."""
     codes = pq_codes_cached(spark, sf_dir, _by_sub=_by_sub)
     if codes is None:
@@ -8023,21 +7975,36 @@ def ivfpq_index_cached(spark: SparkSession, sf_dir: str, _by_sub=None):
     )
 
     def build():
-        e = load_table(spark, sf_dir, "embeddings")
-        cents_arr = F.broadcast(
-            sim.centroid_array(lloyd_centroids(spark, e, sf_dir=sf_dir))
+        cells = _lloyd_cells(
+            spark, sf_dir, load_table(spark, sf_dir, "embeddings")
         )
-        cells = e.crossJoin(cents_arr).select(
-            F.col("vec_id").cast("long").alias("vec_id"),
-            sim.nearest_centroid(F.col("embedding"), F.col("cents"))[
-                "cent_id"
-            ].alias("cell_id"),
+        return codes.join(
+            cells.select(
+                F.col("vec_id").cast("long").alias("vec_id"),
+                F.col("cent_id").alias("cell_id"),
+            ),
+            "vec_id",
         )
-        return codes.join(cells, "vec_id")
 
     return artifact(
         spark, sf_dir, f"ivfpq8x3_{PQ_M}x{PQ_K}x{PQ_SUBDIM}", build,
         schema=schema, partition_by="cell_id",
+    )
+
+
+def _ivfpq_probe_cells(spark: SparkSession, sf_dir: str) -> list:
+    """The IVFPQ_NPROBE Lloyd cells sim_ann_ivfpq serves from, as the
+    sorted literal list its IN-list filter needs (one bounded
+    nprobe-row collect of _probe_cells for the probe)."""
+    e = load_table(spark, sf_dir, "embeddings")
+    probe = e.where(F.col("vec_id") == PQ_PROBE_ID).select(
+        F.col("vec_id").alias("p_id"), F.col("embedding").alias("probe")
+    )
+    rows = _probe_cells(
+        probe, lloyd_centroids(spark, e, sf_dir=sf_dir), IVFPQ_NPROBE
+    ).collect()
+    return sorted(
+        int(r["probe_cell"]) for r in rows if r["probe_cell"] is not None
     )
 
 
@@ -8165,121 +8132,29 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ann_pq_adc restricted to the probe's IVFPQ_NPROBE nearest
     Lloyd-trained IVF cells (sim_ann_ivf_kmeans's partitioner), so a
     query scans nprobe inverted lists of quantized codes instead of
-    the whole code table — FAISS's nprobe knob (VERDICT r14 #3),
-    generalized from the r14 single-cell serving. Output: top-5 of
-    the probed cells by ADC distance, each with its exact L2 and the
-    cell that SERVED it (the candidate's own inverted list) — the
-    row prices cell restriction and quantization together.
+    the whole code table — FAISS's nprobe knob. Output: top-5 of the
+    probed cells by ADC distance, each with its exact L2 and the cell
+    that SERVED it (the candidate's own inverted list) — the row
+    prices cell restriction and quantization together.
 
     Scale shape — the part that matters at 100 TB: the index artifact
     (ivfpq_index_cached) is the PQ code table JOINED with the cell
     assignment, written PARTITIONED BY cell_id, so the directories
     are the inverted lists. Serving is: ONE bounded nprobe-row
-    collect ranking the probe against the broadcast centroid array
-    ((cos DESC, cent_id ASC) — the same comparator every IVF leg's
-    argmax fold uses, so rank 1 is bit-identical to the oracle's
-    assign_final and ranks 2..nprobe extend it), then a scan whose
-    literal IN-list cell filter becomes a STATIC PARTITION PRUNE
-    (only the probed directories are read — nprobe/k of the code
-    table's 16 bytes/row), m decimal CASE lookups + a sum per row,
-    TakeOrdered top-5, and one pushed-vec_id point-lookup of the raw
-    corpus for the 5 winners' exact L2. No join on the serving path,
-    no exchange before the top-k, raw vectors read for exactly 5
-    rows.
+    collect of the probe's cells (_ivfpq_probe_cells), then
+    sim_ann_pq_adc's serve (_pq_serve) over only those cells — the
+    literal IN-list cell filter is a STATIC PARTITION PRUNE, so only
+    the probed directories are read (nprobe/k of the code table's 16
+    bytes/row) — and the same point-lookup for the 5 winners' exact
+    L2. No join on the serving path, no exchange before the top-k,
+    raw vectors read for exactly 5 rows.
 
-    Determinism: identical to the two parents — the ADC expression
-    duplicates pq_adc_ranked's CASE construction rather than sharing
-    a helper so this key's registration does not re-fingerprint
-    sim_ann_pq_adc (the sweep-rotation blast-radius discipline);
-    training means decimal-exact, ties to lowest cent_id, d < inf
-    code guard, DECIMAL(27,6)-quantized driver-computed probe
-    distances (the |qpd| <= 1e9 operand-domain note on
-    _pq_serving_state applies unchanged)."""
-    out_schema = "vec_id long, cell_id long, adist double, exact_l2 double"
-    st = _pq_serving_state(spark, sf_dir)
-    if st is None:
-        return spark.createDataFrame([], out_schema)
-    idx = ivfpq_index_cached(spark, sf_dir, _by_sub=st["by_sub"])
-    if idx is None:
-        return spark.createDataFrame([], out_schema)
-    e = load_table(spark, sf_dir, "embeddings")
-    cents_arr = F.broadcast(
-        sim.centroid_array(lloyd_centroids(spark, e, sf_dir=sf_dir))
-    )
-    pc_rows = (
-        e.where(F.col("vec_id") == PQ_PROBE_ID)
-        .crossJoin(cents_arr)
-        .select("embedding", F.explode("cents").alias("c"))
-        .select(
-            F.col("c.cent_id").cast("long").alias("cell"),
-            sim.cosine(F.col("embedding"), F.col("c.cent")).alias("cos"),
-        )
-        # the _assign_cte comparator: desc is NULLS LAST on both
-        # engines, NaN sorts above every real on both — so ranks
-        # 1..nprobe here are the oracle pcells rows exactly
-        .orderBy(F.desc("cos"), F.asc("cell"))
-        .limit(IVFPQ_NPROBE)
-        .collect()  # bounded: nprobe rows (the probed cells)
-    )
-    probe_cells = sorted(
-        int(r["cell"]) for r in pc_rows if r["cell"] is not None
-    )
-    if not probe_cells:
-        return spark.createDataFrame([], out_schema)
-    qpds = []
-    for sub in range(PQ_M):
-        whens = " ".join(
-            f"WHEN {cid} THEN {lit}"
-            for cid, lit in sorted(st["qpd_sql"][sub].items())
-        )
-        qpds.append(
-            F.expr(
-                f"(CASE c{sub} {whens} "
-                f"ELSE CAST(NULL AS DECIMAL(27,6)) END)"
-            )
-        )
-    adist_dec = qpds[0]
-    for q_ in qpds[1:]:
-        adist_dec = adist_dec + q_
-    ranked = (
-        idx.where(F.col("cell_id").isin(probe_cells))
-        .where(F.col("vec_id") != PQ_PROBE_ID)
-        .select(
-            "vec_id", "cell_id", adist_dec.cast("double").alias("adist")
-        )
-        .where(F.col("adist").isNotNull())
-        .orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(PQ_TOPK)
-    )
-    top = ranked.collect()  # bounded: k rows
-    if not top:
-        return spark.createDataFrame([], out_schema)
-    p = st["p"]
-    adist_case = "CASE vec_id " + " ".join(
-        f"WHEN {int(r['vec_id'])} THEN {_pq_dbl(float(r['adist']))}"
-        for r in top
-    ) + " END"
-    cell_case = "CASE vec_id " + " ".join(
-        f"WHEN {int(r['vec_id'])} THEN {int(r['cell_id'])}L"
-        for r in top
-    ) + " END"
-    exact_sql = " + ".join(
-        f"(({_pq_elem(i + 1)} - {_pq_dbl(p[i])})"
-        f" * ({_pq_elem(i + 1)} - {_pq_dbl(p[i])}))"
-        for i in range(PQ_DIM)
-    )
-    return (
-        _pq_valid(load_table(spark, sf_dir, "embeddings"))
-        .where(F.col("vec_id").isin([int(r["vec_id"]) for r in top]))
-        .select(
-            "vec_id",
-            F.expr(cell_case).alias("cell_id"),
-            F.expr(adist_case).alias("adist"),
-            F.expr(exact_sql).alias("exact_l2"),
-        )
-        .orderBy(F.asc("adist"), F.asc("vec_id"))
-        .limit(PQ_TOPK)
-    )
+    Determinism: identical to the two parents — training means
+    decimal-exact, ties to lowest cent_id, d < inf code guard,
+    DECIMAL(27,6)-quantized driver-computed probe distances (the
+    |qpd| <= 1e9 operand-domain note on _pq_serving_state applies
+    unchanged)."""
+    return _pq_serve(spark, sf_dir, ivf=True)
 
 
 @query(

@@ -360,6 +360,71 @@ def test_ann_recall_golden(spark):
     assert got["lsh_multiprobe"]["recall_at_k"] > got["lsh"]["recall_at_k"]
 
 
+ANN_RECALL_METHODS = [
+    "ivf",
+    "ivf_kmeans",
+    "lsh",
+    "lsh_multiprobe",
+    "lsh_int8_quant",
+    "pq_adc",
+    "ivfpq_adc",
+    "ivfpq_adc_np2",
+]
+
+
+def test_ann_recall_leg_frames_are_the_union_rows(spark):
+    """bench.py times each leg of ann_recall_leg_frames for its
+    per-leg breakdown: the dict must hold the eight methods in
+    sim_ann_recall's union order, and each leg's one row must be that
+    method's row of the registered query."""
+    from map_reduce_subnet_spark.operators.llm import ann_recall_leg_frames
+
+    legs = ann_recall_leg_frames(spark, SF_DIR)
+    union = [r.asDict() for r in QUERIES["sim_ann_recall"](spark, SF_DIR).collect()]
+    assert list(legs) == ANN_RECALL_METHODS
+    assert [r["method"] for r in union] == ANN_RECALL_METHODS
+    for row in union:
+        assert [r.asDict() for r in legs[row["method"]].collect()] == [row]
+
+
+def test_ann_keys_share_one_lloyd_cell_assignment(spark, tmp_path, monkeypatch):
+    """sim_ann_ivf_kmeans, sim_ann_ivfpq and sim_ann_recall serve from
+    ONE Lloyd cell assignment. On a fresh copy of the fixture (every
+    artifact key starts empty) no artifact is built twice, and all
+    three keys read the same (vec_id, embedding, cent_id) artifact."""
+    import shutil
+
+    from map_reduce_subnet_spark.operators import llm
+
+    sf_dir = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf_dir)
+    real = llm.artifact
+    built: list[str] = []
+    read: dict[str, dict[str, list[str]]] = {}
+    key = ""
+
+    def recording(spark_, sf, name, build, **kw):
+        def counted():
+            built.append(name)
+            return build()
+
+        df = real(spark_, sf, name, counted, **kw)
+        read.setdefault(key, {})[name] = df.columns
+        return df
+
+    monkeypatch.setattr(llm, "artifact", recording)
+    keys = ("sim_ann_ivf_kmeans", "sim_ann_ivfpq", "sim_ann_recall")
+    for key in keys:
+        QUERIES[key](spark, sf_dir).collect()
+    assert len(built) == len(set(built)), built
+    cell_reads = [
+        {n for n, cols in read.get(k, {}).items()
+         if cols == ["vec_id", "embedding", "cent_id"]}
+        for k in keys
+    ]
+    assert len(set.intersection(*cell_reads)) == 1, read
+
+
 def test_embed_neardup_pairs_are_high_cosine(spark):
     from map_reduce_subnet_spark.operators.llm import (
         EMBED_NEARDUP_FIXTURE_THRESHOLD,

@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from map_reduce_subnet_spark.operators import QUERIES
 from map_reduce_subnet_spark.plans import (
     count_exchanges,
@@ -406,30 +404,26 @@ def test_cep_pattern_is_one_exchange_one_window(spark):
 def test_ivfpq_serving_scan_is_partition_pruned(spark):
     """sim_ann_ivfpq's serving scan must be the inverted-list fetch
     it advertises: the index is written PARTITIONED BY cell_id, so
-    the literal IN-list probe-cells filter (nprobe=2 since r15) must
+    the literal IN-list probe-cells filter (IVFPQ_NPROBE cells) must
     appear as a PartitionFilter (static prune — only the probed
     directories are read, never the other cells') and the ranking
     must reach TakeOrdered with ZERO exchanges (no join on the
-    serving path). Guarded like the other cached-artifact lints:
-    build the index, then lint the ranked sub-plan."""
+    serving path). Lints the ranked frame the key itself serves: the
+    probe's cells (_ivfpq_probe_cells) fed to pq_adc_ranked."""
     from map_reduce_subnet_spark.operators.llm import (
         IVFPQ_NPROBE,
-        PQ_PROBE_ID,
+        _ivfpq_probe_cells,
         _pq_serving_state,
-        ivfpq_index_cached,
+        pq_adc_ranked,
     )
 
     st = _pq_serving_state(spark, SF_DIR)
     assert st is not None, "fixture codebook became degenerate"
-    idx = ivfpq_index_cached(spark, SF_DIR, _by_sub=st["by_sub"])
-    assert idx is not None
-    assert IVFPQ_NPROBE >= 2  # the multi-list shape below is the point
-    ranked = (
-        idx.where(F.col("cell_id").isin(list(range(IVFPQ_NPROBE))))
-        .where(F.col("vec_id") != PQ_PROBE_ID)
-        .orderBy("vec_id")
-        .limit(5)
-    )
+    cells = _ivfpq_probe_cells(spark, SF_DIR)
+    # the multi-list shape below is the point
+    assert len(cells) == IVFPQ_NPROBE >= 2, cells
+    ranked = pq_adc_ranked(spark, SF_DIR, _st=st, cells=cells)
+    assert ranked is not None
     plan = formatted_plan(ranked)
     assert "PartitionFilters: [cell_id" in plan, plan
     assert " IN (" in plan.split("PartitionFilters:")[1].split("]")[0], plan
