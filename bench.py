@@ -10,20 +10,17 @@ column is materialized (a bare count() would let Catalyst prune the
 projection expressions, timing map-only queries as empty scans) but no
 rows cross to the driver.
 
-Timing methodology (round 3, tightened round 7, hardened round 8
-after the driver's r7 artifact recorded seven single-run streaming
-rows at 2-15x their own unchanged-code baselines under post-pytest
-machine load):
+Timing methodology (machine load after a test run inflates single
+samples, most of all the streaming rows):
 
 - a warm-up pass first touches the JVM, the parquet footers AND the
-  Python worker pool (round 2's single-shot numbers made sub-second
-  queries noise-dominated);
+  Python worker pool (single cold samples of sub-second queries are
+  noise-dominated);
 - each query under REPEAT_UNDER seconds runs twice and records the
   MIN (the least-interference estimate on this box);
 - STREAMING rows (stream_*) ALWAYS get >= 2 runs regardless of the
   threshold — their cost is trigger/startup-dominated, which is
-  exactly the component machine load inflates, and every r7 wild row
-  was a single-run streaming row;
+  exactly the component machine load inflates;
 - any row whose recorded value still exceeds 2x its committed
   baseline (bench_baseline.json, compiled from BASELINE.md by
   scripts/build_bench_baseline.py) triggers ONE automatic extra run
@@ -50,18 +47,15 @@ from perfbench import host  # noqa: E402
 
 REPEAT_UNDER = 12.0  # sec: first-run times below this get a 2nd run
 # (above it: jobs whose single-run noise is relatively small and
-# whose repeats would triple a minutes-long bench). r7: with the
-# registry at ~180 queries the median-of-3 pass pushed bench
-# wall-clock past 10 minutes; sub-threshold queries record MIN-of-2 —
-# on this box's documented interference profile the minimum is the
-# least-contaminated sample. r10: threshold 6.0 -> 12.0 because the
-# only two non-streaming rows in the 6-12 s band (graph_pagerank,
-# sim_ann_recall) were chronic single-run noise rows — their first
-# run pays a ~2x codegen/JIT cold penalty under load (profiled in
-# NOTES r10: pagerank 12.1 s cold, 6.4 s warm on one session), which
-# min-of-2 absorbs for +18 s of wall-clock total.
-# estimate, and on a quiet machine min-of-2 and median-of-3 agree
-# to noise (NOTES.md measurement traps).
+# whose repeats would triple a minutes-long bench). Sub-threshold
+# queries record MIN-of-2, not a median-of-3, which would push the
+# bench's wall-clock too far: on this box's interference profile the
+# minimum is the least-contaminated sample, and on a quiet machine
+# min-of-2 and median-of-3 agree to noise (NOTES.md measurement
+# traps). The threshold is set to take in the non-streaming rows
+# whose first run pays a ~2x codegen/JIT cold penalty under load,
+# which min-of-2 absorbs; rows whose cold run outgrew it are listed
+# in ALWAYS_TWO_RUNS.
 
 SLOW_FACTOR = 2.0  # recorded/baseline ratio that triggers one re-run
 
@@ -71,14 +65,12 @@ SLOW_FACTOR = 2.0  # recorded/baseline ratio that triggers one re-run
 # state — not the one-time build. (Streaming rows get the same
 # treatment below for their trigger/startup floor.)
 ALWAYS_TWO_RUNS = {"sim_ann_recall", "graph_pagerank"}
-# graph_pagerank added r15: its 11-job iterative chain pays a ~2x
-# first-run codegen/JIT penalty (profiled r10 AND re-profiled r15:
-# 12.3 s cold vs 6.5 s warm on one session) — exactly the noise class
-# REPEAT_UNDER exists for, but the row outgrew the 12.0 threshold and
-# fell back to a single COLD run, recording the penalty as query time.
-# Min-of-2 restores the same measurement discipline every other
-# non-streaming row gets. (Old single-run number kept in
-# OPTIMIZATION_r15.md.)
+# graph_pagerank's 11-job iterative chain pays a ~2x first-run
+# codegen/JIT penalty (12.3 s cold vs 6.5 s warm on one session) —
+# exactly the noise class REPEAT_UNDER exists for, but its cold run
+# is above the threshold, so it would record a single COLD run with
+# the penalty as query time. Min-of-2 gives it the measurement every
+# other non-streaming row gets.
 LOAD_GATE = 12.0  # 1-min load average below which the bench starts
 LOAD_WAIT_S = 240.0  # max seconds to wait for the gate, then proceed
 
@@ -123,11 +115,10 @@ def main() -> None:
     # (the text family's input), and one throwaway stateful streaming
     # job (stream_stateful_ema) so the streaming engine + state-store
     # + Python state-worker spin-up cost lands here instead of
-    # inflating the first timed streaming row (it was the one >2×
-    # bench row in round 3, on startup cost alone). A warm-up failure
-    # must not lose the whole bench record (the per-query loop
-    # tolerates failures; this must too, or one broken query kills
-    # the round's BENCH row).
+    # inflating the first timed streaming row (on startup cost alone
+    # that row read >2x its baseline). A warm-up failure must not lose
+    # the whole bench record (the per-query loop tolerates failures;
+    # this must too, or one broken query kills the bench row).
     for warm in (
         "agg_reduce_sum",
         "udf_scalar",
@@ -152,8 +143,8 @@ def main() -> None:
     }
     unknown = sorted(only - QUERIES.keys())
     if unknown:
-        # Skip-with-warning rather than KeyError mid-loop (ADVICE r8):
-        # a typo in SPARK_GRAFT_ONLY must not abort the whole bench.
+        # Skip-with-warning rather than KeyError mid-loop: a typo in
+        # SPARK_GRAFT_ONLY must not abort the whole bench.
         print(
             f"bench: SPARK_GRAFT_ONLY names not in QUERIES, skipping: "
             f"{','.join(unknown)}",
@@ -178,8 +169,7 @@ def main() -> None:
         # whose first run is already over the threshold record that
         # single run UNLESS they are streaming rows (always >= 2
         # runs: their trigger/startup-dominated cost is what machine
-        # load inflates — all seven r7 wild rows were single-run
-        # stream_* rows). A repeat run that throws after an earlier
+        # load inflates). A repeat run that throws after an earlier
         # run succeeded is a transient flake: keep the successful
         # sample(s) (n_runs records how many survived); only
         # 0-successes records a failure.
@@ -205,7 +195,7 @@ def main() -> None:
         # Slow-row protection: a recorded value still >2x the
         # committed baseline gets ONE more run — a real plan
         # regression survives it and stays red; an interference
-        # spike doesn't and stops polluting the round artifact.
+        # spike doesn't and stops polluting the bench record.
         base = baseline.get(name)
         if (
             runs
@@ -227,10 +217,10 @@ def main() -> None:
         else:
             times[name] = round(min(runs), 4)
             n_runs[name] = len(runs)
-        # ADVICE r15 #3: keep EVERY sample, not just the min, so a
-        # measurement-policy change (a key entering ALWAYS_TWO_RUNS)
-        # stays separable from an engine change in the round artifact
-        # (cold first run and warm repeats are all on record).
+        # Keep EVERY sample, not just the min, so a measurement-policy
+        # change (a key entering ALWAYS_TWO_RUNS) stays separable from
+        # an engine change in the bench record (cold first run and
+        # warm repeats are all on record).
         samples[name] = [round(r, 4) for r in runs]
         # the row's CPU steal marks a wild sample as the host's noise,
         # not a plan regression
@@ -266,18 +256,16 @@ def main() -> None:
 
     total = round(sum(t for t in times.values() if t >= 0), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # The driver captures only a bounded tail of stdout: a single JSON
-    # line with all ~237 per-query timings (~8 KB) was truncated
-    # mid-dict in round 1 and never parsed. Keep the LAST stdout line a
-    # compact summary (<1 KB) and put the per-query detail in a file.
-    # The detail file lives in a gitignored output dir (env-overridable)
-    # — committing a generated artifact churned the diff every rerun.
-    # r16 (VERDICT r15 what's-wrong #1/#2): the detail path is stamped
-    # with the run's cpu config so the driver's low-core scaling run
-    # can no longer clobber the main run's per-query record, and the
-    # giant per-query stderr line is GONE — it was what truncated the
-    # driver's captured tail and emptied PERF's per-query comparison
-    # (the summary line's "detail" field is the per-query contract).
+    # A caller may capture only a bounded tail of stdout, and a single
+    # JSON line with all ~237 per-query timings (~8 KB) gets truncated
+    # mid-dict. Keep the LAST stdout line a compact summary (<1 KB) and
+    # put the per-query detail in a file, in a gitignored output dir
+    # (env-overridable): a committed generated artifact churns the
+    # diff on every rerun. The detail path is stamped with the run's
+    # cpu config, so a low-core scaling run cannot clobber the main
+    # run's per-query record, and no per-query line goes to stderr,
+    # where it would crowd out the captured tail (the summary line's
+    # "detail" field is the per-query contract).
     detail = {
         "metric": "total_query_seconds",
         "value": total,
@@ -306,11 +294,10 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     n_failed = sum(1 for t in times.values() if t < 0)
-    # VERDICT r8 #8: the repeat policy must be visible in the round
-    # artifact itself. Per-row run counts would re-bloat the summary
-    # line past the driver's stdout-tail capture (the round-1
-    # truncation), so the summary carries a HISTOGRAM of run counts
-    # ({"2": 180, "1": 25, ...}) + the methodology string; the exact
+    # The repeat policy must be visible in the summary itself. Per-row
+    # run counts would bloat the summary line past a bounded
+    # stdout-tail capture, so the summary carries a HISTOGRAM of run
+    # counts ({"2": 180, "1": 25, ...}) + the methodology string; the exact
     # per-row counts stay in the detail file's "runs" dict.
     runs_hist: dict[str, int] = {}
     for c in n_runs.values():

@@ -8,7 +8,7 @@ sized to the input rather than Spark's static 200 default.
 
 The shuffle-partition count is what batch plans over-provision and AQE
 coalesces. Streaming plans run without AQE, so every streaming query is
-started through ``streaming/jobs.py::_start``, which caps the count at
+started through ``streaming/jobs.py::_drain``, which caps the count at
 the session's task slots for that query's state partitions; the value
 set here stays the ceiling.
 

@@ -26,6 +26,8 @@ driver-held state.
 
 from __future__ import annotations
 
+import os
+import tempfile
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager, suppress
@@ -192,15 +194,40 @@ def _checkpoint_manager(
     return _FS_CHECKPOINT_MANAGER if scheme == "file" else None
 
 
-def _start(
+def _drain(
     writer: DataStreamWriter,
     spark: SparkSession,
-    no_data_batches: bool = True,
+    drain: str = "available_now",
+    emit_on_arrival: bool = False,
 ) -> StreamingQuery:
-    """Start a streaming query with at most one state partition per
-    task slot: ``spark.sql.shuffle.partitions`` is lowered to
-    ``min(<session value>, defaultParallelism)`` for this query only.
+    """Start ``writer`` (no trigger set), drain it to the end of its
+    input and return the terminated query. Every stream here starts,
+    waits and cleans up through this one function.
 
+    ``drain="available_now"`` is one Trigger.AvailableNow pass (file
+    sources), awaited for up to 300 s. ``drain="process_all"`` runs
+    continuous micro-batches until processAllAvailable() observes an
+    idle source, then stops the query and awaits it for up to 60 s —
+    required for custom Python stream sources, whose
+    PythonMicroBatchStream does not support AvailableNow (Spark falls
+    back to a SINGLE batch and silently truncates the stream). A query
+    that does not terminate in time is stopped and raises
+    ``TimeoutError``; whatever its sink holds is partial.
+
+    ``emit_on_arrival=True`` skips the final NO-DATA micro-batch
+    (``spark.sql.streaming.noDataMicroBatches.enabled=false``). That
+    batch acts on the watermark advanced by the last data batch: it
+    EMITS rows for append-mode aggregations, outer joins and stateful
+    timeouts, so those drains must keep it. For operators that emit
+    every row on ARRIVAL (inner stream-stream joins,
+    dropDuplicates[WithinWatermark]) it only evicts state, which a
+    terminating drain with a discarded checkpoint pays for nothing —
+    mostly state-store commit. Callers MUST emit entirely from data
+    batches; each caller's oracle MATCH is the pin.
+
+    The query runs at most one state partition per task slot:
+    ``spark.sql.shuffle.partitions`` is lowered to
+    ``min(<session value>, defaultParallelism)`` for this query only.
     Streaming plans run without AQE, so nothing coalesces a stateful
     operator's shuffle: every state partition is a task, and a store
     load and commit, on every micro-batch. At the batch default of 32
@@ -238,25 +265,18 @@ def _start(
     writer's own ``checkpointLocation`` option is not consulted: every
     one passed here is a local temp dir.
 
-    ``no_data_batches=False`` skips the final NO-DATA micro-batch
-    (``spark.sql.streaming.noDataMicroBatches.enabled=false``); see
-    :func:`_run_to_memory` for which drains may skip it.
-
     The query snapshots the session conf at ``start()``, so the scoped
-    confs are set just before it and restored right after: the session
-    never reads the scoped values while the stream drains, and a
-    concurrent stream (FAIR scheduling) keeps its own settings. The
-    one exception to the snapshot is a source's offset log
+    confs are set just before it and restored before the wait: the
+    session never reads the scoped values while the stream drains,
+    and a concurrent stream (FAIR scheduling) keeps its own settings.
+    The one exception to the snapshot is a source's offset log
     (``sources/<n>``), which the query's thread builds from the live
     session conf once ``start()`` has returned, so with the manager
     scoped the restore waits for the query's initialization."""
     key = "spark.sql.shuffle.partitions"
-    scoped = {
-        key: str(
-            min(int(spark.conf.get(key)), spark.sparkContext.defaultParallelism)
-        )
-    }
-    if not no_data_batches:
+    slots = spark.sparkContext.defaultParallelism
+    scoped = {key: str(min(int(spark.conf.get(key)), slots))}
+    if emit_on_arrival:
         scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None:
         manager = _checkpoint_manager(
@@ -265,6 +285,10 @@ def _start(
         )
         if manager is not None:
             scoped[_CHECKPOINT_MANAGER_KEY] = manager
+    if drain == "process_all":
+        writer, timeout = writer.trigger(processingTime="0 seconds"), 60
+    else:
+        writer, timeout = writer.trigger(availableNow=True), 300
     prior = {k: spark.conf.get(k, None) for k in scoped}
     for k, v in scoped.items():
         spark.conf.set(k, v)
@@ -272,16 +296,25 @@ def _start(
         q = writer.start()
         if _CHECKPOINT_MANAGER_KEY in scoped:
             # Sources are built after start() returns (see above). A
-            # query that dies first raises where its caller awaits it.
+            # query that dies first raises where it is awaited below.
             with suppress(StreamingQueryException):
                 q._jsq.streamingQuery().awaitInitialization(60_000)
-        return q
     finally:
         for k, v in prior.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+    if drain == "process_all":
+        q.processAllAvailable()
+        q.stop()
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {q.name or q.id} did not terminate within "
+            f"{timeout}s"
+        )
+    return q
 
 
 def _run_to_memory(
@@ -291,23 +324,9 @@ def _run_to_memory(
     drain: str = "available_now",
     emit_on_arrival: bool = False,
 ) -> DataFrame:
-    """Drain the stream into a memory sink and return the sink table
-    as a batch frame. ``drain="available_now"`` is one
-    Trigger.AvailableNow pass (file sources); ``drain="process_all"``
-    runs continuous micro-batches until processAllAvailable() observes
-    an idle source — required for custom Python stream sources, whose
-    PythonMicroBatchStream does not support AvailableNow (Spark falls
-    back to a SINGLE batch and silently truncates the stream).
-
-    ``emit_on_arrival=True`` skips the final NO-DATA micro-batch. That
-    batch acts on the watermark advanced by the last data batch: it
-    EMITS rows for append-mode aggregations, outer joins and stateful
-    timeouts, so those drains must keep it. For operators that emit
-    every row on ARRIVAL (inner stream-stream joins,
-    dropDuplicates[WithinWatermark]) it only evicts state, which a
-    terminating drain with a discarded checkpoint pays for nothing —
-    mostly state-store commit. Callers MUST emit entirely from data
-    batches; each caller's oracle MATCH is the pin.
+    """Drain the stream into a memory sink (:func:`_drain`, which
+    describes ``drain`` and ``emit_on_arrival``) and return the sink
+    table as a batch frame.
 
     The sink table is resolved into a frame before its temp view is
     dropped (also on the timeout path), so no invocation leaks a
@@ -316,39 +335,95 @@ def _run_to_memory(
     it after the drop starts no copy job and returns the drained rows,
     which stay on the driver at least as long as the frame."""
     name = "s" + uuid.uuid4().hex[:12]
-    writer = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-    )
-    if drain == "process_all":
-        q = _start(writer.trigger(processingTime="0 seconds"), spark)
-        try:
-            q.processAllAvailable()
-            q.stop()
-            if not q.awaitTermination(60):
-                raise TimeoutError(
-                    f"streaming query {name} did not terminate within "
-                    "60s of stop(); memory-sink contents untrustworthy"
-                )
-            return spark.table(name)
-        finally:
-            spark.catalog.dropTempView(name)
-    q = _start(
-        writer.trigger(availableNow=True),
-        spark,
-        no_data_batches=not emit_on_arrival,
-    )
     try:
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                f"streaming query {name} did not drain within 300s; "
-                "partial memory-sink contents discarded"
-            )
+        _drain(
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode),
+            spark,
+            drain,
+            emit_on_arrival,
+        )
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
+
+
+def _file_stream(
+    spark: SparkSession,
+    directory: str,
+    tables: list,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Write each Arrow table as one parquet file in ``directory``
+    (created if missing) with ascending mtimes, and return a file
+    stream that reads them one per trigger (maxFilesPerTrigger=1), in
+    that order. With no ``schema`` the files are events tables, read
+    through :func:`_read_events_stream`."""
+    import time as _time
+
+    import pyarrow.parquet as pq_mod
+
+    os.makedirs(directory, exist_ok=True)
+    now = _time.time()
+    for i, table in enumerate(tables):
+        p = os.path.join(directory, f"part{i}.parquet")
+        pq_mod.write_table(table, p)
+        os.utime(p, (now + i, now + i))  # mtime order = delivery order
+    if schema is None:
+        first = os.path.join(directory, "part0.parquet")
+        return _read_events_stream(
+            spark, first, directory, maxFilesPerTrigger="1"
+        )
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(directory)
+    )
+
+
+def _fold_batches(
+    stream: DataFrame,
+    spark: SparkSession,
+    root: str,
+    schema: str,
+    fold,
+    state_dir: str | None = None,
+) -> DataFrame:
+    """Drain ``stream`` through foreachBatch into a parquet state table
+    under ``root`` and return the final table (read lazily: the caller
+    owns ``root``), or an empty frame of ``schema`` when no batch fired
+    and there was no ``state_dir``.
+
+    Each micro-batch calls ``fold(old, batch_df)`` with the current
+    table (read with ``schema``; None before the first batch when there
+    is no starting ``state_dir``) and writes what it returns to a NEW
+    versioned directory; the pointer swaps only after the write
+    completes (an overwrite of the directory being read would race the
+    readers that feed it — the same swap discipline a lakehouse MERGE
+    provides transactionally). foreachBatch runs on the driver; the
+    plans inside execute distributed, in the stream's session."""
+    versions = [] if state_dir is None else [state_dir]
+
+    def apply(batch_df, batch_id):
+        old = (
+            batch_df.sparkSession.read.schema(schema).parquet(versions[-1])
+            if versions
+            else None
+        )
+        new_dir = os.path.join(root, f"state_v{len(versions)}")
+        fold(old, batch_df).write.parquet(new_dir)
+        versions.append(new_dir)  # swap AFTER the write completes
+
+    _drain(
+        stream.writeStream.foreachBatch(apply).option(
+            "checkpointLocation", os.path.join(root, "ckpt")
+        ),
+        spark,
+    )
+    if not versions:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(versions[-1])
 
 
 # The OOO CEP reorder window: an event may arrive up to this long
@@ -369,10 +444,9 @@ def _replay(
     spark: SparkSession, sf_dir: str, ooo: bool = False
 ) -> Iterator[DataFrame]:
     """Replay the events fixture as a stream of TWO micro-batches: two
-    parquet files with ascending mtimes in a temp dir, read one per
-    trigger (maxFilesPerTrigger=1), so per-key state must survive the
-    trigger boundary to give the right answer. Yields the
-    :func:`_read_events_stream` source; the temp dir is removed on
+    parquet files in a temp dir, read one per trigger
+    (:func:`_file_stream`), so per-key state must survive the trigger
+    boundary to give the right answer. The temp dir is removed on
     exit, so callers drain (and materialize) inside the block.
 
     In order (default), the files are the fixture sorted by
@@ -391,10 +465,6 @@ def _replay(
     deeper splits stay pinned by the multi-file tests in
     tests/test_streaming.py. The split is fixture plumbing: a
     deployment's stream arrives in its own order."""
-    import os
-    import tempfile
-    import time as _time
-
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq_mod
@@ -426,35 +496,24 @@ def _replay(
     if ooo and tbl.num_rows:
         advancer = pa.table(
             {
-                "event_id": pa.array([-1], pa.int64()),
+                "event_id": [-1],
                 "ts": pa.array(
                     [int(ts_us.max()) + CEP_OOO_DELAY_US + 1_000_000],
                     pa.timestamp("us"),
                 ),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["__advance__"], pa.string()),
-                "value": pa.array([None], pa.float64()),
-                "props": pa.array([None], pa.string()),
+                "user_id": [-1],
+                "event_type": ["__advance__"],
+                "value": [None],
+                "props": [None],
             }
-        )
-        advancer = advancer.select(tbl.schema.names).cast(tbl.schema)
+        ).select(tbl.schema.names).cast(tbl.schema)
         parts[1] = pa.concat_tables([parts[1], advancer])
-    now = _time.time()
     with tempfile.TemporaryDirectory(
         prefix="mrs_replay_", ignore_cleanup_errors=True
     ) as src:
-        for i, part in enumerate(parts):
-            p = os.path.join(src, f"part{i}.parquet")
-            pq_mod.write_table(part, p)
-            os.utime(p, (now + i, now + i))  # mtime order = delivery order
         # the split files inherit the fixture's ts encoding, so the
         # footer probe reads one of them
-        yield _read_events_stream(
-            spark,
-            os.path.join(src, "part0.parquet"),
-            src,
-            maxFilesPerTrigger="1",
-        )
+        yield _file_stream(spark, src, parts)
 
 
 @query(
@@ -907,54 +966,40 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (batch-local row_number), then the merge re-ranks
     old-state ∪ batch-delta — both sides already one-row-per-user, so
     the merge input is bounded by |users|, never by event volume. The
-    state table is written to a NEW versioned directory each batch and
-    the pointer swapped after the write completes (an overwrite of the
-    directory being read would race the readers that feed it — the
-    same swap discipline a lakehouse MERGE provides transactionally).
+    state table is versioned and swapped by :func:`_fold_batches`.
     The final table equals the global per-user argmax — the SQL
     oracle — regardless of how events are split across batches,
     because per-key latest-wins merges are associative."""
-    import os
-    import tempfile
-
-    state = {"dir": None, "version": 0}
-
     with _replay(spark, sf_dir) as ev, tempfile.TemporaryDirectory(
         prefix="mrs_upsert_", ignore_cleanup_errors=True
     ) as root:
-
-        def upsert_batch(batch_df, batch_id):
-            # foreachBatch runs on the driver; the merge plan inside
-            # still executes distributed. The merge itself is the
-            # module-level upsert_latest_merge (replay-idempotent — see
-            # its docstring).
-            old = (
-                batch_df.sparkSession.read.parquet(state["dir"])
-                if state["dir"] is not None
-                else None
-            )
-            merged = upsert_latest_merge(old, batch_df)
-            state["version"] += 1
-            new_dir = os.path.join(root, f"state_v{state['version']}")
-            merged.write.parquet(new_dir)
-            state["dir"] = new_dir  # swap AFTER the write completes
-
-        q = _start(
-            ev.writeStream.foreachBatch(upsert_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
+        return _fold_batches(
+            ev,
             spark,
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("upsert stream did not drain within 300s")
-        if state["dir"] is None:  # empty fixture: no batch ever fired
-            return spark.createDataFrame(
-                [],
-                "user_id LONG, last_ts_us LONG, last_event_id LONG, "
-                "last_value DOUBLE",
-            )
-        return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)
+            root,
+            "user_id LONG, last_ts_us LONG, last_event_id LONG, "
+            "last_value DOUBLE",
+            upsert_latest_merge,
+        ).localCheckpoint(eager=True)
+
+
+def _synthetic_events(spark: SparkSession) -> DataFrame:
+    """The synthetic Python stream source
+    (sources/pydatasource.py::SyntheticEventsStreamDataSource),
+    registered on ``spark`` and read in two offset-bounded micro-batches
+    of ``SYNTH_STREAM_TOTAL // 2`` rows. The module ships by value: the
+    Python workers do not import this repo."""
+    from pyspark import cloudpickle as _cp
+
+    from map_reduce_subnet_spark.sources import pydatasource as pds
+
+    _cp.register_pickle_by_value(pds)
+    spark.dataSource.register(pds.SyntheticEventsStreamDataSource)
+    return (
+        spark.readStream.format("synthetic_events")
+        .option("batch", str(pds.SYNTH_STREAM_TOTAL // 2))
+        .load()
+    )
 
 
 @query(
@@ -990,18 +1035,7 @@ def stream_python_source_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimum TWO offset-bounded batches; the 4-batch offset walk stays
     pinned by tests/test_streaming.py::
     test_python_stream_source_spans_micro_batches."""
-    from pyspark import cloudpickle as _cp
-
-    from map_reduce_subnet_spark.sources import pydatasource as pds
-
-    _cp.register_pickle_by_value(pds)
-    spark.dataSource.register(pds.SyntheticEventsStreamDataSource)
-    ev = (
-        spark.readStream.format("synthetic_events")
-        .option("batch", str(pds.SYNTH_STREAM_TOTAL // 2))
-        .load()
-    )
-    agg = ev.groupBy("lang").agg(
+    agg = _synthetic_events(spark).groupBy("lang").agg(
         F.count("*").alias("n_events"), dsum("value", "sum_value")
     )
     return _run_to_memory(agg, spark, output_mode="complete", drain="process_all")
@@ -1028,42 +1062,29 @@ def stream_state_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies Spark's own state persistence round-trip, not just the
     sink output.
 
-    The state rows are collected BEFORE the scratch checkpoint is
-    deleted (the statestore scan reads lazily from those files); the
-    memory-sink view and checkpoint dir are both dropped in finally,
-    the same leak discipline as _run_to_memory."""
-    import shutil
-    import tempfile
-
-    ckpt = tempfile.mkdtemp(prefix="mrs_ssro_")
-    name = "s" + uuid.uuid4().hex[:12]
-    try:
-        ev = _read_event_stream(spark, sf_dir)
-        agg = ev.groupBy("event_type").count()
-        q = _start(
-            agg.writeStream.format("memory")
-            .queryName(name)
+    The aggregation drains into a ``noop`` sink (only its checkpoint
+    is read), and the state rows are materialized BEFORE the scratch
+    checkpoint is deleted (the statestore scan reads lazily from those
+    files)."""
+    with tempfile.TemporaryDirectory(
+        prefix="mrs_ssro_", ignore_cleanup_errors=True
+    ) as ckpt:
+        agg = _read_event_stream(spark, sf_dir).groupBy("event_type").count()
+        _drain(
+            agg.writeStream.format("noop")
             .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True),
+            .option("checkpointLocation", ckpt),
             spark,
         )
-        try:
-            if not q.awaitTermination(300):
-                q.stop()
-                raise TimeoutError("state-inspect stream did not drain")
-        finally:
-            spark.catalog.dropTempView(name)
-        st = spark.read.format("statestore").load(ckpt)
-        out = st.select(
-            F.col("key.event_type").alias("event_type"),
-            F.col("value.count").alias("n_events"),
+        return (
+            spark.read.format("statestore")
+            .load(ckpt)
+            .select(
+                F.col("key.event_type").alias("event_type"),
+                F.col("value.count").alias("n_events"),
+            )
+            .localCheckpoint(eager=True)
         )
-        rows = out.collect()
-        schema = out.schema
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @query(
@@ -1095,42 +1116,24 @@ def stream_python_sink_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle regenerates (``sf_dir`` unused: the source IS
     the data)."""
     import json as _json
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark import cloudpickle as _cp
 
     from map_reduce_subnet_spark.sources import pydatasource as pds
 
-    _cp.register_pickle_by_value(pds)
-    spark.dataSource.register(pds.SyntheticEventsStreamDataSource)
+    ev = _synthetic_events(spark)
     spark.dataSource.register(pds.JsonLinesStreamSinkDataSource)
-    out = tempfile.mkdtemp(prefix="mrs_pystreamsink_")
-    ckpt = os.path.join(out, "_ckpt")
-    try:
-        # 2 micro-batches (stream_python_source_true's rationale)
-        # — the sink's per-batch commit-log discipline needs >= 2
-        # committed batches to be exercised, which 2 still provides.
-        ev = (
-            spark.readStream.format("synthetic_events")
-            .option("batch", str(pds.SYNTH_STREAM_TOTAL // 2))
-            .load()
-        )
-        q = _start(
+    with tempfile.TemporaryDirectory(
+        prefix="mrs_pystreamsink_", ignore_cleanup_errors=True
+    ) as out:
+        # 2 micro-batches (stream_python_source_true's rationale) — the
+        # sink's per-batch commit-log discipline needs >= 2 committed
+        # batches to be exercised, which 2 still provides.
+        _drain(
             ev.writeStream.format("jsonl_stream_sink")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="0 seconds"),
+            .option("checkpointLocation", os.path.join(out, "_ckpt")),
             spark,
+            drain="process_all",
         )
-        q.processAllAvailable()
-        q.stop()
-        if not q.awaitTermination(60):
-            raise TimeoutError(
-                "jsonl_stream_sink query did not terminate within 60s "
-                "of stop(); sink commit log untrustworthy"
-            )
         commits_file = os.path.join(out, "_commits")
         if not os.path.exists(commits_file):
             raise RuntimeError(
@@ -1151,14 +1154,11 @@ def stream_python_sink_true(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = spark.read.schema(
             "event_id long, lang string, value double"
         ).json(files)
-        agg = back.groupBy("lang").agg(
-            F.count("*").alias("n_events"), dsum("value", "sum_value")
+        return (
+            back.groupBy("lang")
+            .agg(F.count("*").alias("n_events"), dsum("value", "sum_value"))
+            .localCheckpoint(eager=True)
         )
-        rows = agg.collect()
-        schema = agg.schema
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-    return spark.createDataFrame(rows, schema)
 
 
 @query(
@@ -1337,15 +1337,10 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each micro-batch touches O(changed keys) rows plus
     one tiny agg on the MV's bucket key — refresh cost tracks the
     DELTA, not the base table; the MV state swaps via the same
-    write-new-directory-then-swap discipline as
+    versioned table (:func:`_fold_batches`) as
     stream_upsert_foreachbatch (reference neurons/validator.py:146-163
     — the running score state maintained incrementally per round).
     """
-    import os
-    import shutil
-    import tempfile
-    import time as _time
-
     from map_reduce_subnet_spark.functions.stable import (
         SUM_DECIMAL,
         _finite,
@@ -1354,20 +1349,13 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
         _build_latest_state_versions,
     )
 
-    root = os.path.join(
-        tempfile.gettempdir(), f"mrs_smv_{uuid.uuid4().hex[:12]}"
-    )
-    feeds = os.path.join(root, "feeds")
-    os.makedirs(feeds)
     bucket = (F.col("user_id") % 16).cast("long").alias("bucket")
     mv_schema = "bucket long, n_users long, s decimal(27,6)"
-    state = {"dir": None, "version": 0}
 
-    def apply_feed(batch_df, batch_id):
-        # foreachBatch runs on the driver; the plans inside execute
-        # distributed. Delta algebra = mv_incremental_refresh's —
-        # including the _finite guard: a NaN/Inf new- or pre-image
-        # value contributes 0, matching the oracle's ISFINITE drop.
+    def apply_feed(mv, batch_df):
+        # Delta algebra = mv_incremental_refresh's — including the
+        # _finite guard: a NaN/Inf new- or pre-image value contributes
+        # 0, matching the oracle's ISFINITE drop.
         zero = F.lit(0).cast(SUM_DECIMAL)
         delta = (
             batch_df.select(
@@ -1396,11 +1384,9 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("bucket")
             .agg(F.sum("dn").alias("dn"), F.sum("ds").alias("ds"))
         )
-        ss = batch_df.sparkSession
-        mv = ss.read.schema(mv_schema).parquet(state["dir"])
         # eqNullSafe like the batch MV (warehouse.py): a NULL bucket
         # must MERGE across batches, not duplicate per feed
-        rolled = (
+        return (
             mv.alias("m")
             .join(
                 delta.alias("d"),
@@ -1421,12 +1407,10 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast(SUM_DECIMAL).alias("s"),
             )
         )
-        state["version"] += 1
-        new_dir = os.path.join(root, f"mv_v{state['version']}")
-        rolled.write.parquet(new_dir)
-        state["dir"] = new_dir  # swap AFTER the write completes
 
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="mrs_smv_", ignore_cleanup_errors=True
+    ) as root:
         table = _build_latest_state_versions(
             spark, sf_dir, os.path.join(root, "table")
         )
@@ -1451,52 +1435,20 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .write.parquet(mv1_dir)
         )
-        state["dir"] = mv1_dir
-        # the two successive change feeds become the stream's files
-        # (one file per feed → one micro-batch per feed via
-        # maxFilesPerTrigger=1; mtimes order them v1→v2 first)
-        now = _time.time()
-        feed_schema = (
-            "user_id long, value double, ts_us long, event_id long, "
-            "value_prev double, ts_us_prev long, event_id_prev long, "
-            "_change_type string"
-        )
-        for i, (vf, vt) in enumerate([(1, 2), (2, 3)]):
-            feed = table.changes(
-                spark, ["user_id"], vf, vt, include_preimage=True
-            ).select(
-                "user_id", "value", "ts_us", "event_id",
-                "value_prev", "ts_us_prev", "event_id_prev",
-                "_change_type",
-            )
-            scratch = os.path.join(root, f"feed_scratch{i}")
-            feed.coalesce(1).write.parquet(scratch)
-            part = next(
-                n for n in os.listdir(scratch)
-                if n.endswith(".parquet")
-            )
-            dst = os.path.join(feeds, f"feed{i}.parquet")
-            shutil.move(os.path.join(scratch, part), dst)
-            os.utime(dst, (now + i, now + i))
-        stream = (
-            spark.readStream.schema(feed_schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(feeds)
-        )
-        q = _start(
-            stream.writeStream.foreachBatch(apply_feed)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", os.path.join(root, "ckpt")),
+        # the two successive change feeds become the stream's files,
+        # one micro-batch per feed, v1→v2 first
+        feeds = [
+            table.changes(spark, ["user_id"], vf, vt, include_preimage=True)
+            for vf, vt in [(1, 2), (2, 3)]
+        ]
+        stream = _file_stream(
             spark,
+            os.path.join(root, "feeds"),
+            [feed.toArrow() for feed in feeds],
+            feeds[0].schema,
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError(
-                "mv refresh stream did not drain within 300s"
-            )
-        out = (
-            spark.read.schema(mv_schema)
-            .parquet(state["dir"])
+        return (
+            _fold_batches(stream, spark, root, mv_schema, apply_feed, mv1_dir)
             .where(F.col("n_users") > 0)
             .select(
                 "bucket",
@@ -1505,9 +1457,6 @@ def stream_mv_refresh_true(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 def cep_stream(ev: DataFrame, pattern: str, ooo: bool) -> DataFrame:

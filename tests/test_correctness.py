@@ -117,17 +117,34 @@ def test_entry_sweep_order():
     assert rest == sorted(rest, key=lambda k: (ledger[k]["round"], k))
 
 
-def test_advance_records_only_green_rows(tmp_path):
+def test_advance_records_only_green_rows(tmp_path, monkeypatch):
     """--advance sets (fingerprint at REV, round N) for each key whose
     row matched on rows, schema and hash; every other key keeps its
-    entry, so it stays unverified."""
+    entry, so it stays unverified. REV is a commit of the live package
+    in a throwaway repository, so the test needs no git checkout and
+    sees uncommitted edits."""
     import json
+    import os
+    import shutil
+    import subprocess
 
+    import scripts.fingerprints as fingerprints
     from scripts.fingerprints import (
         advance,
         compute_fingerprints,
         load_ledger,
     )
+
+    repo = tmp_path / "repo"
+    shutil.copytree(
+        os.path.join(fingerprints._REPO, fingerprints._PKG),
+        repo / fingerprints._PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    git = ["git", "-C", str(repo), "-c", "user.name=t", "-c", "user.email=t"]
+    for args in ("init -q", "add -A", "commit -q -m live"):
+        subprocess.run([*git, *args.split()], check=True, capture_output=True)
+    monkeypatch.setattr(fingerprints, "_REPO", str(repo))
 
     green, red = sorted(QUERIES)[:2]
     ledger = load_ledger()

@@ -391,13 +391,16 @@ def test_ann_keys_share_one_lloyd_cell_assignment(spark, tmp_path, monkeypatch):
     """sim_ann_ivf_kmeans, sim_ann_ivfpq and sim_ann_recall serve from
     ONE Lloyd cell assignment. On a fresh copy of the fixture (every
     artifact key starts empty) no artifact is built twice, and all
-    three keys read the same (vec_id, embedding, cent_id) artifact."""
+    three keys read the same (vec_id, embedding, cent_id) artifact.
+    The copy gets new mtimes: the artifact key hashes the fixture's
+    path and mtimes, and a later run of the same code at the same
+    temp path would otherwise find every artifact built."""
     import shutil
 
     from map_reduce_subnet_spark.operators import llm
 
     sf_dir = str(tmp_path / "sf")
-    shutil.copytree(SF_DIR, sf_dir)
+    shutil.copytree(SF_DIR, sf_dir, copy_function=shutil.copy)
     real = llm.artifact
     built: list[str] = []
     read: dict[str, dict[str, list[str]]] = {}

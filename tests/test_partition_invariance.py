@@ -32,7 +32,7 @@ This sweep pins the invariance directly, Spark-vs-Spark:
   Kafka partition ordering). The input layout therefore stays
   pristine, and only the state-store partition count is varied: a
   stream starts with min(spark.sql.shuffle.partitions, task slots)
-  state partitions (streaming/jobs.py::_start), so the alternate run
+  state partitions (streaming/jobs.py::_drain), so the alternate run
   sets 3, below that cap, and every stateful drain must report a
   count different from the baseline's (a deployment will never run
   with the fixture's count). The check needs more than 3 task slots.

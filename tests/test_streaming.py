@@ -55,25 +55,12 @@ def _events(rows):
 
 
 def _file_stream(spark, src, tables):
-    """Write each events table as one parquet file in the new dir
-    ``src`` with ascending mtimes and return a stream that reads them
-    one per trigger, in that order."""
-    import os
-    import time as _time
+    """Write each events table as one parquet file in ``src`` with
+    ascending mtimes and return a stream that reads them one per
+    trigger, in that order."""
+    from map_reduce_subnet_spark.streaming import jobs
 
-    import pyarrow.parquet as pq_mod
-
-    from map_reduce_subnet_spark.streaming.jobs import _read_events_stream
-
-    src.mkdir()
-    now = _time.time()
-    for i, t in enumerate(tables):
-        p = str(src / f"part{i}.parquet")
-        pq_mod.write_table(t, p)
-        os.utime(p, (now + i, now + i))  # mtime order = delivery order
-    return _read_events_stream(
-        spark, str(src / "part0.parquet"), str(src), maxFilesPerTrigger="1"
-    )
+    return jobs._file_stream(spark, str(src), tables)
 
 
 def test_stream_tumbling_matches_batch(spark):
@@ -153,12 +140,34 @@ def test_memory_sink_views_are_dropped(spark):
     before the drop, so it still reads the sink afterwards, the same
     rows on every read, on both the ``available_now`` drain
     (stream_dedup_true) and the ``process_all`` one
-    (stream_python_source_true)."""
-    for key in ("stream_dedup_true", "stream_python_source_true"):
+    (stream_python_source_true). Every other drain shape — the
+    statestore read, both foreachBatch folds, the Python sink and a
+    replayed stream — also leaves no view and no ``mrs_*`` temp dir
+    behind, and its frame outlives the deleted dir."""
+    import tempfile
+
+    def scratch():
+        return {
+            n for n in os.listdir(tempfile.gettempdir())
+            if n.startswith("mrs_")
+        }
+
+    for key in (
+        "stream_dedup_true",
+        "stream_python_source_true",
+        "stream_state_inspect",
+        "stream_upsert_foreachbatch",
+        "stream_mv_refresh_true",
+        "stream_python_sink_true",
+        "stream_stateful_ema_batches",
+    ):
         before = {t.name for t in spark.catalog.listTables()}
+        dirs = scratch()
         df = QUERIES[key](spark, SF_DIR)
         after = {t.name for t in spark.catalog.listTables()}
         assert after == before, f"{key} leaked temp views: {after - before}"
+        left = scratch() - dirs
+        assert not left, f"{key} left temp dirs: {left}"
         first = sorted(map(tuple, df.collect()))
         assert first, f"{key}: frame must remain usable after the drop"
         assert sorted(map(tuple, df.collect())) == first, key
@@ -928,6 +937,36 @@ def test_checkpoint_manager_is_local_only():
     assert got == _FS_CHECKPOINT_MANAGER
 
 
+def test_every_stream_drains_through_one_helper():
+    """Every stream in streaming/jobs.py starts, waits and stops in
+    ``_drain``, and every foreachBatch sink folds in ``_fold_batches``:
+    no other function calls a stream-lifecycle method."""
+    import ast
+
+    from map_reduce_subnet_spark.streaming import jobs
+
+    lifecycle = {
+        "start",
+        "trigger",
+        "awaitTermination",
+        "processAllAvailable",
+        "foreachBatch",
+    }
+    with open(jobs.__file__) as f:
+        tree = ast.parse(f.read())
+    calls = [
+        (getattr(top, "name", "<module>"), node.func.attr, node.lineno)
+        for top in tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in lifecycle
+    ]
+    outside = [c for c in calls if c[0] not in ("_drain", "_fold_batches")]
+    assert not outside, outside
+    assert {attr for _, attr, _ in calls} == lifecycle, calls
+
+
 _CHECKPOINT_SCRIPT = textwrap.dedent(
     """
     import json, os, sys
@@ -936,8 +975,8 @@ _CHECKPOINT_SCRIPT = textwrap.dedent(
     from map_reduce_subnet_spark.operators import QUERIES
     from map_reduce_subnet_spark.session import get_spark
     from map_reduce_subnet_spark.streaming.jobs import (
+        _drain,
         _read_event_stream,
-        _start,
     )
 
     spark = get_spark(master="local[4]", shuffle_partitions=4)
@@ -955,7 +994,6 @@ _CHECKPOINT_SCRIPT = textwrap.dedent(
             .withWatermark("ts", "10 minutes")
             .dropDuplicates(["event_id"])
             .writeStream.format("noop")
-            .trigger(availableNow=True)
             .option("checkpointLocation", ckpt)
         )
         if not start(writer).awaitTermination(300):
@@ -972,9 +1010,11 @@ _CHECKPOINT_SCRIPT = textwrap.dedent(
     QUERIES["stream_dedup_true"](spark, sf_dir).collect()
     out["drain"] = logged()[n:]
     n = len(logged())
-    out["scoped"] = checkpoint_files("scoped", lambda w: _start(w, spark))
+    out["scoped"] = checkpoint_files("scoped", lambda w: _drain(w, spark))
     out["scoped_forks"] = logged()[n:]
-    out["default"] = checkpoint_files("default", lambda w: w.start())
+    out["default"] = checkpoint_files(
+        "default", lambda w: w.trigger(availableNow=True).start()
+    )
     spark.stop()
     print(json.dumps(out))
     """
@@ -986,8 +1026,8 @@ def test_local_checkpoints_fork_no_readlink_and_keep_their_files(tmp_path):
     manager forks a ``readlink`` per overwrite-rename (112 on a
     stream_dedup_true drain at 4 state partitions). In a session whose
     PATH leads with logging wrappers for Hadoop's shell commands, a
-    stateful ``_run_to_memory`` drain and a ``_start`` drain fork none.
-    The ``_start`` drain's checkpoint holds the same files, Hadoop's
+    stateful ``_run_to_memory`` drain and a ``_drain`` drain fork none.
+    The ``_drain`` drain's checkpoint holds the same files, Hadoop's
     ``.crc`` and Spark's ``N.delta.crc`` state checksums included, as
     a plain ``writer.start()`` under Spark's default manager."""
     from scripts.shell_forks import write_wrappers
