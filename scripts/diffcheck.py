@@ -1,75 +1,53 @@
-"""Differential check: run named queries from __spark_entry__ vs DuckDB oracles.
+"""Differential check: run named queries of ``__spark_entry__``
+against their DuckDB oracles.
 
 Usage (from a NEUTRAL cwd, e.g. /tmp — driver parity):
-    python /root/repo/scripts/diffcheck.py [sf_dir] name1 name2 ...
+    python <checkout>/scripts/diffcheck.py [sf_dir] name1 name2 ...
 
-Defaults to sf0.01; pass an absolute sf_dir as the first arg to
-override. Prints MATCH/MISMATCH per query with dtype and first-diff
-detail on mismatch; exit code 1 if any mismatch.
+It checks the checkout it sits in: the entry beside this script puts
+its own tree first on sys.path, so the package, the oracles and the
+comparator all come from that tree, whether it is the working copy,
+a second clone or a ``git archive`` export. The session is a plain
+``local[8]`` one (none of ``get_spark``'s confs). Defaults to sf0.01;
+pass an absolute sf_dir as the first arg to override. Prints MATCH /
+MISMATCH (with the comparator's diff) / ROWS-ONLY per query; exit
+code 1 if any mismatch.
 """
 import importlib.util
+import os
 import sys
+import tempfile
 import time
 
 sf_dir = "/root/testdata/sf0.01"
 names = sys.argv[1:]
 if names and names[0].startswith("/"):
-    sf_dir = names[0]
-    names = names[1:]
+    sf_dir, names = names[0], names[1:]
 
-spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py"
-)
+root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+spec = importlib.util.spec_from_file_location("__spark_entry__", f"{root}/__spark_entry__.py")
 m = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(m)
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-spark = (
-    SparkSession.builder.master("local[8]")
-    .config("spark.sql.shuffle.partitions", "8")
-    .getOrCreate()
-)
-import duckdb  # noqa: E402
+from perfbench.check import oracle_connection, query_mismatch  # noqa: E402
 
-con = duckdb.connect()
-for t in [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]:
-    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-
+spark = (SparkSession.builder.master("local[8]")
+         .config("spark.sql.shuffle.partitions", "8").getOrCreate())
 qs, osql = m.queries(), m.oracle_sql()
 fails = 0
-for name in names:
-    t0 = time.time()
-    sp = qs[name](spark, sf_dir).toPandas()
-    dt = time.time() - t0
-    if name not in osql:
-        print(f"{name}: ROWS-ONLY ran, {len(sp)} rows  [{dt:.2f}s]")
-        continue
-    du = con.sql(osql[name]).df()
-    cols = sorted(sp.columns)
-    ok_cols = sorted(du.columns) == cols
-    a = sp[cols].sort_values(cols).reset_index(drop=True)
-    b = du[cols].sort_values(cols).reset_index(drop=True) if ok_cols else None
-    ok = ok_cols and a.equals(b)
-    print(
-        f"{name}: {'MATCH' if ok else 'MISMATCH'} "
-        f"spark={len(sp)} oracle={len(du)} [{dt:.2f}s]"
-    )
-    if not ok:
-        fails += 1
-        if not ok_cols:
-            print("  spark cols:", cols)
-            print("  oracle cols:", sorted(du.columns))
-        else:
-            neq = ~(a.eq(b) | (a.isna() & b.isna()))
-            bad = neq.any(axis=1)
-            print("  spark dtypes:", dict(a.dtypes.astype(str)))
-            print("  oracle dtypes:", dict(b.dtypes.astype(str)))
-            print("  first diffs (spark):")
-            print(a[bad].head(5))
-            print("  first diffs (oracle):")
-            print(b[bad].head(5))
+with tempfile.TemporaryDirectory() as tmp:
+    con = oracle_connection(sf_dir, tmp)
+    for name in names:
+        t0 = time.time()
+        if name not in osql:
+            n = len(qs[name](spark, sf_dir).toPandas())
+            print(f"{name}: ROWS-ONLY ran, {n} rows  [{time.time() - t0:.2f}s]")
+            continue
+        diff = query_mismatch(spark, con, sf_dir, name)
+        print(f"{name}: {'MISMATCH' if diff else 'MATCH'} [{time.time() - t0:.2f}s]")
+        if diff:
+            fails += 1
+            print("  " + diff.replace("\n", "\n  "))
 sys.exit(1 if fails else 0)

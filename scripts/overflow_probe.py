@@ -1,76 +1,50 @@
-"""Extreme-magnitude differential probe (r12 scoping run for r13).
+"""Extreme-magnitude probe: every swept key on the ``extreme`` corpus
+of tests/test_differential.py (events.value at ±1e18/±1e20/1e22/1e300,
+lineitem price 1e20 and quantity 1e19), Spark against DuckDB, each
+outcome classified as match / mismatch / spark_err / duck_err /
+both_err. Read-only: it changes no oracle or engine code.
 
-Builds the micro corpus with events.value / lineitem prices pushed to
-1e18 / 1e20 / 1e22 / 1e300 magnitudes and runs every differential-
-family key on Spark vs DuckDB, classifying outcomes into
-match / mismatch / spark_err / duck_err / both_err. READ-ONLY: no
-oracle or engine change — the r12 measured facts live in NOTES.md
-("EXTREME-MAGNITUDE PROBE"). The r13 out-of-domain round promoted
-this corpus to permanent suite layer 15
-(tests/test_extreme_magnitude_differential.py, which pins the
-classification per key); keep this script as the exploratory harness
-— its output is the source of truth when re-syncing the layer's
-EXTREME_ABORT_KEYS list. r14 closing state: match 206, spark_err 0,
-duck_err 0, both_err 20 (symmetric band-edge refusals, the decided
-posture), mismatch 0 (the 7 unguarded-dsum keys that drifted at 1e20
-in r13 were ported to stable.py::dsum_wide, emptying the drift class
-— layer 15 no longer carries a pinned-drift escape hatch).
+The suite pins the same classification per key: the
+``EXTREME_ABORT_KEYS`` must abort on both engines, every other key
+must match. This script prints the whole table in one run; it is the
+source to re-sync that set from. The decided posture is a symmetric
+refusal at the DECIMAL(27,6) band edge (both_err) and no mismatch,
+spark_err or duck_err anywhere.
 
-Usage:  cd /tmp && python /root/repo/scripts/overflow_probe.py
+Usage:  cd /tmp && python <checkout>/scripts/overflow_probe.py
 """
-import sys, traceback
-sys.path.insert(0, '/root/repo')
-sys.path.insert(0, '/root/repo/tests')
-import numpy as np, pandas as pd, duckdb
-from tests.test_micro_differential import _micro_tables
-from tests.test_perturbed_differential import PERTURBED_KEYS, PERTURBED_ONLY_KEYS
-from tests.conftest import assert_frames_match
-from map_reduce_subnet_spark.operators import ORACLES, QUERIES
-from pyspark.sql import SparkSession
+import os
+import sys
+import tempfile
 
-tables = _micro_tables()
-ev = tables["events"].copy()
-mags = [1e18, -1e18, 1e20, -1e20, 1e22, 1e300]
-# .loc on a too-small frame silently APPENDS half-NaN rows instead of
-# planting (ADVICE r12): assert the labels exist
-assert len(ev) > 3 * (len(mags) - 1), "micro events table shrank"
-for i, m in enumerate(mags):
-    ev.loc[3*i, "value"] = m
-tables["events"] = ev
-li = tables["lineitem"].copy()
-assert len(li) >= 2, "micro lineitem table shrank"
-li.loc[0, "l_extendedprice"] = 1e20
-li.loc[1, "l_quantity"] = 1e19
-tables["lineitem"] = li
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import tempfile, os
-dst = tempfile.mkdtemp(prefix="ovf_")
-for name, df in tables.items():
-    df.to_parquet(os.path.join(dst, f"{name}.parquet"))
+from pyspark.sql import SparkSession  # noqa: E402
 
-con = duckdb.connect()
-for name in tables:
-    con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{dst}/{name}.parquet'")
+from map_reduce_subnet_spark.operators import ORACLES, QUERIES  # noqa: E402
+from perfbench.check import oracle_connection  # noqa: E402
+from tests.conftest import assert_frames_match  # noqa: E402
+from tests.test_differential import KEYS, write_corpus  # noqa: E402
 
+
+def attempt(run, limit):
+    """(result, None), or (None, the error's type and first ``limit`` chars)."""
+    try:
+        return run(), None
+    except Exception as e:
+        return None, f"{type(e).__name__}: {str(e)[:limit]}"
+
+
+dst = write_corpus("extreme", tempfile.mkdtemp(prefix="ovf_"))
+con = oracle_connection(dst, tempfile.mkdtemp(prefix="ovf_duckdb_"))
 spark = (SparkSession.builder.master("local[8]")
          .config("spark.sql.shuffle.partitions", "8").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 
-keys = sorted(set(PERTURBED_KEYS + PERTURBED_ONLY_KEYS))
 res = {"match": [], "mismatch": [], "spark_err": [], "duck_err": [], "both_err": []}
-for key in keys:
-    if key not in ORACLES:
-        continue
-    serr = derr = None
-    got = want = None
-    try:
-        got = QUERIES[key](spark, dst).toPandas()
-    except Exception as e:
-        serr = f"{type(e).__name__}: {str(e)[:120]}"
-    try:
-        want = con.sql(ORACLES[key]).df()
-    except Exception as e:
-        derr = f"{type(e).__name__}: {str(e)[:160]}"
+for key in KEYS:
+    got, serr = attempt(lambda: QUERIES[key](spark, dst).toPandas(), 120)
+    want, derr = attempt(lambda: con.sql(ORACLES[key]).df(), 160)
     if serr and derr:
         res["both_err"].append((key, serr[:60], derr[:60]))
     elif serr:

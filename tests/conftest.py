@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import sys
+from unittest import mock
 
 import duckdb
 import numpy as np
@@ -50,9 +51,21 @@ def pytest_collection_modifyitems(config, items):
         items[:] = kept
 
 
+def _test_heap() -> str:
+    """Half the available memory, at most get_spark's 16g default (which
+    a small box's RAM cannot back) and at least 1g."""
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    return f"{max(1, min(16, kib // 2**20 // 2))}g"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="mrs-tests", shuffle_partitions=8)
+    # The test JVM's heap follows the machine unless the caller set
+    # SPARK_GRAFT_DRIVER_MEM; the variable is only set for this launch.
+    heap = {} if "SPARK_GRAFT_DRIVER_MEM" in os.environ else {"SPARK_GRAFT_DRIVER_MEM": _test_heap()}
+    with mock.patch.dict(os.environ, heap):
+        s = get_spark(app_name="mrs-tests", shuffle_partitions=8)
     yield s
 
 
