@@ -273,8 +273,8 @@ def _sql_finite(expr: str) -> str:
     spelling there (Spark lacks the builtin, hence the ABS < inf form
     on that side — same truth table: NaN/±Inf excluded, NULL inert).
     Without this guard DuckDB's CAST(inf AS DECIMAL) raises
-    ConversionException where Spark yields NULL (measured r10 — the
-    14 oracle-crash keys in tests/test_nonfinite_differential.py)."""
+    ConversionException where Spark yields NULL (the oracle-crash keys
+    of the ``nonfinite`` corpus in tests/test_differential.py)."""
     return f"(CASE WHEN ISFINITE({expr}) THEN ({expr}) END)"
 
 

@@ -64,9 +64,6 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part"})
 #   - timestamp[us, tz=UTC] -> already TIMESTAMP, passes through
 EVENT_TIME_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
-# Backwards-compat alias (r1-r3 name; some tests import it).
-NS_TIMESTAMP_COLS = EVENT_TIME_COLS
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table, verifying the declared column contract."""

@@ -12,17 +12,18 @@ becomes a 10c-clique, so pair outputs scale ~x45 per cluster while
 the corpus scales x10. Linear-ish wall-clock at that output growth
 is the pass bar for the bucketed (never all-pairs) architecture.
 
-Methodology matches bench.py: each query executes into the no-op
-sink (all columns materialized, nothing crosses to the driver); a
-watchdog cancels any query still running after --timeout seconds and
-records TIMEOUT instead of hanging the rehearsal.
+Each row is one bench.py ``time_row`` after bench.py's warm-up: the
+query is built and executed into the no-op sink (all columns
+materialized, nothing crosses to the driver). A watchdog cancels the
+row's job group after --timeout seconds and records None instead of
+hanging the rehearsal.
 
 Usage:
     python scripts/scale_rehearsal.py [--rebuild] [--queries q1,q2]
         [--timeout 600]
 
-Writes nothing under /root/repo except stdout; the scaled fixture
-lives in /tmp/mrs_scale_sf1.
+Writes nothing in the repo; the scaled fixture lives in
+/tmp/mrs_scale_sf1.
 """
 
 from __future__ import annotations
@@ -31,7 +32,6 @@ import argparse
 import shutil
 import sys
 import threading
-import time
 from pathlib import Path
 
 import duckdb
@@ -253,33 +253,6 @@ def build_fixture() -> None:
     )
 
 
-def run_noop(spark, build, group: str, timeout: float) -> float | None:
-    """BUILD the query (eager checkpoints / fixture-cache builds
-    included — bench.py parity) and execute it into the no-op sink,
-    all under a watchdog; return seconds or None on timeout/failure
-    (the watchdog cancels the job group so the rehearsal proceeds)."""
-    done = threading.Event()
-
-    def watchdog() -> None:
-        if not done.wait(timeout):
-            print(f"  WATCHDOG: cancelling {group}", flush=True)
-            spark.sparkContext.cancelJobGroup(group)
-
-    t = threading.Thread(target=watchdog, daemon=True)
-    t.start()
-    spark.sparkContext.setJobGroup(group, group, interruptOnCancel=True)
-    t0 = time.time()
-    try:
-        build().write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-    except Exception as e:
-        print(f"  {group} failed/cancelled: {str(e)[:200]}", flush=True)
-        return None
-    finally:
-        done.set()
-        spark.sparkContext.setJobGroup("", "")
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rebuild", action="store_true")
@@ -300,40 +273,35 @@ def main() -> None:
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS", "--driver-memory 48g pyspark-shell"
     )
+    import bench
     from map_reduce_subnet_spark.operators import QUERIES
     from map_reduce_subnet_spark.session import get_spark
 
     # bench.py's session, so absolute numbers are comparable to
     # BASELINE.md rows (an ad-hoc builder session measured the same
-    # sf0.1 queries 4-6x slower)
+    # sf0.1 queries 4-6x slower); the 10x fixture's warm-up only
+    # reads its parquet footers.
     spark = get_spark(app_name="mrs-scale-rehearsal")
-    # Untimed warmup (bench.py discipline): JVM + parquet footers at
-    # both scales so the first timed row doesn't absorb startup, plus
-    # one throwaway stateful streaming job when the query set contains
-    # streaming rows — engine + state-store + python state-worker
-    # spin-up cost about 20 s and landed entirely in the first timed
-    # streaming row of the first r8 rehearsal (28.65 s at sf0.1 for a
-    # query whose bench row is ~5 s).
-    names = [q for q in args.queries.split(",") if q]
-    for sf_dir in (SRC, DST):
-        QUERIES["agg_reduce_sum"](spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-    if any(n.startswith("stream_") for n in names):
-        QUERIES["stream_stateful_ema"](spark, SRC).write.format(
-            "noop"
-        ).mode("overwrite").save()
+    bench.warm_up(spark, SRC)
+    bench.warm_up(spark, DST, ("agg_reduce_sum",))
     results = {}
-    for name in names:
+    for name in [q for q in args.queries.split(",") if q]:
         row = {}
         for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            dt = run_noop(
-                spark,
-                lambda n=name, d=sf_dir: QUERIES[n](spark, d),
-                f"{name}@{label}",
-                args.timeout,
+            group = f"{name}@{label}"
+            watchdog = threading.Timer(
+                args.timeout, spark.sparkContext.cancelJobGroup, (group,)
             )
-            row[label] = round(dt, 2) if dt is not None else None
+            watchdog.start()
+            try:
+                row[label] = round(sum(bench.time_row(
+                    spark, lambda: QUERIES[name](spark, sf_dir), group
+                )), 2)
+            except Exception as e:
+                print(f"  {group} failed/cancelled: {str(e)[:200]}", flush=True)
+                row[label] = None
+            finally:
+                watchdog.cancel()
             print(f"{name} @ {label}: {row[label]}s", flush=True)
         results[name] = row
     print("\n| query | sf0.1 s | sf1 s | ratio |", flush=True)
