@@ -30,7 +30,11 @@ rounds. Each round scores the metagraph in one projection (``uid`` is
 its key) and joins that onto the state lazily; the round that sinks
 weights checkpoints the state once per SINK_PERIOD rounds, so the
 state's plan holds at most SINK_PERIOD joins and durable state is
-written when the weights become visible.
+written when the weights become visible. The sink total is an
+``Observation`` on the frame being checkpointed, computed inside the
+checkpoint's own job, so a period runs 3 Spark jobs: the broadcast of
+the round scores, the checkpoint, and the caller's write of the
+weights.
 """
 
 from __future__ import annotations
@@ -38,7 +42,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from map_reduce_subnet_spark.functions.checkpoint import stable_checkpoint
@@ -147,11 +151,14 @@ class SubnetPipeline:
         # action at round N re-executes all N rounds (O(rounds²)); with
         # it the plan holds at most SINK_PERIOD joins. Durable
         # (checkpoint-dir) when the session sets one, executor-local
-        # otherwise: see functions/checkpoint.py.
-        new_scores = stable_checkpoint(new_scores)
-        total = new_scores.agg(  # validator.py:149
-            F.sum(F.col("ema").cast("decimal(27,6)")).cast("double")
-        ).collect()[0][0]
+        # otherwise: see functions/checkpoint.py. The sink total
+        # (validator.py:149) is observed inside the checkpoint's own
+        # job, so it costs no job of its own.
+        obs = Observation()
+        new_scores = stable_checkpoint(new_scores.observe(
+            obs, F.sum(F.col("ema").cast("decimal(27,6)")).cast("double").alias("total")
+        ))
+        total = obs.get["total"]
         # empty metagraph (all peers deregistered) → no total; skip
         # the sink rather than emitting all-NULL weights
         weights = None

@@ -39,6 +39,22 @@ says why and what it measured):
   chars, so a temp dir too long for either keeps TCP
   (``python_socket_confs``): a long temp path may cost speed, never
   the session. This part is a conf, not the start-up module.
+
+Driver calls. PySpark wraps every Column function in a call-site
+capture (``pyspark.errors.utils._with_origin``): it reads a conf and
+sets and clears the JVM's ``PySparkCurrentOrigin`` around the call, so
+one warm ``F.col("x")`` sends 13 gateway commands instead of 3, each a
+round trip to the JVM (~0.3 ms on a 4-core VM; a plan build sends
+hundreds, ``scripts/driver_calls.py`` counts them per key).
+``spark.python.sql.dataFrameDebugging.enabled=false`` turns it off.
+What is lost is the Python caller's file and line in a runtime error's
+``== DataFrame ==`` context, which then names the JVM's reflective
+entry point; the error class, the message and the JVM stack stay. The
+capture runs in the driver's Python whatever the master, so the conf
+is set for every master, not only local ones. PySpark reads it once
+per process, at the first Column call made under an active session,
+and keeps that answer: a process whose first session is not a
+``get_spark`` one keeps the capture for its life.
 """
 
 from __future__ import annotations
@@ -143,6 +159,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         # Quieter Ivy/UI in the harness.
         .config("spark.ui.enabled", "false")
+        # --- Driver calls: see the module docstring ----------------------
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("local"):
         # --- Python workers: see the module docstring ------------------

@@ -177,10 +177,10 @@ def _jobs(spark, group):
 
 
 def test_sink_period_job_budget(spark, metagraph, tmp_path):
-    """One sink period, its weights written to the noop sink, runs 5
+    """One sink period, its weights written to the noop sink, runs 3
     jobs: the broadcast of the round scores, one reliable checkpoint of
-    the state, the two jobs of the sink total, and the write. A
-    non-sink round runs none."""
+    the state, whose job also observes the sink total, and the write.
+    A non-sink round runs none."""
     sc = spark.sparkContext
     sc.setCheckpointDir(str(tmp_path / "ckpt"))
     group = f"sink-period-{uuid.uuid4()}"
@@ -194,7 +194,7 @@ def test_sink_period_job_budget(spark, metagraph, tmp_path):
         non_sink = _jobs(spark, group)
         scores, weights = pipe.validator_round(metagraph, scores)
         weights.write.format("noop").mode("overwrite").save()
-        assert _jobs(spark, group) == (5, 1)
+        assert _jobs(spark, group) == (3, 1)
         assert non_sink == (0, 0)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,4 +1,5 @@
-"""The session's Python-worker set-up (``session.py``, "Python workers").
+"""The session's Python-worker set-up (``session.py``, "Python workers"),
+and its driver calls (``session.py``, "Driver calls").
 
 A Python process's fixed cost is pinned where it is paid: a worker of
 the test session, a data source planner and a streaming source runner
@@ -9,7 +10,9 @@ archive, yet a changed archive is still seen. The start-up module's
 archive check and its chain-loading run in plain subprocesses with
 synthetic archives. The socket-path guard is pinned as a pure
 function, and end to end on sessions whose temp dir sits at either
-side of it.
+side of it. The gateway commands a Column call sends, and the error
+context that costs, are pinned in a fresh interpreter, as is the shape
+of ``scripts/driver_calls.py``'s report.
 """
 
 from __future__ import annotations
@@ -336,3 +339,82 @@ def test_sessions_start_at_either_side_of_the_socket_guard():
         shutil.rmtree(base, ignore_errors=True)
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.split() == ["true", "3", "false", "3"]
+
+
+_CALLS_SCRIPT = textwrap.dedent(
+    """
+    import json, sys
+    sys.path.insert(0, sys.argv[1])
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import functions as F
+    from map_reduce_subnet_spark.session import get_spark
+
+    spark = get_spark(master="local[1]")
+    out = {"conf": spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")}
+    for _ in range(5):
+        F.col("x")
+    send, sent = ClientServerConnection.send_command, []
+
+    def counted(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    for _ in range(50):
+        F.col("x")
+    ClientServerConnection.send_command = send
+    out["per_call"] = len(sent) / 50
+    try:
+        spark.range(1).select(F.lit("x").cast("int")).collect()
+    except Exception as ex:
+        out["condition"] = ex.getCondition()
+        out["message"] = str(ex)
+    spark.stop()
+    print(json.dumps(out))
+    """
+)
+
+
+def test_column_calls_skip_the_call_site_capture(tmp_path):
+    """``get_spark`` turns off PySpark's per-call call-site capture: a
+    warm ``F.col`` sends at most 4 gateway commands (13 with the
+    capture). What is given up is the Python caller in a runtime
+    error's ``== DataFrame ==`` context: the error class and message
+    stay, and the context names the JVM's reflective entry point
+    instead of this script's file and line. PySpark reads the conf once
+    per process, at the first Column call under an active session, so
+    this runs in a fresh interpreter."""
+    script = tmp_path / "calls_probe.py"
+    script.write_text(_CALLS_SCRIPT)
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run(
+        [sys.executable, str(script), ROOT],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert out["conf"] == "false"
+    assert out["per_call"] <= 4, out["per_call"]
+    assert out["condition"] == "CAST_INVALID_INPUT"
+    assert str(script) not in out["message"], out["message"][:2000]
+
+
+def test_driver_calls_counts_each_half_by_kind(tmp_path):
+    """``scripts/driver_calls.py`` prints, per key, the gateway commands
+    of its second run's build and execute halves, counted by Py4J
+    command kind."""
+    script = os.path.join(ROOT, "scripts", "driver_calls.py")
+    data = os.path.join(ROOT, "perfbench", "data")
+    proc = subprocess.run(
+        [sys.executable, script, "--sf-dir", data, "agg_reduce_sum"],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert list(out) == ["agg_reduce_sum"]
+    halves = out["agg_reduce_sum"]
+    assert list(halves) == ["build", "execute"]
+    for counts in halves.values():
+        assert counts["c"] > 0
+        assert all(len(kind) == 1 and type(n) is int and n > 0 for kind, n in counts.items())
+    assert halves["build"]["c"] > halves["execute"]["c"]
