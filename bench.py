@@ -27,10 +27,13 @@ later failure keeps the samples taken before it.
 from __future__ import annotations
 
 import collections
+import functools
 import json
 import os
 import sys
+import threading
 import time
+from contextlib import ExitStack
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -43,15 +46,69 @@ LOAD_GATE = 12.0  # 1-min load average below which the bench starts
 LOAD_WAIT_S = 240.0  # max seconds to wait for the gate, then proceed
 
 
-def time_row(spark, build, group: str) -> tuple[float, float]:
+def time_row(spark, build, group: str, probes=()) -> tuple[float, float]:
     """Build one row's frame under Spark job group ``group`` and run it
-    into the no-op sink; returns (build_s, exec_s)."""
+    into the no-op sink; returns (build_s, exec_s). Each probe is called
+    with the half's name, "build" or "execute", and the context manager
+    it returns is held over that half, outside its timing."""
     spark.sparkContext.setJobGroup(group, group, interruptOnCancel=True)
-    t0 = time.perf_counter()
-    df = build()
-    t1 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return t1 - t0, time.perf_counter() - t1
+
+    def timed(half, fn):
+        with ExitStack() as stack:
+            for probe in probes:
+                stack.enter_context(probe(half))
+            t0 = time.perf_counter()
+            return fn(), time.perf_counter() - t0
+
+    df, build_s = timed("build", build)
+    _, exec_s = timed("execute", lambda: df.write.format("noop").mode("overwrite").save())
+    return build_s, exec_s
+
+
+def run_keys(
+    spark, sf_dir: str, keys, runs=lambda run, group: run(), probes=(),
+    group: str = "{key}", con=None, timeout: float | None = None,
+) -> dict:
+    """The one key loop: ``{key: runs(run, name)}`` for each key, where
+    ``run()`` runs the registered query once under the Spark job group
+    ``name = group.format(key=key)`` and raises what it raised. ``runs``
+    decides how often a key runs and what is kept.
+
+    ``run()`` returns ``time_row``'s (build_s, exec_s), the halves held
+    under ``probes``. Given a DuckDB oracle connection ``con``
+    (``perfbench.check.oracle_connection``), it returns instead
+    ``perfbench.check.query_mismatch``'s diff of the collected answer
+    against the key's oracle, None when they match. A watchdog cancels
+    the job group of a run still going after ``timeout`` seconds."""
+    if con is not None:
+        from perfbench.check import query_mismatch
+
+    def run(key, name):
+        watchdog = threading.Timer(timeout or 0, spark.sparkContext.cancelJobGroup, (name,))
+        if timeout:
+            watchdog.start()
+        try:
+            if con is None:
+                return time_row(spark, lambda: QUERIES[key](spark, sf_dir), name, probes)
+            spark.sparkContext.setJobGroup(name, name, interruptOnCancel=True)
+            return query_mismatch(spark, con, sf_dir, key)
+        finally:
+            watchdog.cancel()
+
+    out = {}
+    for key in keys:
+        name = group.format(key=key)
+        out[key] = runs(functools.partial(run, key, name), name)
+    return out
+
+
+def once_or_none(run, group: str):
+    """One run's result, or None when it fails (reported on stderr)."""
+    try:
+        return run()
+    except Exception as ex:
+        print(f"bench: {group} FAILED: {ex}", file=sys.stderr)
+        return None
 
 
 def warm_up(
@@ -66,11 +123,7 @@ def warm_up(
     Python state worker (stream_stateful_ema), whose start-up alone
     doubled the first timed streaming row. A failed warm-up is reported
     and skipped: it must not lose the whole record."""
-    for key in keys:
-        try:
-            time_row(spark, lambda: QUERIES[key](spark, sf_dir), f"warm-up {key}")
-        except Exception as ex:
-            print(f"bench: warm-up {key} FAILED: {ex}", file=sys.stderr)
+    run_keys(spark, sf_dir, keys, once_or_none, group="warm-up {key}")
 
 
 def bench_row(run, name: str) -> dict:
@@ -151,17 +204,17 @@ def main() -> None:
             raise SystemExit(
                 "bench: SPARK_GRAFT_ONLY matched no known queries"
             )
-    rows: dict[str, dict] = {}
-    for name in sorted(only or QUERIES):
-        fn = QUERIES[name]
+
+    def row(run, name: str) -> dict:
         load, tick0 = os.getloadavg()[0], host.cpu_ticks()
-        rows[name] = bench_row(
-            lambda: time_row(spark, lambda: fn(spark, sf_dir), name), name
-        )
-        rows[name]["loadavg_1m"] = round(load, 2)
+        r = bench_row(run, name)
+        r["loadavg_1m"] = round(load, 2)
         # the row's CPU steal marks a wild sample as the host's noise,
         # not a plan regression
-        rows[name]["steal_pct"] = round(host.steal_pct(tick0, host.cpu_ticks()), 1)
+        r["steal_pct"] = round(host.steal_pct(tick0, host.cpu_ticks()), 1)
+        return r
+
+    rows = run_keys(spark, sf_dir, sorted(only or QUERIES), row)
 
     # Per-leg breakdown of the 8-leg recall harness: sim_ann_recall is
     # the heaviest bench row, and one min-of-2 total can hide a real

@@ -311,8 +311,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads matching buckets side by side and needs ZERO shuffle
     exchanges; the result must hash-match the plain SQL join.
 
-    The query self-lints: broadcast is disabled (a broadcast join
-    would hide the bucketing) and it RAISES if the join plan contains
+    The query self-lints: a merge hint rules out broadcast (a broadcast
+    join would hide the bucketing) and it RAISES if the join plan contains
     any Exchange — the exact regression a layout change would cause.
 
     At deployment the bucketed tables are written ONCE and reused
@@ -359,26 +359,21 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 load_table(spark, sf_dir, name),
                 tbl, bucket_col, 8, bucket_col, path=path,
             )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        bo = spark.table(tables["orders"][0])
-        bl = spark.table(tables["lineitem"][0])
-        joined = bl.join(bo, bl.l_orderkey == bo.o_orderkey)
-        n_ex = count_exchanges(joined.select("l_orderkey", "o_orderstatus"))
-        if n_ex != 0:
-            raise RuntimeError(
-                f"join_bucketed: {n_ex} shuffle exchange(s) in a bucketed "
-                "join on the bucket key — co-location was not used"
-            )
-        agg = joined.groupBy("o_orderstatus").agg(
-            F.count("*").alias("n_items"), dsum("l_extendedprice", "sum_price")
+    # A sort-merge join hint, not a broadcast threshold: the caller's
+    # session conf stays as it is for any concurrent caller.
+    bo = spark.table(tables["orders"][0])
+    bl = spark.table(tables["lineitem"][0])
+    joined = bl.join(bo.hint("merge"), bl.l_orderkey == bo.o_orderkey)
+    n_ex = count_exchanges(joined.select("l_orderkey", "o_orderstatus"))
+    if n_ex != 0:
+        raise RuntimeError(
+            f"join_bucketed: {n_ex} shuffle exchange(s) in a bucketed "
+            "join on the bucket key — co-location was not used"
         )
-        rows = agg.collect()
-        schema = agg.schema
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    return spark.createDataFrame(rows, schema)
+    agg = joined.groupBy("o_orderstatus").agg(
+        F.count("*").alias("n_items"), dsum("l_extendedprice", "sum_price")
+    )
+    return spark.createDataFrame(agg.collect(), agg.schema)
 
 
 @query(

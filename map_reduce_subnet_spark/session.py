@@ -45,7 +45,7 @@ capture (``pyspark.errors.utils._with_origin``): it reads a conf and
 sets and clears the JVM's ``PySparkCurrentOrigin`` around the call, so
 one warm ``F.col("x")`` sends 13 gateway commands instead of 3, each a
 round trip to the JVM (~0.3 ms on a 4-core VM; a plan build sends
-hundreds, ``scripts/driver_calls.py`` counts them per key).
+hundreds, ``scripts/probe_keys.py`` counts them per key).
 ``spark.python.sql.dataFrameDebugging.enabled=false`` turns it off.
 What is lost is the Python caller's file and line in a runtime error's
 ``== DataFrame ==`` context, which then names the JVM's reflective
@@ -157,8 +157,11 @@ def get_spark(
         # it — e.g. under the driver's own pre-built session, which
         # sizes its own JVM).
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # Quieter Ivy/UI in the harness.
+        # Quieter Ivy/UI in the harness. The console progress bar ends
+        # its line in a carriage return, so whatever is printed next
+        # (bench.py's JSON lines) would share its line.
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         # --- Driver calls: see the module docstring ----------------------
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import uuid
 from collections.abc import Iterator
 from contextlib import contextmanager, suppress
@@ -178,6 +179,10 @@ _FS_CHECKPOINT_MANAGER = (
 )
 
 
+# Held over a stream's start-up window (see _drain).
+_START_LOCK = threading.Lock()
+
+
 def _checkpoint_manager(
     location: str | None, default_fs: str | None
 ) -> str | None:
@@ -267,44 +272,57 @@ def _drain(
 
     The query snapshots the session conf at ``start()``, so the scoped
     confs are set just before it and restored before the wait: the
-    session never reads the scoped values while the stream drains,
-    and a concurrent stream (FAIR scheduling) keeps its own settings.
+    session never reads the scoped values while the stream drains.
     The one exception to the snapshot is a source's offset log
     (``sources/<n>``), which the query's thread builds from the live
     session conf once ``start()`` has returned, so with the manager
-    scoped the restore waits for the query's initialization."""
-    key = "spark.sql.shuffle.partitions"
-    slots = spark.sparkContext.defaultParallelism
-    scoped = {key: str(min(int(spark.conf.get(key)), slots))}
-    if emit_on_arrival:
-        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None:
-        manager = _checkpoint_manager(
-            spark.conf.get("spark.sql.streaming.checkpointLocation", None),
-            spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS"),
-        )
-        if manager is not None:
-            scoped[_CHECKPOINT_MANAGER_KEY] = manager
+    scoped the restore waits for the query's initialization.
+
+    Drains from several threads share the caller's session, so that
+    start-up window (reading the scoped values, setting them, starting,
+    initializing, restoring) runs under one process-wide lock. Without
+    it a drain starting inside another's window takes that drain's
+    scoped values as its own: a tumbling drain then runs without its
+    closing no-data batch and emits nothing, a later drain reads the
+    other's scoped manager as the caller's and skips its own, and the
+    last restore leaves the caller's session on scoped values. Only
+    the start-up is serialized; the drains themselves overlap.
+    Building each stream on a clone of the session would need no lock,
+    but a clone's queries report to the clone's listeners, not the
+    caller's."""
     if drain == "process_all":
         writer, timeout = writer.trigger(processingTime="0 seconds"), 60
     else:
         writer, timeout = writer.trigger(availableNow=True), 300
-    prior = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
-        q = writer.start()
-        if _CHECKPOINT_MANAGER_KEY in scoped:
-            # Sources are built after start() returns (see above). A
-            # query that dies first raises where it is awaited below.
-            with suppress(StreamingQueryException):
-                q._jsq.streamingQuery().awaitInitialization(60_000)
-    finally:
-        for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    with _START_LOCK:
+        key = "spark.sql.shuffle.partitions"
+        slots = spark.sparkContext.defaultParallelism
+        scoped = {key: str(min(int(spark.conf.get(key)), slots))}
+        if emit_on_arrival:
+            scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+        if spark.conf.get(_CHECKPOINT_MANAGER_KEY, None) is None:
+            manager = _checkpoint_manager(
+                spark.conf.get("spark.sql.streaming.checkpointLocation", None),
+                spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS"),
+            )
+            if manager is not None:
+                scoped[_CHECKPOINT_MANAGER_KEY] = manager
+        prior = {k: spark.conf.get(k, None) for k in scoped}
+        for k, v in scoped.items():
+            spark.conf.set(k, v)
+        try:
+            q = writer.start()
+            if _CHECKPOINT_MANAGER_KEY in scoped:
+                # Sources are built after start() returns (see above). A
+                # query that dies first raises where it is awaited below.
+                with suppress(StreamingQueryException):
+                    q._jsq.streamingQuery().awaitInitialization(60_000)
+        finally:
+            for k, v in prior.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
     if drain == "process_all":
         q.processAllAvailable()
         q.stop()

@@ -21,18 +21,34 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from map_reduce_subnet_spark.operators import ORACLES, QUERIES  # noqa: E402
+import bench  # noqa: E402
+from map_reduce_subnet_spark.operators import ORACLES  # noqa: E402
 from perfbench.check import oracle_connection  # noqa: E402
-from tests.conftest import assert_frames_match  # noqa: E402
 from tests.test_differential import KEYS, write_corpus  # noqa: E402
 
 
-def attempt(run, limit):
-    """(result, None), or (None, the error's type and first ``limit`` chars)."""
+def error(ex: Exception, limit: int) -> str:
+    return f"{type(ex).__name__}: {str(ex)[:limit]}"
+
+
+def classify(run, key: str) -> tuple[str, tuple | str]:
+    """(outcome, the key's row in the table). The oracle runs alone
+    first: the answer check runs it after the query, so an error it
+    raises is the oracle's when the oracle alone raises the same."""
     try:
-        return run(), None
-    except Exception as e:
-        return None, f"{type(e).__name__}: {str(e)[:limit]}"
+        con.sql(ORACLES[key]).df()
+        duck = None
+    except Exception as ex:
+        duck = ex
+    try:
+        diff = run()
+    except Exception as ex:
+        if duck is None:
+            return "spark_err", (key, error(ex, 120))
+        if (type(ex), str(ex)) == (type(duck), str(duck)):
+            return "duck_err", (key, error(duck, 160))
+        return "both_err", (key, error(ex, 120)[:60], error(duck, 160)[:60])
+    return ("mismatch", (key, diff[:200])) if diff else ("match", key)
 
 
 dst = write_corpus("extreme", tempfile.mkdtemp(prefix="ovf_"))
@@ -42,21 +58,8 @@ spark = (SparkSession.builder.master("local[8]")
 spark.sparkContext.setLogLevel("ERROR")
 
 res = {"match": [], "mismatch": [], "spark_err": [], "duck_err": [], "both_err": []}
-for key in KEYS:
-    got, serr = attempt(lambda: QUERIES[key](spark, dst).toPandas(), 120)
-    want, derr = attempt(lambda: con.sql(ORACLES[key]).df(), 160)
-    if serr and derr:
-        res["both_err"].append((key, serr[:60], derr[:60]))
-    elif serr:
-        res["spark_err"].append((key, serr))
-    elif derr:
-        res["duck_err"].append((key, derr))
-    else:
-        try:
-            assert_frames_match(got, want, key)
-            res["match"].append(key)
-        except Exception as e:
-            res["mismatch"].append((key, str(e)[:200]))
+for outcome, row in bench.run_keys(spark, dst, KEYS, classify, con=con).values():
+    res[outcome].append(row)
 
 print("=== OVERFLOW PROBE RESULTS ===")
 print("match:", len(res["match"]))

@@ -46,11 +46,10 @@ import tarfile
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 RUN_TIMEOUT_S = 600
-# perfbench/host.py::calm: an execution under this CPU steal is calm,
-# and a median is taken over at least MIN_KEPT executions
-STEAL_CALM_PCT = 2.0
-MIN_KEPT = 3
+
+from perfbench.host import calm  # noqa: E402
 
 
 def export(rev: str | None, dest: str) -> None:
@@ -100,19 +99,14 @@ def run(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> 
 
 
 def op_medians(record: dict) -> dict[str, float]:
-    """Each operation's median latency over its calm untraced executions,
-    or over its ``MIN_KEPT`` calmest when fewer were calm."""
-    runs: dict[str, list[tuple[float, float]]] = {}
+    """Each operation's median latency over its untraced executions that
+    ``perfbench.host.calm`` keeps."""
+    runs: dict[str, list[dict]] = {}
     for ops, traced in zip(record["ops"], record["pass_traced"]):
         for key, s, steal in ([] if traced else ops):
             if s is not None:
-                runs.setdefault(key, []).append((steal, s))
-    out = {}
-    for key, execs in runs.items():
-        execs.sort()
-        n = max(sum(steal < STEAL_CALM_PCT for steal, _ in execs), MIN_KEPT)
-        out[key] = statistics.median(s for _, s in execs[:n])
-    return out
+                runs.setdefault(key, []).append({"s": s, "steal_pct": steal})
+    return {key: statistics.median(r["s"] for r in calm(execs)) for key, execs in runs.items()}
 
 
 def cold_means(record: dict) -> dict[str, float]:

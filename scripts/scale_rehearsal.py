@@ -1,4 +1,4 @@
-"""Scale rehearsal above sf0.1 (VERDICT r6 #4): build a 10x fixture
+"""Scale rehearsal above sf0.1: build a 10x fixture
 ("sf1") by unioning ten id-shifted copies of the sf0.1 tables, run
 the dedup family + ANN + PageRank + the flagship aggregate at BOTH
 scales on the same local[32] session, and print the scaling table
@@ -12,11 +12,12 @@ becomes a 10c-clique, so pair outputs scale ~x45 per cluster while
 the corpus scales x10. Linear-ish wall-clock at that output growth
 is the pass bar for the bucketed (never all-pairs) architecture.
 
-Each row is one bench.py ``time_row`` after bench.py's warm-up: the
-query is built and executed into the no-op sink (all columns
-materialized, nothing crosses to the driver). A watchdog cancels the
-row's job group after --timeout seconds and records None instead of
-hanging the rehearsal.
+Each row is one run of ``bench.run_keys`` after bench.py's warm-up:
+the query is built and executed into the no-op sink (all columns
+materialized, nothing crosses to the driver). The keys run at sf0.1
+first, then at 10x. The runner's watchdog cancels a row's job group
+after --timeout seconds; the row records None instead of hanging the
+rehearsal.
 
 Usage:
     python scripts/scale_rehearsal.py [--rebuild] [--queries q1,q2]
@@ -29,9 +30,9 @@ Writes nothing in the repo; the scaled fixture lives in
 from __future__ import annotations
 
 import argparse
+import os
 import shutil
 import sys
-import threading
 from pathlib import Path
 
 import duckdb
@@ -39,9 +40,14 @@ import duckdb
 SRC = "/root/testdata/sf0.1"
 DST = "/tmp/mrs_scale_sf1"
 COPIES = 10
-SHIFT_DOC = 1_000_000
-SHIFT_VEC = 1_000_000
-SHIFT_ORD = 1_000_000_000
+# each scaled table's id column and the shift between its copies
+SHIFTED = {
+    "documents": ("doc_id", 1_000_000),
+    "embeddings": ("vec_id", 1_000_000),
+    "orders": ("o_orderkey", 1_000_000_000),
+    "lineitem": ("l_orderkey", 1_000_000_000),
+    "events": ("event_id", 1_000_000_000),
+}
 
 QUERY_SET = [
     "agg_reduce_sum",
@@ -55,7 +61,7 @@ QUERY_SET = [
     "sim_ann_lsh_topk",
     "sim_ann_multiprobe_topk",
     "sim_ann_ivf_kmeans",
-    # r12: the two new operators. The 10x corpus is their stress
+    # The 10x corpus is the prefix-truncation dedup's stress
     # shape — every document reappears in all ten copies, so each
     # sf0.1 prefix-truncation chain of c docs becomes a 10c-clique
     # inside one prefix bucket (pair output ~x45 per chain while the
@@ -64,7 +70,7 @@ QUERY_SET = [
     # one zero-exchange pass).
     "dedup_prefix_truncation",
     "sim_ann_pq_adc",
-    # r13: the two new operators. CEP is sessionization-priced (one
+    # CEP is sessionization-priced (one
     # user_id shuffle + one Window with bounded 2-row lookahead) —
     # the 10x question is only sort volume per user; dynamic
     # partition overwrite is write-dominated — the 10x question is
@@ -72,7 +78,7 @@ QUERY_SET = [
     # delete set stays pruned to the touched partitions.
     "events_cep_pattern",
     "sink_dynamic_partition_overwrite",
-    # r13 batch 2: blocked fuzzy dedup's 10x question is the pair
+    # Blocked fuzzy dedup's 10x question is the pair
     # population on the duplicate-heavy corpus (each sf0.1 near-dup
     # chain becomes a 10c-clique inside one block — the
     # LSH_BUCKET_CAP bounds the worst block) with an O(len·budget)
@@ -82,8 +88,7 @@ QUERY_SET = [
     "stream_cep_true",
     "graph_pagerank",
     "funnel_conversion",
-    # r8 (VERDICT r7 #6): the streaming + warehouse families — the
-    # 10x questions here are state-store growth (the stream-stream
+    # The streaming + warehouse families — the 10x questions here are state-store growth (the stream-stream
     # join keeps BOTH sides' rows in state within the time bound;
     # the stateful EMA keeps one row per user) and the versioned
     # table's commit path (merge input stays one row per key per
@@ -97,8 +102,7 @@ QUERY_SET = [
     "table_changefeed",
     "merge_scd2_history",
     "merge_upsert",
-    # r8 second session: the learned-artifact + composition family.
-    # 10x questions: BPE's per-round pair shuffle grows with the
+    # The learned-artifact + composition family. 10x questions: BPE's per-round pair shuffle grows with the
     # DISTINCT-WORD vocab (sub-linear in corpus — the learner trick's
     # whole point); the curation funnel composes three gates and the
     # corpus-wide drop list (drop set grows ~x45 on the duplicate-
@@ -113,7 +117,6 @@ QUERY_SET = [
     # graph_kcore peels the pair graph whose edge count grows ~x45
     # on the duplicate-heavy fixture; per-round cost is O(edges).
     "graph_kcore",
-    # r9 (VERDICT r8 #6): the remaining r8 families + the r9 keys.
     # 10x questions: the substring-span table is the biggest
     # intermediate in the repo — (doc_id,pos,h) rows grow x10 and the
     # duplicated-span population ~x45-ish on the id-shifted fixture
@@ -132,7 +135,7 @@ QUERY_SET = [
     "split_leakage_safe",
     "stream_mv_refresh_true",
     "text_quality_classifier",
-    # r9 late batch. 10x questions: sequence packing's two-phase
+    # 10x questions: sequence packing's two-phase
     # prefix sum must keep the driver sync at its fixed bucket count
     # while the token stream grows x10; contrastive mining's cluster
     # positives ride the ~x45 pair growth and the hash-rank negative
@@ -153,8 +156,7 @@ QUERY_SET = [
     "table_constraint_audit",
     "agg_trend_ols",
     "privacy_dp_count_laplace",
-    # r15: the two new operators + the nprobe-changed ANN pair. OOO
-    # CEP's 10x question is the REORDER-BUFFER population (event rate
+    # OOO CEP's 10x question is the REORDER-BUFFER population (event rate
     # x the 1 h reorder window per user) on top of the gapped state,
     # across the same 4-file replay; MJPEG's is x10 demux+decode
     # payloads scan-locally (frames never cross a shuffle);
@@ -164,7 +166,7 @@ QUERY_SET = [
     "stream_cep_gapped_ooo",
     "multimodal_decode_mjpeg",
     "sim_ann_ivfpq",
-    # r15 late: the contiguous OOO twin — same replay and flush
+    # The contiguous OOO twin — same replay and flush
     # machinery as the gapped one with O(1) machine state; the 10x
     # question is only the reorder-buffer population.
     "stream_cep_ooo",
@@ -186,71 +188,27 @@ COPY_TABLES = [
 N_FILES = 32
 
 
-def _copy_sharded(con, select_sql: str, dest: str, shard_col: str) -> None:
-    Path(dest).mkdir()
-    for s in range(N_FILES):
-        con.sql(
-            f"COPY (SELECT * FROM ({select_sql}) WHERE"
-            f" {shard_col} % {N_FILES} = {s})"
-            f" TO '{dest}/part-{s:05d}.parquet' (FORMAT PARQUET)"
-        )
-
-
 def build_fixture() -> None:
     dst = Path(DST)
     if dst.exists():
         shutil.rmtree(dst)
     dst.mkdir(parents=True)
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW src AS SELECT * FROM '{SRC}/documents.parquet'")
-    unions = " UNION ALL ".join(
-        f"SELECT doc_id + {k * SHIFT_DOC} AS doc_id, text, lang, source,"
-        f" n_chars FROM src"
-        for k in range(COPIES)
-    )
-    _copy_sharded(con, unions, f"{DST}/documents.parquet", "doc_id")
-    con.sql("DROP VIEW src")
-    con.sql(f"CREATE VIEW src AS SELECT * FROM '{SRC}/embeddings.parquet'")
-    unions = " UNION ALL ".join(
-        f"SELECT vec_id + {k * SHIFT_VEC} AS vec_id, embedding, label"
-        f" FROM src"
-        for k in range(COPIES)
-    )
-    _copy_sharded(con, unions, f"{DST}/embeddings.parquet", "vec_id")
-    con.sql("DROP VIEW src")
-    con.sql(f"CREATE VIEW src AS SELECT * FROM '{SRC}/orders.parquet'")
-    unions = " UNION ALL ".join(
-        f"SELECT o_orderkey + {k * SHIFT_ORD} AS o_orderkey, o_custkey,"
-        f" o_orderstatus, o_totalprice, o_orderdate, o_orderpriority"
-        f" FROM src"
-        for k in range(COPIES)
-    )
-    _copy_sharded(con, unions, f"{DST}/orders.parquet", "o_orderkey")
-    con.sql("DROP VIEW src")
-    con.sql(f"CREATE VIEW src AS SELECT * FROM '{SRC}/lineitem.parquet'")
-    cols = (
-        "l_partkey, l_suppkey, l_linenumber, l_quantity, l_extendedprice,"
-        " l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate"
-    )
-    unions = " UNION ALL ".join(
-        f"SELECT l_orderkey + {k * SHIFT_ORD} AS l_orderkey, {cols} FROM src"
-        for k in range(COPIES)
-    )
-    _copy_sharded(con, unions, f"{DST}/lineitem.parquet", "l_orderkey")
-    con.sql("DROP VIEW src")
-    con.sql(f"CREATE VIEW src AS SELECT * FROM '{SRC}/events.parquet'")
-    unions = " UNION ALL ".join(
-        f"SELECT event_id + {k * SHIFT_ORD} AS event_id, ts, user_id,"
-        f" event_type, value, props FROM src"
-        for k in range(COPIES)
-    )
-    _copy_sharded(con, unions, f"{DST}/events.parquet", "event_id")
+    for table, (col, shift) in SHIFTED.items():
+        unions = " UNION ALL ".join(
+            f"SELECT * REPLACE ({col} + {k * shift} AS {col})"
+            f" FROM '{SRC}/{table}.parquet'"
+            for k in range(COPIES)
+        )
+        Path(f"{DST}/{table}.parquet").mkdir()
+        for n in range(N_FILES):
+            con.sql(
+                f"COPY (SELECT * FROM ({unions}) WHERE {col} % {N_FILES} = {n})"
+                f" TO '{DST}/{table}.parquet/part-{n:05d}.parquet' (FORMAT PARQUET)"
+            )
     for t in COPY_TABLES:
         shutil.copy(f"{SRC}/{t}.parquet", f"{DST}/{t}.parquet")
-    print(
-        f"built {DST} (documents/embeddings/orders/lineitem x{COPIES})",
-        flush=True,
-    )
+    print(f"built {DST} ({'/'.join(SHIFTED)} x{COPIES})", flush=True)
 
 
 def main() -> None:
@@ -268,13 +226,10 @@ def main() -> None:
     # GCLocker allocation failures at 1g (the local-mode analog of
     # executor memory sizing on a real cluster). Must be set before
     # the JVM launches.
-    import os
-
     os.environ.setdefault(
         "PYSPARK_SUBMIT_ARGS", "--driver-memory 48g pyspark-shell"
     )
     import bench
-    from map_reduce_subnet_spark.operators import QUERIES
     from map_reduce_subnet_spark.session import get_spark
 
     # bench.py's session, so absolute numbers are comparable to
@@ -284,32 +239,23 @@ def main() -> None:
     spark = get_spark(app_name="mrs-scale-rehearsal")
     bench.warm_up(spark, SRC)
     bench.warm_up(spark, DST, ("agg_reduce_sum",))
-    results = {}
-    for name in [q for q in args.queries.split(",") if q]:
-        row = {}
-        for label, sf_dir in (("sf0.1", SRC), ("sf1", DST)):
-            group = f"{name}@{label}"
-            watchdog = threading.Timer(
-                args.timeout, spark.sparkContext.cancelJobGroup, (group,)
-            )
-            watchdog.start()
-            try:
-                row[label] = round(sum(bench.time_row(
-                    spark, lambda: QUERIES[name](spark, sf_dir), group
-                )), 2)
-            except Exception as e:
-                print(f"  {group} failed/cancelled: {str(e)[:200]}", flush=True)
-                row[label] = None
-            finally:
-                watchdog.cancel()
-            print(f"{name} @ {label}: {row[label]}s", flush=True)
-        results[name] = row
+
+    def row(run, group: str) -> float | None:
+        sample = bench.once_or_none(run, group)
+        s = None if sample is None else round(sum(sample), 2)
+        print(f"{group}: {s}s", flush=True)
+        return s
+
+    names = [q for q in args.queries.split(",") if q]
+    a, b = (
+        bench.run_keys(spark, sf_dir, names, row, group="{key}@" + label, timeout=args.timeout)
+        for label, sf_dir in (("sf0.1", SRC), ("sf1", DST))
+    )
     print("\n| query | sf0.1 s | sf1 s | ratio |", flush=True)
     print("|---|---|---|---|", flush=True)
-    for name, row in results.items():
-        a, b = row["sf0.1"], row["sf1"]
-        ratio = f"{b / a:.1f}x" if a and b else "n/a"
-        print(f"| {name} | {a} | {b} | {ratio} |", flush=True)
+    for name in names:
+        ratio = f"{b[name] / a[name]:.1f}x" if a[name] and b[name] else "n/a"
+        print(f"| {name} | {a[name]} | {b[name]} | {ratio} |", flush=True)
 
 
 if __name__ == "__main__":

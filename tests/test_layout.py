@@ -121,6 +121,41 @@ def test_layout_queries_match_oracle(spark, ddb, name):
     assert_frames_match(got, want, name)
 
 
+def test_join_bucketed_leaves_the_callers_session_alone(spark, monkeypatch):
+    """join_bucketed rules out broadcast with a join hint: it never sets
+    the caller's broadcast threshold, which a concurrent caller may be
+    planning with, and adds no listener to the LiveListenerBus. (A
+    session clone with broadcast off would add one per call once the
+    caller has an execution listener, as an ``Observation`` leaves.)"""
+    from pyspark.sql import Observation
+    from pyspark.sql.conf import RuntimeConfig
+
+    obs = Observation()
+    spark.range(3).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+    assert obs.get == {"n": 3}
+    QUERIES["join_bucketed"](spark, SF_DIR).count()  # builds the tables
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    listeners = bus.listeners().size()
+
+    caller_conf = spark._jsparkSession.conf()
+    set_conf = RuntimeConfig.set
+    on_caller = []
+
+    def spy(self, key, value):
+        # load_table's constant timeZone set is the loader's, not the join's
+        if self._jconf.equals(caller_conf) and "Broadcast" in key:
+            on_caller.append(key)
+        return set_conf(self, key, value)
+
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    for _ in range(3):
+        assert QUERIES["join_bucketed"](spark, SF_DIR).count() > 0
+    assert on_caller == []
+    assert spark.conf.get("spark.sql.autoBroadcastJoinThreshold") == threshold
+    assert bus.listeners().size() == listeners
+
+
 def test_versioned_table_commit_log_discipline(spark, tmp_path):
     """The versioned table's core contracts: (a) snapshot isolation —
     a frame read at version N still serves N's rows after later

@@ -12,7 +12,7 @@ synthetic archives. The socket-path guard is pinned as a pure
 function, and end to end on sessions whose temp dir sits at either
 side of it. The gateway commands a Column call sends, and the error
 context that costs, are pinned in a fresh interpreter, as is the shape
-of ``scripts/driver_calls.py``'s report.
+of ``scripts/probe_keys.py``'s report.
 """
 
 from __future__ import annotations
@@ -399,11 +399,19 @@ def test_column_calls_skip_the_call_site_capture(tmp_path):
     assert str(script) not in out["message"], out["message"][:2000]
 
 
+def test_console_progress_bar_is_off(spark):
+    """The session starts without Spark's console progress bar: the bar
+    ends its line in a carriage return, so the next line printed to
+    stdout (bench.py's JSON lines) would share its line."""
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+    assert spark.sparkContext._jsc.sc().progressBar().isEmpty()
+
+
 def test_driver_calls_counts_each_half_by_kind(tmp_path):
-    """``scripts/driver_calls.py`` prints, per key, the gateway commands
+    """``scripts/probe_keys.py`` prints, per key, the gateway commands
     of its second run's build and execute halves, counted by Py4J
-    command kind."""
-    script = os.path.join(ROOT, "scripts", "driver_calls.py")
+    command kind, and the forked commands of the same halves."""
+    script = os.path.join(ROOT, "scripts", "probe_keys.py")
     data = os.path.join(ROOT, "perfbench", "data")
     proc = subprocess.run(
         [sys.executable, script, "--sf-dir", data, "agg_reduce_sum"],
@@ -412,7 +420,8 @@ def test_driver_calls_counts_each_half_by_kind(tmp_path):
     assert proc.returncode == 0, proc.stderr[-3000:]
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     assert list(out) == ["agg_reduce_sum"]
-    halves = out["agg_reduce_sum"]
+    assert list(out["agg_reduce_sum"]["forks"]) == ["build", "execute"]
+    halves = out["agg_reduce_sum"]["calls"]
     assert list(halves) == ["build", "execute"]
     for counts in halves.values():
         assert counts["c"] > 0

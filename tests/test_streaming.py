@@ -12,6 +12,7 @@ import os
 import subprocess
 import sys
 import textwrap
+import threading
 
 import pandas as pd
 import pytest
@@ -879,6 +880,121 @@ def test_stream_state_partitions_capped_at_task_slots(
     assert counts == [min(8, slots), min(2, slots)], (counts, slots)
 
 
+def _collect_in(thread_out: dict, name: str, run) -> threading.Thread:
+    """A started thread that stores ``run()``'s result, or what it
+    raised, in ``thread_out[name]``."""
+
+    def target():
+        try:
+            thread_out[name] = run()
+        except BaseException as ex:  # reported by the test's assert
+            thread_out[name] = ex
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    return t
+
+
+def test_overlapping_drain_starts_with_the_callers_conf(
+    spark, tmp_path, monkeypatch
+):
+    """A drain that starts while another drain is inside its start-up
+    window still starts with the caller's own confs, not the first
+    drain's scoped ones. The first, emit-on-arrival, drain is held
+    inside ``DataStreamWriter.start`` (bounded waits) while a second
+    drain starts: the second ``start()`` must see the caller's
+    ``noDataMicroBatches`` (a tumbling drain without its no-data batch
+    emits nothing) and its own ``min(session value, slots)`` state
+    partitions, and it answers as it does alone."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from map_reduce_subnet_spark.streaming.jobs import _run_to_memory
+
+    no_data, parts = _SCOPED_CONFS[:2]
+    caller = {k: spark.conf.get(k, None) for k in (no_data, parts)}
+    slots = spark.sparkContext.defaultParallelism
+
+    def windows(name):
+        ev = _file_stream(spark, tmp_path / name, [_events(
+            [(i, 1_700_000_000_000_000 + i * 60_000_000, 1, "view")
+             for i in range(10)]
+        )])
+        counts = ev.withWatermark("ts", "1 minute").groupBy(
+            F.window("ts", "5 minutes")
+        ).count()
+        return sorted(_run_to_memory(counts, spark).collect())
+
+    alone = windows("alone")
+    assert alone, "the windowed drain emits nothing even alone"
+
+    start = DataStreamWriter.start
+    held, second_in, release = (threading.Event() for _ in range(3))
+    seen = []
+
+    def paused(self, *args, **kwargs):
+        seen.append({k: spark.conf.get(k, None) for k in (no_data, parts)})
+        if len(seen) == 1:
+            held.set()
+            release.wait(30)
+        else:
+            second_in.set()
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", paused)
+    out = {}
+    threads = [_collect_in(out, "first", lambda: _run_to_memory(
+        _dedup_stream(spark, tmp_path / "dedup").select("event_id"),
+        spark, emit_on_arrival=True,
+    ).collect())]
+    assert held.wait(60), "the first drain never reached start()"
+    threads.append(_collect_in(out, "second", lambda: windows("overlap")))
+    # unserialized, the second drain reaches start() within this wait;
+    # serialized, it waits for the first drain's start-up to finish
+    second_in.wait(5)
+    release.set()
+    for t in threads:
+        t.join(180)
+    for name in ("first", "second"):
+        assert not isinstance(out.get(name), BaseException), out.get(name)
+
+    assert seen[1] == {
+        no_data: caller[no_data], parts: str(min(int(caller[parts]), slots))
+    }, (seen, caller)
+    assert out["second"] == alone
+    assert sorted(r.event_id for r in out["first"]) == [0, 1, 2, 3, 4]
+    assert {k: spark.conf.get(k, None) for k in caller} == caller
+
+
+def test_concurrent_drains_answer_as_sequential_ones(spark):
+    """Four threads on one session each drain ``stream_dedup_true`` and
+    ``stream_tumbling_true`` twice. Every answer equals the sequential
+    one, and afterwards the caller's session still reads its own
+    shuffle partitions, no-data batch setting, broadcast threshold and
+    checkpoint manager."""
+    keys = ("stream_dedup_true", "stream_tumbling_true")
+    confs = (*_SCOPED_CONFS, "spark.sql.autoBroadcastJoinThreshold")
+    caller = {k: spark.conf.get(k, None) for k in confs}
+
+    def answer(key):
+        return _sorted(QUERIES[key](spark, SF_DIR).toPandas())
+
+    want = {key: answer(key) for key in keys}
+    out = {}
+    threads = [
+        _collect_in(out, i, lambda: [answer(k) for k in keys for _ in (0, 1)])
+        for i in range(4)
+    ]
+    for t in threads:
+        t.join(600)
+    for i in range(4):
+        got = out.get(i)
+        assert not isinstance(got, BaseException), got
+        assert got is not None, f"thread {i} did not finish"
+        for n, key in enumerate(k for k in keys for _ in (0, 1)):
+            pd.testing.assert_frame_equal(got[n], want[key], obj=f"{key} {i}")
+    assert {k: spark.conf.get(k, None) for k in confs} == caller
+
+
 @pytest.mark.parametrize("drain", ["available_now", "process_all"])
 def test_run_to_memory_starts_no_job_after_termination(
     spark, tmp_path, monkeypatch, drain
@@ -1030,7 +1146,7 @@ def test_local_checkpoints_fork_no_readlink_and_keep_their_files(tmp_path):
     The ``_drain`` drain's checkpoint holds the same files, Hadoop's
     ``.crc`` and Spark's ``N.delta.crc`` state checksums included, as
     a plain ``writer.start()`` under Spark's default manager."""
-    from scripts.shell_forks import write_wrappers
+    from scripts.probe_keys import write_wrappers
 
     bin_dir = tmp_path / "bin"
     bin_dir.mkdir()
